@@ -13,31 +13,19 @@ import org.apache.spark.sql.SparkSession
   * spread the distribution is contention-contaminated, and the minimum is
   * the uncontended cost (round 5 shipped d2 at a 4.38 s median when an
   * isolated re-run measured 1.73 s); the max/min spread per query is still
-  * recorded so the contamination stays visible. The shared materialized
-  * intermediates (Similarity.s2Pairs) are cleared before every timed run
-  * so each measurement is a cold, self-contained cost.
+  * recorded so the contamination stays visible. The staging registry
+  * (`QUtil.stage`) is cleared before every timed run so each measurement
+  * is a cold, self-contained cost.
   *
   * Artifact shape: the FULL per-query JSON goes to
-  * `target/bench_<sf>.json` (and `bench/` on full runs); stdout gets ONE
-  * compact spec-shaped line (headline total + the most expensive queries,
-  * capped under 0.9 KB) — the driver machine-parses a bounded log tail,
-  * which the 196-query full line overflows (rounds 5-10 all carried
-  * `parsed: null`; round 10's tail shows the window cut the summary line
-  * short because the full line printed just before it ate the budget).
+  * `target/bench_<sf>.json` (and `bench/` on full runs); the last stdout
+  * line is ONE compact line (headline total + the most expensive queries,
+  * capped at 1800 bytes) for readers that parse a bounded log tail.
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     s(s.length / 2)
-  }
-
-  private def clearAllShared(): Unit = {
-    queries.Similarity.clearShared()
-    queries.Dedup.clearShared()
-    queries.Graph.clearShared()
-    queries.TextAnalysis.clearShared()
-    queries.Multimodal.clearShared()
-    queries.Pipeline.clearShared()
   }
 
   /** Recycle the JVM's accumulated execution state BETWEEN the streaming
@@ -53,7 +41,7 @@ object Bench {
     * a full GC so the first batch query is not collecting the x-block's
     * tenured garbage inside its timing. */
   private def recycleExecutorState(spark: SparkSession): Unit = {
-    clearAllShared()
+    queries.QUtil.clearStaged()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     spark.sharedState.cacheManager.clearCache()
     try org.apache.spark.sql.execution.streaming.state.StateStore.stop()
@@ -221,8 +209,8 @@ object Bench {
       finally walk.close()
       v
     }
-    // SPARK_GRAFT_KEEP_SHARED=1 keeps the per-session staging tables
-    // (s2Pairs, d3Pairs, bandSigs) warm BETWEEN timed runs — the
+    // SPARK_GRAFT_KEEP_SHARED=1 keeps the staged intermediates
+    // (s2Pairs, d3Pairs, bandSigs, …) warm BETWEEN timed runs — the
     // warm-staging study knob (e.g. d13's per-increment marginal cost with
     // the settled band index already materialized); default is cold-cost
     // isolation
@@ -230,18 +218,14 @@ object Bench {
     def timedRun(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Option[Double] = {
       if (!keepShared) {
-        clearAllShared()
-        // clearing the caches drops the REFERENCES, but every
+        queries.QUtil.clearStaged()
+        // clearing the registry drops the REFERENCES, but every
         // localCheckpoint's RDD blocks stay in the block manager until GC —
         // across 178 queries × 3 runs the accumulated blocks inflate later
         // queries' timings (heap pressure + block-manager bookkeeping).
-        // Cold isolation includes STORAGE: drop the blocks too.
-        // INVARIANT: this unpersist drops the blocks of localCheckpoint'ed
-        // DataFrames whose lineage is TRUNCATED — recompute is impossible,
-        // so every module that caches a checkpointed frame per session
-        // MUST be listed in the clearShared() calls above. A new per-
-        // session cache that skips the list would fail later with
-        // "checkpoint block not found" instead of recomputing.
+        // Cold isolation includes STORAGE: drop the blocks too (after the
+        // clear: a staged frame's lineage is truncated, so it cannot
+        // recompute lost blocks).
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
       val t0 = System.nanoTime()
@@ -249,7 +233,7 @@ object Bench {
       // swallowed exception otherwise records a near-zero timing that
       // reads as "blazing fast" (how the sf1 symlink bug almost slipped)
       try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
     }
@@ -331,21 +315,9 @@ object Bench {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.writeString(out, json + "\n")
     }
-    // stdout: the driver machine-parses a bounded log tail — MEASURED at
-    // exactly 2000 bytes (BENCH_r15.json's `tail` field is 2000 chars, cut
-    // mid-line at its head). Round 15's intact, spec-shaped `[info] {...}`
-    // line STILL parsed null, so the remaining suspect is sbt's `[info] `
-    // prefix itself (a line-oriented JSON parse fails on it; 15 rounds of
-    // evidence and no prefix-free line has ever been emitted). Fix (r16):
-    // the final stdout line is written RAW to file descriptor 1 —
-    // bypassing sbt's logger, so the line starts with `{` — and the
-    // per-query budget is sized so that line + the trailing sbt
-    // `[success] Total time: ...` line (~80 B) fit inside the 2000-byte
-    // tail: budget 1800 ≈ the ~60 most expensive queries, everything at
-    // sf0.1 above the sub-second noise floor. The FULL map goes to the
-    // artifact files above and (for humans/greps) into the sbt log below,
-    // safely BEFORE the final line so a tail anchored inside it still
-    // ends with the parseable summary.
+    // stdout's last line: the headline plus the most expensive queries
+    // that fit in 1800 bytes, so a reader of a 2000-byte log tail gets
+    // the line and sbt's trailing `[success]` line whole
     val byCost = results.toSeq.sortBy(-_._2)
     val budget = 1800
     // point at the DURABLE copy when one was written (bench/ is committed;
@@ -370,17 +342,13 @@ object Bench {
         s"$dirName/bench_$sfName${suffix}_summary.json")
       java.nio.file.Files.writeString(out, compact + "\n")
     }
-    // the full per-query map into the sbt log (prefixed, earlier than the
-    // tail window — for humans and post-hoc greps; files are the durable copy)
+    // the full per-query map into the log (earlier than the tail window —
+    // for humans and post-hoc greps; files are the durable copy)
     println(json)
     // stop BEFORE the final line: Spark/streaming shutdown logging (the
     // WARN lines that followed the summary in BENCH_r11's tail) precedes
     // it, so the summary is the genuinely last line before sbt's [success]
     spark.stop()
-    // RAW, UNPREFIXED final line — see the tail-budget comment above. The
-    // fd-1 stream is NOT closed (closing would close the process's stdout).
-    val stdoutRaw = new java.io.FileOutputStream(java.io.FileDescriptor.out)
-    stdoutRaw.write((compact + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    stdoutRaw.flush()
+    println(compact)
   }
 }

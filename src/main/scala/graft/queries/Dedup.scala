@@ -158,28 +158,18 @@ object Dedup {
     * shared by `d3_minhash_lsh` and the `d8_dup_clusters` clustering step —
     * the same staging-table discipline as `Similarity.s2Pairs` (the
     * signature computation is the expensive step; consumers must not re-run
-    * it). `Bench.clearShared` drops the cache before each timed run. */
+    * it). */
   def d3Pairs(s: SparkSession, dir: String): DataFrame =
-    QUtil.cachedPerSession(d3Cache, s, dir)(
-      d3PairsUncached(s, dir).localCheckpoint())
-
-  private val d3Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), () => DataFrame]()
-  private val bandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), () => DataFrame]()
-
-  /** Drop all shared materialized intermediates (bench isolation). */
-  def clearShared(): Unit = { d3Cache.clear(); bandsCache.clear(); d8Cache.clear() }
+    stage(s, ("d3Pairs", dir))(d3PairsUncached(s, dir).localCheckpoint())
 
   /** (doc_id, band, mh0, mh1) MinHash band signatures for every document —
     * the LSH index relation d3 self-joins and d13 keys its settled staging
     * table by. Cached per (session, sf-dir) like [[d3Pairs]]/`s2Pairs`:
     * this IS the staging table a production ingest keeps warm between
     * increments (d13's scaladoc), so consumers must not re-run the
-    * signature computation within a session; `Bench.clearShared` drops it
-    * before each timed run so benchmark numbers stay cold-cost. */
+    * signature computation within a session. */
   private def bandSigs(s: SparkSession, dir: String): DataFrame =
-    QUtil.cachedPerSession(bandsCache, s, dir)(bandSigsUncached(s, dir))
+    stage(s, ("bandSigs", dir))(bandSigsUncached(s, dir))
 
   private def bandSigsUncached(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir)
@@ -469,15 +459,11 @@ object Dedup {
     * iterative chain of join+aggregate+checkpoint rounds, and the cleaning
     * funnel consumes the SAME cluster table through two independent legs —
     * c1's dedup survivors (via c3→c13) and c11's cluster-anchored split —
-    * so every c13-and-above query ran the whole loop twice per timed run.
-    * This is the cluster staging table a production pipeline keeps warm;
-    * `Bench.clearShared` (via [[clearShared]]) drops it so timed runs stay
-    * cold-cost — cold now means ONE loop, not one per consumer. */
-  private val d8Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), () => DataFrame]()
-
+    * so unstaged, every c13-and-above query would run the loop twice.
+    * This is the cluster staging table a production pipeline keeps warm:
+    * ONE loop per session, not one per consumer. */
   private def d8Labels(s: SparkSession, dir: String): DataFrame =
-    QUtil.cachedPerSession(d8Cache, s, dir)(
+    stage(s, ("d8Labels", dir))(
       minLabelComponents(d3Pairs(s, dir).filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"))))
 

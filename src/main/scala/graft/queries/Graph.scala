@@ -332,10 +332,9 @@ object Graph {
   /** Distinct undirected co-engagement edges (u < v): users sharing a
     * thread block. MATERIALIZED once per (session, sf-dir) — the same
     * staging-table discipline as `Dedup.d3Pairs` — and shared by g2
-    * (degree count + three edge joins) and g3 (per-level frontier joins).
-    * `Bench.clearShared` drops the cache before each timed run. */
+    * (degree count + three edge joins) and g3 (per-level frontier joins). */
   private def coengagementPairs(s: SparkSession, dir: String): DataFrame =
-    QUtil.cachedPerSession(pairCache, s, dir) {
+    QUtil.stage(s, ("coengagement", dir)) {
       val bu = Tables.events(s, dir)
         .select((col("event_id") - (col("event_id") % 7)).as("block"), col("user_id"))
         .distinct()
@@ -345,12 +344,6 @@ object Graph {
         .distinct()
         .localCheckpoint()
     }
-
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), () => DataFrame]()
-
-  /** Drop the shared materialized edge table (bench isolation). */
-  def clearShared(): Unit = pairCache.clear()
 
   /** G2 triangle counting over the co-engagement graph — users are adjacent
     * when they both touch the same thread (block of 7, the st1 relation);

@@ -106,31 +106,14 @@ object LdbcE2E {
     resolveAndCount(unified)
   }
 
-  /** The materialized tagged-wire slice, cached by a CONTENT fingerprint of
-    * the source parquet (size + mtime of every part), not just the
-    * sanitized dir string — a regenerated sf dir (e.g. target/sf1 rebuilt
-    * in place) must invalidate the lines, or consumers would read stale
-    * lines while the DuckDB oracle reads fresh parquet. Shared by
-    * ldbc_dsv2 and ldbc_roundtrip (both resolve the SAME fingerprint — a
-    * newest-dir heuristic could pick a stale cache after A→B→A
-    * regeneration). */
+  /** The materialized tagged-wire slice, built once per events
+    * fingerprint (`Streams.eventsDerivedDir`): a regenerated sf dir must
+    * not serve stale lines while the DuckDB oracle reads fresh parquet.
+    * Shared by ldbc_dsv2 and ldbc_roundtrip. */
   private def cachedWireLines(s: SparkSession, dir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     import scala.util.Using
-    val src = Paths.get(graft.Tables.path(dir, "events"))
-    val fp = {
-      val parts =
-        if (Files.isDirectory(src))
-          Using.resource(Files.list(src)) { st =>
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.toList.sortBy(_.getFileName.toString)
-          }
-        else List(src)
-      parts.map(p => s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
-        .mkString("|").hashCode.toHexString
-    }
-    val linesDir = Paths.get("/tmp/graft_stream",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), s"ldbc_lines_$fp")
+    val linesDir = graft.streaming.Streams.eventsDerivedDir(dir, "ldbc_lines")
     val marker = linesDir.resolve("lines.txt")
     if (!Files.exists(marker)) {
       Files.createDirectories(linesDir)

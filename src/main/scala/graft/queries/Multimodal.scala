@@ -515,18 +515,10 @@ object Multimodal {
     * the settled 4×16 phash band table (m6's signed-random-projection
     * index) — exactly the two warm artifacts a production media ingest
     * keeps between crawl increments (d13's settled-band-table discipline
-    * applied to the media family). Bench clears it per timed run; the
-    * warm serving shape is the KEEP_SHARED study in STRESS_sf1.md. */
-  private val m9Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), () => (DataFrame, DataFrame)]()
-
-  /** `Bench.clearShared` contract: the staged frames are localCheckpoint'ed
-    * (lineage truncated), so the cache MUST be dropped before Bench's
-    * cold-isolation unpersist or later m9 runs would hit missing blocks. */
-  def clearShared(): Unit = m9Cache.clear()
+    * applied to the media family). */
   private[graft] def m9SettledIndex(s: SparkSession,
                                     dir: String): (DataFrame, DataFrame) =
-    graft.queries.QUtil.cachedPerSession(m9Cache, s, dir) {
+    QUtil.stage(s, ("m9Settled", dir)) {
       val settled = assets(s, dir).filter(col("doc_id") % 10 =!= 0)
       (settled.select(col("doc_id"), md5(col("payload")).as("h"))
          .localCheckpoint(),

@@ -679,17 +679,12 @@ object Pipeline {
     * τ: ONE model shared by the batch gate ([[c14_quality_classifier]]/
     * [[c14_gate_compare]]) and x40's online scorer, the frozen-artifact
     * rule every online twin follows (x27's LM, x34's codebooks, x38's
-    * centroids — train offline, serve at the door). `Bench.clearShared`
-    * drops it so timed runs pay the honest training cost. Returns
+    * centroids — train offline, serve at the door). Returns
     * (labels(doc_id, n, y), score(doc_id, score, si), w(bucket, w),
     * bias(bias), tau(tau)). */
-  private val c14Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    () => (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]()
-
   private[graft] def c14Model(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    QUtil.cachedPerSession(c14Cache, s, dir) { c14ModelUncached(s, dir) }
+    QUtil.stage(s, ("c14Model", dir)) { c14ModelUncached(s, dir) }
 
   /** C14's featurization, factored so the batch trainer and x40's online
     * gate run the IDENTICAL op sequence (the t2/t3 `qualityExpr`/
@@ -1010,20 +1005,12 @@ object Pipeline {
     * from the SHARED staged pair relation filtered to settled×settled
     * pairs — valid because MinHash banding is per-document, so the
     * settled subset's banded candidates are exactly the full pair table's
-    * both-ends-settled rows. `Bench.clearShared` drops the cache so timed
-    * runs pay the honest cold cost. */
-  private val c15Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), () => (DataFrame, DataFrame)]()
-
-  /** Drop the staged settled index, the c14 model, and the settled
-    * terminal artifacts (bench isolation). */
-  def clearShared(): Unit = { c15Cache.clear(); c14Cache.clear(); c19Cache.clear() }
-
+    * both-ends-settled rows. */
   private[graft] def c15SettledIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    QUtil.cachedPerSession(c15Cache, s, dir) {
+    QUtil.stage(s, ("c15Settled", dir)) {
       // the settled-cluster fixpoint (d3 pairs + min-label rounds) and the
       // frozen-eval contaminated-id staging are independent eager chains —
-      // overlap them (r16, guide §2.6); m0 below consumes both
+      // overlap them; m0 below consumes both
       val (sClusters, _) = QUtil.par2(s)(
         {
           val sPairs = Dedup.d3Pairs(s, dir)
@@ -1269,8 +1256,8 @@ object Pipeline {
   def c16_gated_manifest(s: SparkSession, dir: String): DataFrame = {
     // the c13 chain's eager staging (d8 clusters, t14 contaminated ids,
     // d3 pairs) and the c14 trainer's GD barrier sequence are INDEPENDENT
-    // — build both halves concurrently (optimization r16, guide §2.6 via
-    // QUtil.par2) so one chain's scheduling gaps run the other's jobs.
+    // — build both halves concurrently (QUtil.par2) so one chain's
+    // scheduling gaps run the other's jobs.
     // Join + output identical to the sequential spelling.
     val (m, g) = QUtil.par2(s)(
       c13_release_manifest(s, dir),
@@ -1591,16 +1578,12 @@ object Pipeline {
     * (frozen c14 model — an increment does NOT retrain the gate; model
     * refresh is a separate release event, the x39–x41 frozen-artifact
     * convention), its score-grid histogram, its nine decile-boundary
-    * positions, and its shard manifest. `Bench.clearShared` drops the
-    * cache so timed runs pay the honest cold cost. */
-  private val c19Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), () => (DataFrame, DataFrame, DataFrame, DataFrame)]()
-
+    * positions, and its shard manifest. */
   private[graft] def c19Settled(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    QUtil.cachedPerSession(c19Cache, s, dir) {
+    QUtil.stage(s, ("c19Settled", dir)) {
       // the settled index chain and the GD trainer are independent eager
-      // barrier chains — stage them concurrently (r16, guide §2.6)
+      // barrier chains — stage them concurrently
       val ((_, m0), (_, score, _, _, tau)) = QUtil.par2(s)(
         c15SettledIndex(s, dir), c14Model(s, dir))
       val u0 = m0.filter(col("split") === "train")
@@ -1612,7 +1595,7 @@ object Pipeline {
         .withColumn("si", floor(col("score") * 1000000.0 + 0.5).cast("long"))
         .localCheckpoint()
       // given cur0, the histogram→boundaries chain and the shard packing
-      // are independent — overlap their barrier chains (r16, guide §2.6)
+      // are independent — overlap their barrier chains
       val ((hist0, b0), shards0) = QUtil.par2(s)(
         {
           val h = cur0.groupBy(col("si")).agg(count(lit(1)).as("c"))
@@ -1703,9 +1686,8 @@ object Pipeline {
     * stage_prev, stage_new, n_tokens, score), ordered by doc_id. */
   def c19_curriculum_delta(s: SparkSession, dir: String): DataFrame = {
     // the O(delta) manifest fold (consumed 3x below) and the settled
-    // curriculum staging share c15SettledIndex (computed once through the
-    // session cache's memoized thunk); their remaining barrier chains are
-    // independent — overlap them (r16, guide §2.6)
+    // curriculum staging share c15SettledIndex (staged once per session);
+    // their remaining barrier chains are independent — overlap them
     val (ledger, _) = QUtil.par2(s)(
       c15_manifest_increment(s, dir).localCheckpoint(),
       c19Settled(s, dir))
@@ -2024,7 +2006,7 @@ object Pipeline {
       if (fold) {
         val (ledger0, _) = QUtil.par2(s)(
           c15_manifest_increment(s, dir).localCheckpoint(),
-          c19Settled(s, dir)) // overlap, as in c19_curriculum_delta (r16)
+          c19Settled(s, dir)) // overlap, as in c19_curriculum_delta
         val led = c19CurriculumDeltaFrom(s, dir, ledger0)
           .localCheckpoint() // consumed by the rollup and the repack
         led.agg(
@@ -2321,85 +2303,60 @@ object Pipeline {
     }
     // The family legs are INDEPENDENT dataflows over their own staged
     // settled artifacts (the scaladoc's "no leg rescans another's corpus");
-    // only the manifest→curriculum→shards backbone is sequential. Submit
-    // the legs from a small thread pool (optimization r15, guide §2.6
-    // "overlap independent jobs") so the cluster back-fills one leg's
-    // straggler tail with the next leg's work — each future materializes
-    // its leg's bounded 1-row metrics relation (localCheckpoint; the heavy
-    // chain work happens inside the future), and the final union stacks
-    // the already-materialized rows. Shared per-session staging (d3Pairs,
-    // the c14 model, the settled indexes) stays computed-once: the caches'
-    // computeIfAbsent serializes the first build and every other leg reuses
-    // it. Aggregations are unchanged — output identical to the sequential
-    // spelling.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    // pool threads re-activate the session explicitly (ADVICE r15:
-    // InheritableThreadLocal covers thread-creation time only), and every
-    // Future join unwraps ExecutionException so the surfaced error type
-    // matches the sequential spelling; the finally uses shutdownNow so a
-    // failed leg also CANCELS the in-flight ones (ADVICE r15).
-    def joinLeg[T](fut: java.util.concurrent.Future[T]): T =
-      try fut.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    def leg(body: => DataFrame): java.util.concurrent.Future[DataFrame] =
-      pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        override def call(): DataFrame = {
-          org.apache.spark.sql.SparkSession.setActiveSession(s)
-          body.localCheckpoint()
-        }
-      })
-    try {
-      val backbone = pool.submit(new java.util.concurrent.Callable[
-          (DataFrame, DataFrame, DataFrame)] {
-        override def call(): (DataFrame, DataFrame, DataFrame) = {
-          org.apache.spark.sql.SparkSession.setActiveSession(s)
-          val c15Led = c15_manifest_increment(s, dir)
-            .localCheckpoint() // ONE manifest fold: rollup + c19's input
-          val c19Led = c19CurriculumDeltaFrom(s, dir, c15Led)
-            .localCheckpoint() // ONE curriculum fold: rollup + shard repack
-          val shardD = c19ShardDeltaFrom(s, dir, c19Led)
-          (c15Led, c19Led, shardD)
-        }
-      })
-      val deltaTf = TextAnalysis.bm25TfOf(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0))
-      val textExact = leg(statusCounts(Dedup.d12_incremental_dedup(s, dir),
-        Seq("dup_of_base", "dup_in_delta", "unique")))
-      val textNear = leg(statusCounts(Dedup.d13_incremental_neardup(s, dir),
-        Seq("neardup_of_base", "neardup_in_delta", "unique")))
-      val postings = leg(deltaTf.agg(
+    // only the manifest→curriculum→shards backbone is sequential. Running
+    // the legs concurrently lets the cluster back-fill one leg's straggler
+    // tail with the next leg's work. Each family leg materializes its
+    // bounded 1-row metrics relation (localCheckpoint), so the final union
+    // stacks already-materialized rows; staged artifacts several legs
+    // share (d3Pairs, the c14 model, the settled indexes) are built once.
+    // Output identical to the sequential spelling.
+    def leg(body: => DataFrame): () => Seq[DataFrame] =
+      () => Seq(body.localCheckpoint())
+    val deltaTf = TextAnalysis.bm25TfOf(
+      Tables.documents(s, dir).filter(col("doc_id") % 10 === 0))
+    val Seq(Seq(c15Led, c19Led, shardD), Seq(textExact), Seq(textNear),
+            Seq(postings), Seq(vectors), Seq(media)) = QUtil.parAll(s)(
+      () => {
+        val manifest = c15_manifest_increment(s, dir)
+          .localCheckpoint() // ONE manifest fold: rollup + c19's input
+        val curriculum = c19CurriculumDeltaFrom(s, dir, manifest)
+          .localCheckpoint() // ONE curriculum fold: rollup + shard repack
+        Seq(manifest, curriculum, c19ShardDeltaFrom(s, dir, curriculum))
+      },
+      leg(statusCounts(Dedup.d12_incremental_dedup(s, dir),
+        Seq("dup_of_base", "dup_in_delta", "unique"))),
+      leg(statusCounts(Dedup.d13_incremental_neardup(s, dir),
+        Seq("neardup_of_base", "neardup_in_delta", "unique"))),
+      leg(deltaTf.agg(
         countDistinct(col("doc_id")).as("n_docs"),
         sum(col("tf")).as("n_tokens"),
         count(lit(1)).as("n_postings"),
-        countDistinct(col("term")).as("n_terms_touched")))
-      val vectors = leg(Similarity.s18DeltaSummary(s, dir))
-      val media = leg(statusCounts(Multimodal.m9_incremental_media(s, dir),
+        countDistinct(col("term")).as("n_terms_touched"))),
+      leg(Similarity.s18DeltaSummary(s, dir)),
+      leg(statusCounts(Multimodal.m9_incremental_media(s, dir),
         Seq("dup_of_base", "dup_in_delta", "neardup_of_base",
-            "neardup_in_delta", "unique")))
-      val (c15Led, c19Led, shardD) = joinLeg(backbone)
-      longRows("text_exact", joinLeg(textExact))
-        .unionByName(longRows("text_near", joinLeg(textNear)))
-        .unionByName(longRows("postings", joinLeg(postings)))
-        .unionByName(longRows("vectors", joinLeg(vectors)))
-        .unionByName(longRows("media", joinLeg(media)))
-        .unionByName(longRows("manifest", c15Led.agg(
-          sum(when(col("action") === "add", 1L).otherwise(0L)).as("n_add"),
-          sum(when(col("action") === "retire", 1L).otherwise(0L)).as("n_retire"),
-          sum(col("tok_delta")).as("tok_delta"))))
-        .unionByName(longRows("curriculum", c19Led.agg(
-          sum(when(col("action") === "enter", 1L).otherwise(0L)).as("n_enter"),
-          sum(when(col("action") === "leave", 1L).otherwise(0L)).as("n_leave"),
-          sum(when(col("action") === "move", 1L).otherwise(0L)).as("n_move"),
-          sum(when(col("action") === "enter", col("n_tokens"))
-            .when(col("action") === "leave", -col("n_tokens"))
-            .otherwise(0L)).as("tok_delta"))))
-        .unionByName(longRows("shards", shardD.agg(
-          sum(when(col("action") === "new", 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("action") === "dropped", 1L).otherwise(0L)).as("n_dropped"),
-          sum(when(col("action") === "changed", 1L).otherwise(0L)).as("n_changed"))))
-        .orderBy("family", "metric")
-    } finally pool.shutdownNow()
+            "neardup_in_delta", "unique"))))
+    longRows("text_exact", textExact)
+      .unionByName(longRows("text_near", textNear))
+      .unionByName(longRows("postings", postings))
+      .unionByName(longRows("vectors", vectors))
+      .unionByName(longRows("media", media))
+      .unionByName(longRows("manifest", c15Led.agg(
+        sum(when(col("action") === "add", 1L).otherwise(0L)).as("n_add"),
+        sum(when(col("action") === "retire", 1L).otherwise(0L)).as("n_retire"),
+        sum(col("tok_delta")).as("tok_delta"))))
+      .unionByName(longRows("curriculum", c19Led.agg(
+        sum(when(col("action") === "enter", 1L).otherwise(0L)).as("n_enter"),
+        sum(when(col("action") === "leave", 1L).otherwise(0L)).as("n_leave"),
+        sum(when(col("action") === "move", 1L).otherwise(0L)).as("n_move"),
+        sum(when(col("action") === "enter", col("n_tokens"))
+          .when(col("action") === "leave", -col("n_tokens"))
+          .otherwise(0L)).as("tok_delta"))))
+      .unionByName(longRows("shards", shardD.agg(
+        sum(when(col("action") === "new", 1L).otherwise(0L)).as("n_new"),
+        sum(when(col("action") === "dropped", 1L).otherwise(0L)).as("n_dropped"),
+        sum(when(col("action") === "changed", 1L).otherwise(0L)).as("n_changed"))))
+      .orderBy("family", "metric")
   }
 
   /** c20 oracle: every family's full-recompute oracle as a derived table,

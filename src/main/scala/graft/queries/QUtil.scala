@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared numeric helpers for cross-engine (Spark ↔ DuckDB oracle) parity. */
+/** Shared numeric helpers for cross-engine (Spark ↔ DuckDB oracle)
+  * parity, the staging registry and the concurrent-leg runner. */
 object QUtil {
   /** Round-half-up as pure double arithmetic (`floor(x·10ⁿ+0.5)/10ⁿ`).
     * Unlike `round()` — which Spark evaluates on the decimal string
@@ -18,68 +19,80 @@ object QUtil {
     * BEFORE further arithmetic, so downstream products stay bit-identical. */
   def round6(c: Column): Column = floor(c * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
 
-  /** Per-session materialized-intermediate lookup keyed by the session
-    * OBJECT (reference equality — a recycled identityHashCode after GC can
-    * never alias two sessions), with lazy eviction of stopped sessions'
-    * entries on each miss so session churn cannot grow the cache without
-    * bound.
+  /** The session-scoped staging registry: intermediates that several
+    * queries of one session consume (trained centroids, settled indexes,
+    * verified pair tables) are built once per `(session, key)` and shared.
+    * `key` is a tuple whose first element names the family, e.g.
+    * `("coarse", dir, ex, k)`; one key always maps to one value type.
     *
-    * The build runs OUTSIDE the map's bin lock (ADVICE r15): the map
-    * stores a memoized thunk, `putIfAbsent` decides the single builder in
-    * O(1), and the multi-minute Spark build executes in plain code — so
-    * concurrent legs staging UNRELATED keys that hash to the same bin
-    * never serialize on each other, and a builder that recursively
-    * touches the same map cannot deadlock/throw (the recursive lookup
-    * finds a thunk, not a locked bin). Losers of the race block on the
-    * winner's lazy val — first-build-wins, computed exactly once.
-    * INVARIANT: a builder must not recursively request its OWN key (the
-    * lazy val would self-deadlock) — same rule computeIfAbsent enforced,
-    * now without penalizing unrelated keys. */
-  def cachedPerSession[K, V <: AnyRef](
-      cache: java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, K), () => V],
-      s: org.apache.spark.sql.SparkSession, k: K)(
-      f: => V): V = {
-    val key = (s, k)
-    val hit = cache.get(key)
-    if (hit != null) hit()
-    else {
-      val it = cache.keySet().iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val thunk = new (() => V) { lazy val v: V = f; def apply(): V = v }
-      val prev = cache.putIfAbsent(key, thunk)
-      (if (prev != null) prev else thunk)()
+    * Sessions are compared by reference, and entries of stopped contexts
+    * are evicted on each miss. The map stores a memoized thunk, so the
+    * Spark build runs outside the map's bin lock: concurrent callers of
+    * one key wait for the first builder, and a builder may stage other
+    * keys. A builder must not request its own key (it would wait on
+    * itself). A build that throws removes its entry before rethrowing,
+    * so the next call builds again. Staged frames are `localCheckpoint`ed:
+    * their lineage is truncated, so unpersist their blocks only after
+    * [[clearStaged]], or a later consumer fails instead of recomputing. */
+  def stage[V <: AnyRef](s: SparkSession, key: Product)(build: => V): V = {
+    val k = (s, key)
+    var thunk = staged.get(k)
+    if (thunk == null) {
+      staged.keySet.removeIf(_._1.sparkContext.isStopped)
+      val mine = new (() => AnyRef) { lazy val v: AnyRef = build; def apply(): AnyRef = v }
+      thunk = Option(staged.putIfAbsent(k, mine)).getOrElse(mine)
     }
+    try thunk().asInstanceOf[V]
+    catch { case t: Throwable => staged.remove(k, thunk); throw t }
   }
 
-  /** Run TWO independent eager staging bodies as concurrent Spark jobs
-    * (guide §2.6 "overlap independent jobs"), returning both results —
-    * the audit-chain queries are sequences of eager checkpoint barriers
-    * whose per-job scheduling floor, not data, dominates at bench SF
-    * (r15 verdict: every c16–c20 query's 32-vs-8-core ratio ≈ 1);
-    * overlapping two independent barrier chains halves their combined
-    * serial depth, and at data-bound scale the second chain back-fills
-    * the first's straggler tails. `fa` runs on the CALLER's thread (its
-    * session/thread-locals untouched); `fb` on a pool thread with the
-    * session re-activated explicitly (ADVICE r15: InheritableThreadLocal
-    * covers thread CREATION time only). Bodies sharing a staged artifact
-    * stay computed-once through [[cachedPerSession]]'s memoized thunks.
-    * On failure the other body is cancelled and the CAUSE is rethrown
-    * (not the ExecutionException wrapper — ADVICE r15). */
-  def par2[A, B](s: org.apache.spark.sql.SparkSession)(fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+  private val staged =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Product), () => AnyRef]()
+
+  /** Forget every staged intermediate of every session. */
+  def clearStaged(): Unit = staged.clear()
+
+  /** Run independent eager bodies as concurrent Spark jobs and return
+    * their results in argument order. Overlapping independent job chains
+    * lets one chain's scheduling gaps and straggler tails run the other's
+    * tasks. Each leg runs on its own pool thread with the session
+    * re-activated and a per-call Spark job tag added. Pool threads inherit
+    * the tags of the calling thread, so a nested call's jobs also carry
+    * the outer tag. When a leg fails, every job carrying this call's tag
+    * is cancelled, the other legs are interrupted, and the leg's own
+    * exception (not the `ExecutionException`) is rethrown. */
+  def parAll[A](s: SparkSession)(legs: (() => A)*): Seq[A] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+    val sc = s.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+    @volatile var failed = false
+    val pool = Executors.newFixedThreadPool(legs.size)
+    val done = new ExecutorCompletionService[A](pool)
     try {
-      val fut = pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = {
-          org.apache.spark.sql.SparkSession.setActiveSession(s)
-          fb
+      val futures = legs.map(leg => done.submit { () =>
+        SparkSession.setActiveSession(s)
+        sc.addJobTag(tag)
+        try leg()
+        finally {
+          // a job submitted after the cancel below still carries the tag
+          if (failed) sc.cancelJobsWithTag(tag)
+          sc.removeJobTag(tag)
         }
       })
-      val a = try fa catch { case t: Throwable => fut.cancel(true); throw t }
-      val b = try fut.get() catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      try legs.foreach(_ => done.take().get())
+      catch { case t: Throwable =>
+        failed = true
+        sc.cancelJobsWithTag(tag)
+        throw (t match { case e: ExecutionException => e.getCause; case _ => t })
       }
-      (a, b)
+      futures.map(_.get())
     } finally pool.shutdownNow()
+  }
+
+  /** [[parAll]] over two legs of different types. */
+  def par2[A, B](s: SparkSession)(fa: => A, fb: => B): (A, B) = {
+    val Seq(a, b) = parAll[Any](s)(() => fa, () => fb)
+    (a.asInstanceOf[A], b.asInstanceOf[B])
   }
 
   /** Number of dictionary buckets for [[denseIds]] / [[denseIdsSqlCte]]. */

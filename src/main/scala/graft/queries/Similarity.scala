@@ -178,23 +178,10 @@ object Similarity {
     * the expensive step (16 hyperplanes × 64 exact-decimal folds per row);
     * without the shared intermediate it would execute once per consumer in a
     * verify/bench cycle. In production this is a persisted staging table;
-    * here `localCheckpoint` plays that role. `Bench` clears the cache before
-    * each timed run (`clearShared`) so benchmark numbers stay cold-cost. */
+    * here `localCheckpoint` plays that role. */
   def s2Pairs(s: SparkSession, dir: String): DataFrame =
-    QUtil.cachedPerSession(pairsCache, s, (dir, exactDecimals(s)))(
+    stage(s, ("s2Pairs", dir, exactDecimals(s)))(
       s2PairsUncached(s, dir).localCheckpoint())
-
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, (String, Boolean)), () => DataFrame]()
-
-  /** Drop all shared materialized intermediates (bench isolation). */
-  def clearShared(): Unit = {
-    pairsCache.clear()
-    coarseCache.clear()
-    ivfpqCache.clear()
-    ivfpqSettledCache.clear()
-    sq8AsgCache.clear()
-  }
 
   /** S2 random-hyperplane LSH near-dup: 16 sign bits, 2×8-bit bands,
     * candidates verified with exact cosine ≥ 0.4 (unit vectors ⇒ dot =
@@ -388,15 +375,11 @@ object Similarity {
     * `spark.graft.semdedupK` scaling knob). */
   private def trainCoarse(s: SparkSession, dir: String, ex: Boolean,
                           k: Int = 10): DataFrame =
-    QUtil.cachedPerSession(coarseCache, s, (dir, ex, k))(
+    // k-row checkpointed relations consumed by s4/s7/s10/s13/s14/c2 and
+    // x38's router: one training pass per (session, dir, precision, k)
+    stage(s, ("coarse", dir, ex, k))(
       trainCoarseOn(
         Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), ex, k))
-
-  // trained coarse quantizers are k-row checkpointed relations consumed by
-  // s4/s7/s10/s13/s14/c2 — one training pass per (session, dir, precision,
-  // k), the s2Pairs staging discipline (Bench clears per timed run)
-  private val coarseCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, (String, Boolean, Int)), () => DataFrame]()
 
   /** The Lloyd loop over an arbitrary TRAINING relation (vec_id, embedding)
     * — the full corpus for [[trainCoarse]], a bounded sample for
@@ -697,31 +680,21 @@ object Similarity {
     * coarse half via [[trainCoarse]]'s own staging; before round 7 each
     * re-ran training + assignment + residual encode from scratch (~33 s of
     * the 174-query bench). A production index is TRAINED ONCE and served
-    * many times — `spark.graft.ivfpqShared` (default true) stages it per
-    * (session, dir, precision) exactly like `s2Pairs`/`bm25Postings`;
-    * `Bench` still clears the cache before every timed run so default
-    * per-query numbers stay cold and order-independent (the warm serving
-    * shape is the SPARK_GRAFT_KEEP_SHARED study in STRESS_sf1.md). The
-    * checkpoint-boundary concern that kept `bm25Postings` lazy does not
-    * apply here: every staged piece was ALREADY `localCheckpoint`ed inside
-    * a single query's dataflow (self-joined or multi-consumed), so staging
-    * adds no new optimizer barrier — only reuse. */
+    * many times — it is staged per (session, dir, precision) like
+    * `s2Pairs`. The checkpoint-boundary concern that kept `bm25Postings`
+    * lazy does not apply here: every staged piece was ALREADY
+    * `localCheckpoint`ed inside a single query's dataflow (self-joined or
+    * multi-consumed), so staging adds no new optimizer barrier — only
+    * reuse. */
   private[graft] case class IvfPqIndex(coarse: DataFrame, asg: DataFrame,
                                        cb1: DataFrame, cand1: DataFrame,
                                        codes: DataFrame)
 
-  private val ivfpqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, (String, Boolean)), () => IvfPqIndex]()
-
-  private def ivfpqIndex(s: SparkSession, dir: String, ex: Boolean): IvfPqIndex = {
-    def build: IvfPqIndex = {
+  private def ivfpqIndex(s: SparkSession, dir: String, ex: Boolean): IvfPqIndex =
+    stage(s, ("ivfpq", dir, ex)) {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       buildIndexOn(emb, trainCoarse(s, dir, ex), ex)
     }
-    if (s.conf.get("spark.graft.ivfpqShared", "true").toBoolean)
-      QUtil.cachedPerSession(ivfpqCache, s, (dir, ex))(build)
-    else build
-  }
 
   /** Assignment + residual encode + codebook refinement against an
     * arbitrary corpus relation and trained coarse quantizer — the full
@@ -2279,18 +2252,14 @@ object Similarity {
     * settled-trained residual codebook, and the settled candidate/code
     * tables — exactly the persisted artifact a production vector store
     * keeps warm between crawl increments. Staged per (session, dir,
-    * precision); Bench clears it per timed run (the warm form is the
-    * KEEP_SHARED study). */
+    * precision). */
   private[graft] def ivfpqSettledIndex(s: SparkSession, dir: String,
                                        ex: Boolean): IvfPqIndex =
-    QUtil.cachedPerSession(ivfpqSettledCache, s, (dir, ex)) {
+    stage(s, ("ivfpqSettled", dir, ex)) {
       val embS = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 10 =!= 0)
       buildIndexOn(embS, trainCoarseOn(embS, ex, 10), ex)
     }
-
-  private val ivfpqSettledCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, (String, Boolean)), () => IvfPqIndex]()
 
   /** The delta fold of [[s18_ivfpq_incremental]], factored for the
     * append-only spec: delta vectors assigned via the FROZEN settled
@@ -3792,30 +3761,12 @@ object Similarity {
     val ks = if (Seq(5, 10, 20).contains(kRoot)) Seq(5, 10, 20)
              else Seq(5, 10, 20, kRoot)
     // the sweep points are INDEPENDENT jobs (each trains, assigns, routes
-    // and scores its own k) — submit them from a small thread pool so one
-    // point's straggler tasks back-fill with the next point's work instead
-    // of leaving the cluster idle (guide §2.6 "overlap independent jobs";
-    // Spark's scheduler runs concurrent jobs FIFO, which is exactly the
-    // back-fill behavior). Each point's eager steps (the Lloyd
-    // boundedCheckpoints, the scored localCheckpoint) are where the
-    // overlap happens; results are unioned in the deterministic ks order
-    // and every per-point relation is keyed by its own `cells` literal, so
-    // the output is identical to the sequential form.
-    // pool threads re-activate the session explicitly, joins unwrap
-    // ExecutionException, and the finally shutdownNow also cancels
-    // in-flight points on a failure (ADVICE r15, same fixes as c20's pool)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(ks.size)
-    val points = try {
-      ks.map(k => pool.submit(new java.util.concurrent.Callable[(DataFrame, DataFrame)] {
-          override def call(): (DataFrame, DataFrame) = {
-            org.apache.spark.sql.SparkSession.setActiveSession(s)
-            sweepPoint(k)
-          }
-        }))
-        .map(fut => try fut.get() catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        })
-    } finally pool.shutdownNow()
+    // and scores its own k): run them concurrently so one point's
+    // straggler tasks back-fill with the next point's work. Results are
+    // unioned in the deterministic ks order and every per-point relation
+    // is keyed by its own `cells` literal, so the output is identical to
+    // the sequential form.
+    val points = parAll(s)(ks.map(k => () => sweepPoint(k)): _*)
     val report = recallReport(points.map(_._1).reduce(_ unionByName _),
                               Seq("cells"), truth5, top1)
     val scans = points.map(_._2).reduce(_ unionByName _)
@@ -4267,21 +4218,15 @@ object Similarity {
       .select(col("q_id"), col("probe"), col("label"), col("vec_id"), col("iscore"))
   }
 
-  // the trained SQ8 assignment is staged per session like the PQ index's
-  // asg (the staging rule: trained/assigned artifacts are expensive to
-  // rebuild — the exact-decimal argmin pass is the cost — while the int8
-  // encode stays unstaged per the round-10 refutation)
-  private val sq8AsgCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, (String, Boolean)), () => DataFrame]()
-
   /** The TRAINED corpus assignment behind the serving router: every vector
     * assigned to its nearest trained coarse centroid (s4/s7's k-means,
     * k = 10, squared-euclidean, ties to the lower cluster) — one per-row
     * argmin over the broadcast k-row centroid table, staged per session
-    * (in production the index IS this assignment, computed at ingest). */
+    * (in production the index IS this assignment, computed at ingest).
+    * The int8 encode stays unstaged: it is cheap to recompute. */
   private[graft] def sq8TrainedAssign(s: SparkSession, dir: String): DataFrame = {
     val ex = exactDecimals(s)
-    QUtil.cachedPerSession(sq8AsgCache, s, (dir, ex))(
+    stage(s, ("sq8Asg", dir, ex))(
       assignToNearest(
         Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
         trainCoarse(s, dir, ex), ex)

@@ -688,12 +688,9 @@ object TextAnalysis {
     * (r15's choice) keeps the shared-artifact discipline (one gram
     * self-join per session; the eval set does not grow with the crawl)
     * while the materialized artifact is doc-id-set-sized, not
-    * pair-table-sized. `Bench.clearShared` drops it per timed run. */
-  private val t14Cache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), () => DataFrame]()
-
+    * pair-table-sized. */
   private[graft] def t14ContaminatedIds(s: SparkSession, dir: String): DataFrame =
-    cachedPerSession(t14Cache, s, dir) {
+    stage(s, ("t14Contaminated", dir)) {
       t14Rel(s, dir)
         .filter(col("n_shared") >= 2)
         .select(col("train_doc").as("doc_id")).distinct()
@@ -1624,7 +1621,7 @@ object TextAnalysis {
     *
     * Dataflow: postings = t7's (term, doc) tf shuffle carrying the doc
     * length through the agg (no second dl join), shared via
-    * [[bm25Postings]] (lazy by default, materialization knob — see its
+    * [[bm25Postings]] (lazy by default, staged on request — see its
     * scaladoc for the measured trade); the (N, Σdl) stats DERIVE from the
     * postings (per-doc max(dl) → one bounded agg) instead of a separate
     * text pass. Pruning and the per-query top-10 both lower to
@@ -1641,44 +1638,31 @@ object TextAnalysis {
     * lexical leg. Lazily re-planned per consumer by default (8 corpus
     * scans, 0 `ReusedExchange` in one t27 execution — but the optimizer
     * keeps full visibility: semi-join pushdown from s16, broadcast picks
-    * from parquet stats), with `spark.graft.bm25Materialize=true`
-    * switching to a per-(session, dir) `localCheckpoint` staging table
-    * (s2Pairs' discipline, cleared by `Bench` per timed run) that cuts
-    * the plan to 2 scans for scan-I/O-bound regimes — the measured trade
-    * is in the knob comment below and STRESS_sf1.md. */
+    * from parquet stats), with `materialize = true` switching to a
+    * per-(session, dir) `localCheckpoint` staging table (s2Pairs'
+    * discipline) that cuts the plan to 2 scans — the measured trade is in
+    * the comment below and STRESS_sf1.md. */
   def bm25Postings(s: SparkSession, dir: String,
-                   materialize: Option[Boolean] = None): DataFrame = {
+                   materialize: Boolean = false): DataFrame = {
     def build = Tables.documents(s, dir)
       .select(col("doc_id"), size(toks).cast("long").as("dl"),
               explode(toks).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    // Deployment knob, default LAZY for batch — decided by measurement,
-    // not the first intuition (STRESS_sf1.md round 6): materializing here
+    // Default LAZY for batch — decided by measurement, not the first
+    // intuition (STRESS_sf1.md round 6): materializing here
     // wins t27 alone marginally at sf1 (15.9 vs 16.6 s) but costs s16
     // 1.4× (61.7 vs 43.9 s) because the checkpoint boundary blinds
     // Catalyst — the fused form lets the optimizer push s16's
     // embedded-queries semi-join and pick broadcast joins from parquet
     // stats. `true` buys the 2-scan form for scan-I/O-bound regimes, and
-    // is FORCED by the x28 serving twin (an endpoint holds its index
+    // is passed by the x28 serving twin (an endpoint holds its index
     // across triggers; re-planning the build per micro-batch is never the
     // serving shape). The real 100 TB answer is neither per-job form: a
     // production index PERSISTS its postings as a staging table
     // maintained incrementally (d13's band-signature discipline).
-    val mat = materialize.getOrElse(
-      s.conf.get("spark.graft.bm25Materialize", "false").toBoolean)
-    if (!mat) build
-    else cachedPerSession(postingsCache, s, dir)(build.localCheckpoint())
-  }
-
-  private val postingsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), () => DataFrame]()
-
-  /** Drop the shared materialized postings (bench isolation). */
-  def clearShared(): Unit = {
-    postingsCache.clear()
-    bm25BaseCache.clear()
-    t14Cache.clear()
+    if (!materialize) build
+    else stage(s, ("bm25Postings", dir))(build.localCheckpoint())
   }
 
   def t27_bm25(s: SparkSession, dir: String): DataFrame = {
@@ -1837,11 +1821,10 @@ object TextAnalysis {
 
   /** The settled BM25 index staging tables a production ingest keeps warm
     * between increments — (pruned postings, df, stats), staged per
-    * session (cachedPerSession plays the persisted-table role; Bench
-    * clears it per timed run — the warm form is the KEEP_SHARED study). */
+    * session (the staging registry plays the persisted-table role). */
   private[graft] def bm25SettledIndex(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    cachedPerSession(bm25BaseCache, s, dir) {
+    stage(s, ("bm25Settled", dir)) {
       val baseTf = bm25TfOf(
           Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
         .localCheckpoint() // pruned postings + df + stats all fold off it
@@ -1849,10 +1832,6 @@ object TextAnalysis {
        bm25DfOf(baseTf).localCheckpoint(),
        bm25StatsOf(baseTf).localCheckpoint())
     }
-
-  private val bm25BaseCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      () => (DataFrame, DataFrame, DataFrame)]()
 
   /** T28: DSIR IMPORTANCE WEIGHTS (Data Selection via Importance
     * Resampling, Xie et al. 2023) — the targeted-selection pass that picks

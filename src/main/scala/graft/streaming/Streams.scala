@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.Tables
+import java.nio.file.{Files, LinkOption, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Structured Streaming twins of the batch operators (SURVEY.md §7.2 M7,
   * §2.6). The reference is an event-time Flink pipeline with a 30-minute
@@ -26,77 +29,71 @@ import graft.Tables
   */
 object Streams {
 
-  /** Events table as an unbounded-source DataFrame (parquet file stream).
-    * The file streaming source monitors a DIRECTORY; the testdata ships one
-    * parquet file per table, so we expose it through a symlink directory
-    * (read-only testdata stays untouched). */
-  def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val streamDir = Paths.get("/tmp/graft_stream",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), "events")
-    Files.createDirectories(streamDir)
-    val link = streamDir.resolve("events.parquet")
-    // absolute target: a relative one would resolve against the SYMLINK's
-    // own directory and dangle (latent for the driver's absolute sf dirs,
-    // real for a relative one like target/sf1). NOFOLLOW existence check +
-    // repair: a dangling link from a pre-fix run follows to "not exists"
-    // and createSymbolicLink would throw FileAlreadyExistsException
-    if (Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
-        !Files.exists(link))
-      Files.delete(link)
-    if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link,
-        Paths.get(Tables.path(dir, "events")).toAbsolutePath)
-    val raw = s.readStream.schema(
-        s.read.parquet(Tables.path(dir, "events")).schema)
-      .parquet(streamDir.toString)
-    normalizeTs(raw)
+  /** `/tmp/graft_stream/<dir, sanitized>/<leaf>`: where the files derived
+    * from the sf dir `dir` live (stream directories, replay chunks, wire
+    * lines). The testdata is read-only, so derived files go here. */
+  private[graft] def derivedDir(dir: String, leaf: String): Path =
+    Paths.get("/tmp/graft_stream", dir.replaceAll("[^A-Za-z0-9.]", "_"), leaf)
+
+  /** [[derivedDir]] for files BUILT from the events table once and reused
+    * while a marker file exists. The leaf name carries a fingerprint of
+    * the events parquet (name, size and mtime of every part), so an input
+    * regenerated in place gets a fresh directory instead of the stale
+    * build; going back to an earlier input finds its own build again. */
+  private[graft] def eventsDerivedDir(dir: String, name: String): Path = {
+    val src = Paths.get(Tables.path(dir, "events"))
+    val parts =
+      if (Files.isDirectory(src))
+        Using.resource(Files.list(src))(_.iterator().asScala.toList.sortBy(_.getFileName.toString))
+      else List(src)
+    val fp = parts
+      .map(p => s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
+      .mkString("|").hashCode.toHexString
+    derivedDir(dir, s"${name}_$fp")
   }
 
-  /** The documents table as an unbounded-source DataFrame — the same
-    * symlink-directory file stream as [[eventsStream]], for the x20
-    * tokenizer-feed twin. */
-  def docsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val streamDir = Paths.get("/tmp/graft_stream",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), "documents")
-    Files.createDirectories(streamDir)
-    val link = streamDir.resolve("documents.parquet")
-    if (Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
-        !Files.exists(link))
+  /** Symlink `table`'s parquet into `streamDir` as `linkName`. The target
+    * is absolute (a relative one would resolve against the link's own
+    * directory), and a dangling link left by an earlier run is replaced:
+    * it reads as "not exists" when followed, and creating over it would
+    * throw `FileAlreadyExistsException`. */
+  private def linkTable(streamDir: Path, linkName: String, dir: String, table: String): Unit = {
+    val link = streamDir.resolve(linkName)
+    if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.exists(link))
       Files.delete(link)
-    if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link,
-        Paths.get(Tables.path(dir, "documents")).toAbsolutePath)
-    s.readStream.schema(
-        s.read.parquet(Tables.path(dir, "documents")).schema)
-      // bounded-trigger contract (x20 and every doc-stream consumer that
-      // buffers a per-key batch slice relies on it): each micro-batch is at
-      // most one source file — production swaps in maxBytesPerTrigger
-      .option("maxFilesPerTrigger", "1")
+    if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
+      Files.createSymbolicLink(link, Paths.get(Tables.path(dir, table)).toAbsolutePath)
+  }
+
+  /** A table as an unbounded-source DataFrame (parquet file stream). The
+    * file streaming source monitors a DIRECTORY and the testdata ships one
+    * parquet file per table, so the table is exposed through a symlink
+    * directory. `maxFilesPerTrigger` bounds each micro-batch. */
+  def tableStream(s: SparkSession, dir: String, table: String,
+                  maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val streamDir = derivedDir(dir, table)
+    Files.createDirectories(streamDir)
+    linkTable(streamDir, s"$table.parquet", dir, table)
+    val reader = s.readStream.schema(s.read.parquet(Tables.path(dir, table)).schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
       .parquet(streamDir.toString)
   }
 
-  /** The embeddings table as an unbounded file stream (same symlink-dir
-    * mechanism as [[docsStream]]) — the arriving-query-vector feed the
-    * streaming ANN twin (x26) serves. */
-  def embStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val streamDir = Paths.get("/tmp/graft_stream",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), "embeddings")
-    Files.createDirectories(streamDir)
-    val link = streamDir.resolve("embeddings.parquet")
-    if (Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
-        !Files.exists(link))
-      Files.delete(link)
-    if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link,
-        Paths.get(Tables.path(dir, "embeddings")).toAbsolutePath)
-    s.readStream.schema(
-        s.read.parquet(Tables.path(dir, "embeddings")).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
-  }
+  /** The events table as a file stream, timestamps normalized. */
+  def eventsStream(s: SparkSession, dir: String): DataFrame =
+    normalizeTs(tableStream(s, dir, "events", None))
+
+  /** The documents table as a file stream of at most one source file per
+    * micro-batch: x20 and every doc-stream consumer that buffers a per-key
+    * batch slice relies on that bound (production swaps in
+    * maxBytesPerTrigger). */
+  def docsStream(s: SparkSession, dir: String): DataFrame =
+    tableStream(s, dir, "documents", Some(1))
+
+  /** The embeddings table as a file stream — the arriving-query-vector
+    * feed the streaming ANN twins serve. */
+  def embStream(s: SparkSession, dir: String): DataFrame =
+    tableStream(s, dir, "embeddings", Some(1))
 
   /** Same ts normalization as the batch reader (`Tables.events`): nanos-long
     * → µs timestamp; timezone-naive (NTZ) → session-UTC timestamp. */
@@ -688,11 +685,12 @@ object Streams {
   case class TEdge(event_id: Long, ts: java.sql.Timestamp, arrival_s: Long)
   case class TimerState(resolved: Map[Long, Long], parked: List[(Long, Long)])
 
-  /** Build (once per sf-dir) a stream directory replaying `events` in the
-    * deterministic jittered ARRIVAL order of `Replay.arrivals` — 4 parquet
-    * chunk files in arrival order plus a far-future sentinel, so
-    * `maxFilesPerTrigger 1` yields micro-batches whose watermark advances
-    * exactly like the reference's replayed Kafka topic. */
+  /** Build (once per events fingerprint, see [[eventsDerivedDir]]) a
+    * stream directory replaying `events` in the deterministic jittered
+    * ARRIVAL order of `Replay.arrivals` — 4 parquet chunk files in
+    * arrival order plus a far-future sentinel, so `maxFilesPerTrigger 1`
+    * yields micro-batches whose watermark advances exactly like the
+    * reference's replayed Kafka topic. */
   private def replayStreamDir(s: SparkSession, dir: String): java.nio.file.Path =
     replayStreamDirCols(s, dir, "events_replay", Nil)
 
@@ -701,9 +699,7 @@ object Streams {
     * double → 0.0, string → "". */
   private[graft] def replayStreamDirCols(s: SparkSession, dir: String, name: String,
       extra: Seq[String]): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val streamDir = Paths.get("/tmp/graft_stream",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), name)
+    val streamDir = eventsDerivedDir(dir, name)
     val doneMarker = streamDir.resolve("9_sentinel.parquet")
     if (!Files.exists(doneMarker)) {
       Files.createDirectories(streamDir)
@@ -1002,29 +998,20 @@ object Streams {
       | AND c.t <= p.t AND c.t >= p.t - 1800000000
       |ORDER BY p_id, c_id""".stripMargin
 
-  /** Build (once per sf-dir) a two-file stream directory: the events table
-    * followed by far-future sentinel rows in a second file — with
-    * `maxFilesPerTrigger 1` the sentinel batch pushes the watermark past
-    * every real event, flushing results that only emit at watermark
+  /** Build (once per events fingerprint) a two-file stream directory: the
+    * events table followed by far-future sentinel rows in a second file —
+    * with `maxFilesPerTrigger 1` the sentinel batch pushes the watermark
+    * past every real event, flushing results that only emit at watermark
     * (append-mode windows, outer-join nulls). `sentinels` receives the
     * far-future instant and builds the rows in the RAW parquet schema
     * (ts is LongType nanos under nanosAsLong). */
   private def sentinelStreamDir(s: SparkSession, dir: String, name: String,
       sentinels: (org.apache.spark.sql.types.StructType, Any) => Seq[Row]): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val streamDir = Paths.get("/tmp/graft_stream",
-      dir.replaceAll("[^A-Za-z0-9.]", "_"), name)
+    val streamDir = eventsDerivedDir(dir, name)
     val sentinelDone = streamDir.resolve("1_sentinel.parquet")
     if (!Files.exists(sentinelDone)) {
       Files.createDirectories(streamDir)
-      val link = streamDir.resolve("0_events.parquet")
-      // absolute target + dangling-link repair — see eventsStream
-      if (Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
-          !Files.exists(link))
-        Files.delete(link)
-      if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-        Files.createSymbolicLink(link,
-          Paths.get(Tables.path(dir, "events")).toAbsolutePath)
+      linkTable(streamDir, "0_events.parquet", dir, "events")
       val farFuture = Tables.events(s, dir)
         .select(max(col("ts")).as("mx")).head().getTimestamp(0).toInstant
         .plusSeconds(30 * 24 * 3600)
@@ -2763,7 +2750,7 @@ object Streams {
     val docs = Tables.documents(s, dir)
     val tk = split(col("text"), " ")
     // the endpoint holds its index: materialized once, reused every trigger
-    val tf = graft.queries.TextAnalysis.bm25Postings(s, dir, Some(true))
+    val tf = graft.queries.TextAnalysis.bm25Postings(s, dir, materialize = true)
     val dfRel = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val wp = Window.partitionBy(col("term")).orderBy(col("tf").desc, col("doc_id"))
     val pruned = tf.withColumn("pr", row_number().over(wp)).filter(col("pr") <= P)

@@ -77,7 +77,7 @@ class BpeMergeSpec extends SparkSpec {
     // whole-corpus cross-check: the full t18 chain under both forms
     val key = "spark.graft.bpeNative"
     def run() = {
-      TextAnalysis.clearShared()
+      graft.queries.QUtil.clearStaged()
       TextAnalysis.t18_bpe_merges(spark, "/root/testdata/sf0.001")
         .collect().map(_.toSeq).toSeq
     }

@@ -60,10 +60,7 @@ class PartitionInvarianceSpec extends SparkSpec {
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.get(key)
       def run(): Seq[Seq[Any]] = {
-        queries.Similarity.clearShared()
-        queries.Dedup.clearShared()
-        queries.Graph.clearShared()
-        queries.TextAnalysis.clearShared() // t27's postings must rebuild per count
+        queries.QUtil.clearStaged() // staged artifacts must rebuild per count
         mk().collect().toSeq.map(_.toSeq)
       }
       try {

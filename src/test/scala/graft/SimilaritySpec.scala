@@ -84,7 +84,7 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val key = "spark.graft.exactDecimals"
     def pairs(): Map[(Long, Long), Double] = {
-      Similarity.clearShared()
+      graft.queries.QUtil.clearStaged()
       Similarity.s2_lsh_neardup(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     }
@@ -100,7 +100,7 @@ class SimilaritySpec extends SparkSpec {
       assert(exact.nonEmpty)
     } finally {
       spark.conf.unset(key)
-      Similarity.clearShared()
+      graft.queries.QUtil.clearStaged()
     }
   }
 
@@ -113,13 +113,12 @@ class SimilaritySpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val key = "spark.graft.exactDecimals"
     def mine(): Set[(Long, Long)] = {
-      Similarity.clearShared()
+      graft.queries.QUtil.clearStaged()
       Similarity.s17_hard_negatives_ivf(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(2))).toSet
     }
     def eval(): Seq[Seq[Any]] = {
-      Similarity.clearShared()
-      graft.queries.TextAnalysis.clearShared()
+      graft.queries.QUtil.clearStaged()
       Similarity.s19_retrieval_eval(spark, dir).collect().map(_.toSeq).toSeq
     }
     val (exactMine, exactEval) = (mine(), eval())
@@ -130,8 +129,7 @@ class SimilaritySpec extends SparkSpec {
       assert(exactMine.nonEmpty && exactEval.nonEmpty)
     } finally {
       spark.conf.unset(key)
-      Similarity.clearShared()
-      graft.queries.TextAnalysis.clearShared()
+      graft.queries.QUtil.clearStaged()
     }
   }
 
