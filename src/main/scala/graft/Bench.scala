@@ -3,17 +3,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: every SparkEntry query timed at the given scale factor.
   *
-  * Each query is timed THREE times and the per-query MEDIAN of the
-  * SUCCESSFUL runs is reported — single-shot timings are vulnerable to
-  * one-off GC/JIT artifacts (a prior round charged one query 21.6 s for a
-  * 3.8 s computation). When the three timings spread more than 3× (the
-  * round-4 g1 artifact recorded 4.82 s for a 0.85 s query because one
-  * contended run survived the median), TWO extra runs are taken and the
-  * reported value becomes the MIN of the successful runs — under a >3×
-  * spread the distribution is contention-contaminated, and the minimum is
-  * the uncontended cost (round 5 shipped d2 at a 4.38 s median when an
-  * isolated re-run measured 1.73 s); the max/min spread per query is still
-  * recorded so the contamination stays visible. The staging registry
+  * Each query is timed three times and the per-query median of the
+  * successful runs is reported, since a single timing can carry a one-off
+  * GC or JIT pause. When the three timings spread more than 3×, one
+  * contended run can steer the median, so two extra runs are taken and the
+  * reported value becomes the minimum of the successful runs: the
+  * uncontended cost. The max/min spread per query is still recorded so
+  * the contention stays visible. The staging registry
   * (`QUtil.stage`) is cleared before every timed run so each measurement
   * is a cold, self-contained cost.
   *
@@ -28,13 +24,11 @@ object Bench {
     s(s.length / 2)
   }
 
-  /** Recycle the JVM's accumulated execution state BETWEEN the streaming
-    * x-block and the batch sweep (round-13 verdict: fronting the x-block
-    * fixed x11–x17 but RELOCATED the block-manager/heap pressure onto the
-    * first batch queries behind it — c12/c13 read 2.2–2.3× in-sweep with
-    * nothing touching them and recovered fully when judge-isolated). The
-    * batch sweep should start from the same clean-JVM state its isolated
-    * re-runs use: drop every persisted block (cleared caches leave
+  /** Recycle the JVM's accumulated execution state between the streaming
+    * x-block and the batch sweep. Without it the x-block's block-manager
+    * and heap pressure inflates the first batch queries behind it. The
+    * batch sweep starts from the same clean-JVM state an isolated run
+    * uses: drop every persisted block (cleared caches leave
     * orphaned localCheckpoint blocks), unload the streaming state-store
     * providers and their maintenance thread (HDFS provider maps + RocksDB
     * JNI handles held since the x-block), clear the SQL cache, and force
@@ -62,10 +56,8 @@ object Bench {
                                   keepShared: Boolean): Seq[String] =
     if (!subsetRun || keepShared) Seq("target", "bench") else Seq("target")
 
-  /** Which normalization scalar a query's timing is adjudicated against —
-    * emitted per query into the artifact as `class` so the driver's
-    * summary is machine-readable without NOTES (r14 verdict #4b, the last
-    * step of the measurement-infrastructure arc):
+  /** Which normalization scalar a query's timing is read against, emitted
+    * per query into the artifact as `class`:
     *   - `stream`: micro-batch queries (the x-block) — scheduling-latency
     *     bound; read against `calib_stream`'s window ratio. x41/x42 also
     *     pay the settled audit chain cold, but their drift across windows
@@ -85,30 +77,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional knobs for one-off experiments (driver runs use the defaults):
-    // SPARK_GRAFT_ONLY=q1,q2 filters the query set; SPARK_GRAFT_EXACT_DECIMALS
-    // toggles the similarity production-precision flag
-    sys.env.get("SPARK_GRAFT_EXACT_DECIMALS")
-      .foreach(v => spark.conf.set("spark.graft.exactDecimals", v))
-    // SPARK_GRAFT_CONF="k1=v1;k2=v2" sets arbitrary session confs (the
-    // s11BandBits / semdedupK scaling studies); SPARK_GRAFT_RUNS=1 runs
-    // each query once — the full-surface sf1 sweep, where per-query
-    // medians would triple a multi-hour run for no extra signal
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(
-          s"SPARK_GRAFT_CONF entry '$kv' is not k=v (expected 'k1=v1;k2=v2')")
-      } })
+    // SPARK_GRAFT_CONF sets session confs for experiments (Session.fromEnv)
+    val spark = Session.fromEnv()
+    val cpus = spark.sparkContext.defaultParallelism
+    // optional knobs for one-off experiments (default runs leave them unset):
+    // SPARK_GRAFT_ONLY=q1,q2 filters the query set; SPARK_GRAFT_RUNS=1 runs
+    // each query once, for full-surface sweeps at large scale where
+    // per-query medians would triple a multi-hour run
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // untimed warmup: JVM/codegen/parquet-footer caches
@@ -135,11 +110,9 @@ object Bench {
     }
     // MACHINE-WINDOW CALIBRATION: a fixed, deterministic, CPU-bound job —
     // SF-independent, no I/O after codegen — timed 3×, min reported as
-    // "calib" in the artifact. Motivation (round 9): two full benches of
-    // IDENTICAL code measured 318.9 s vs 398.6 s in different machine
-    // windows (this sandbox is a VM; host-level contention is invisible to
-    // guest load), a uniform ~1.2× median per-query inflation that reads
-    // as a regression unless attributed. The calib scalar moves with the
+    // "calib" in the artifact. Two full benches of identical code can
+    // differ by ~1.2× across machine windows on a VM, where host-level
+    // contention is invisible to guest load. The calib scalar moves with the
     // window, not the engine, so two artifacts compare like-for-like via
     // their calib ratio before any per-query delta is read as real.
     val calib = (1 to 3).map { _ =>
@@ -149,12 +122,9 @@ object Bench {
         .collect()
       (System.nanoTime() - t0) / 1e9
     }.min
-    // STREAMING-BOUND CALIBRATION TWIN (round-13 verdict #3): the
-    // CPU-bound calib provably cannot normalize streaming rows — x17's
-    // A/A test measured byte-identical code at 3.09 s then 4.88 s months
-    // apart at near-equal calib, and judge-isolated x10 read 14.9 s vs
-    // the builder's same-day 7.9 s in equally calm CPU windows. The
-    // drifting quantity is MICRO-BATCH SCHEDULING LATENCY (trigger
+    // STREAMING-BOUND CALIBRATION TWIN: the CPU-bound calib cannot
+    // normalize streaming rows, whose time drifts across windows at equal
+    // calib. The drifting quantity is MICRO-BATCH SCHEDULING LATENCY (trigger
     // planning, state-store commits, sink bookkeeping), orthogonal to
     // CPU throughput. calib_stream times a fixed, deterministic, no-op
     // FMGWS query over eight one-row files (maxFilesPerTrigger=1 → eight
@@ -170,7 +140,7 @@ object Bench {
         val tmp = base.resolve(s"tmp$i")
         spark.range(i.toLong, i.toLong + 1L).coalesce(1).write.parquet(tmp.toString)
         // Files.list returns an open directory stream — close it, or each
-        // bench run leaks one fd per chunk file (ADVICE r14)
+        // bench run leaks one fd per chunk file
         val ls = java.nio.file.Files.list(tmp)
         val part = try ls
           .filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
@@ -199,10 +169,8 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
       val v = (1 to 3).map(run).min
-      // the calibration fixture is ephemeral by definition — delete it, or
-      // three runs per bench accumulate one temp tree each in /tmp (the
-      // barrier-discipline argument from recycleExecutorState, applied to
-      // disk state; r14 verdict "what's wrong" #1)
+      // the calibration fixture is ephemeral — delete it, or three runs
+      // per bench accumulate one temp tree each in /tmp
       val walk = java.nio.file.Files.walk(base)
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
@@ -237,19 +205,14 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
     }
-    // the streaming x-block runs FIRST (round-12 verdict, bench hygiene):
-    // in a 200+-query single-JVM sweep the block runs last alphabetically,
-    // where accumulated block-manager/heap pressure inflated x11–x17 by
-    // 2–4× in rounds 11/12 — with the window-normalized flags moving
-    // DISJOINTLY between runs and none reproducing isolated. Fronting the
-    // block times it in the same clean-JVM state its isolated re-runs
-    // use, so in-sweep streaming numbers are judgeable from the artifact
-    // alone; batch queries are insensitive to the swap (their inputs are
-    // re-read parquet, their caches cleared per run either way).
-    // between the fronted x-block and the batch sweep, recycle the JVM
-    // state once (see recycleExecutorState — the round-13 relocation
-    // finding); per-query pre-run heap is recorded into the artifact so
-    // any residual contamination is attributable without isolation runs
+    // the streaming x-block runs FIRST: run last in a 200+-query
+    // single-JVM sweep, accumulated block-manager/heap pressure inflated it
+    // by 2–4×. Fronting it times it in the same clean-JVM state an
+    // isolated run uses; batch queries are insensitive to the order (their
+    // inputs are re-read parquet, their caches cleared per run either way).
+    // Between the x-block and the batch sweep the JVM state is recycled
+    // once (recycleExecutorState); per-query pre-run heap is recorded into
+    // the artifact so any residual contamination stays attributable
     var xBlockDone = false
     val heapMb = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val timings = SparkEntry.queries.toSeq
@@ -295,20 +258,15 @@ object Bench {
     val json =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${fmt(calib)},"calib_stream":${fmt(calibStream)},"queries":$qs,"spread":$spreads,"heap_mb":$heaps,"class":$classes,"sf":"$sfDir"}"""
     // full artifact → file (always parses, immune to log-tail truncation).
-    // Written to BOTH target/ (wiped between rounds — the driver's copy)
-    // and bench/ (committed per round, so the full per-query map survives
-    // in the repo even when the driver's bounded log tail truncates it —
-    // BENCH_r6/r7/r8 all shipped parsed:null; bench/ is the durable record)
-    // serving-mode runs (KEEP_SHARED staging kept warm between runs) get
-    // their own artifact name: the per-round serving bench lives next to
-    // the cold artifact instead of clobbering it
+    // Written to both target/ (build output) and bench/ (committed, the
+    // durable record of the full per-query map). Serving-mode runs
+    // (KEEP_SHARED: staging kept warm between runs) get their own artifact
+    // name, next to the cold artifact instead of clobbering it
     val sfName = new java.io.File(sfDir).getName +
       (if (keepShared) "_warm" else "")
-    // clobber guard: see artifactDirs — this bit two sessions in a row.
-    // The full map is ALSO written under a core-count-suffixed name
-    // (r15 verdict #2: the driver's 8-core rerun OVERWROTE the 32-core
-    // full artifact, destroying the round's primary per-query map — the
-    // _c<cpus> twin survives any same-sf rerun at another core count)
+    // clobber guard: see artifactDirs. The full map is also written under
+    // a core-count-suffixed name, so a same-sf rerun at another core count
+    // does not overwrite it
     for (dirName <- artifactDirs(only.nonEmpty, keepShared);
          suffix <- Seq("", s"_c$cpus")) {
       val out = java.nio.file.Paths.get(s"$dirName/bench_$sfName$suffix.json")
@@ -320,8 +278,8 @@ object Bench {
     // the line and sbt's trailing `[success]` line whole
     val byCost = results.toSeq.sortBy(-_._2)
     val budget = 1800
-    // point at the DURABLE copy when one was written (bench/ is committed;
-    // target/ is wiped between rounds and only subset experiments stop there)
+    // point at the durable copy when one was written (bench/ is committed;
+    // target/ is build output, where only subset experiments stop)
     val fullDir = artifactDirs(only.nonEmpty, keepShared).last
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calib":${fmt(calib)},"calib_stream":${fmt(calibStream)},"n_queries":${results.size},"full":"$fullDir/bench_$sfName.json","sf":"$sfDir","queries":{"""
     val tailStr = "}}"
@@ -333,9 +291,8 @@ object Bench {
       if (len + extra <= budget) { entries += e; len += extra }
     }
     val compact = head + entries.mkString(",") + tailStr
-    // the compact line ALSO lands in a dedicated file (round-11 advice:
-    // the driver's bounded log tail was polluted by post-println streaming
-    // shutdown WARNs, not line length — a file read needs no tail parsing)
+    // the compact line also lands in a dedicated file, so a reader needs
+    // no log-tail parsing past streaming shutdown WARNs
     for (dirName <- artifactDirs(only.nonEmpty, keepShared);
          suffix <- Seq("", s"_c$cpus")) {
       val out = java.nio.file.Paths.get(
@@ -345,9 +302,8 @@ object Bench {
     // the full per-query map into the log (earlier than the tail window —
     // for humans and post-hoc greps; files are the durable copy)
     println(json)
-    // stop BEFORE the final line: Spark/streaming shutdown logging (the
-    // WARN lines that followed the summary in BENCH_r11's tail) precedes
-    // it, so the summary is the genuinely last line before sbt's [success]
+    // stop BEFORE the final line: Spark/streaming shutdown logging then
+    // precedes it, so the summary is the last line before sbt's [success]
     spark.stop()
     println(compact)
   }

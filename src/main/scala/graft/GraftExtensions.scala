@@ -2,66 +2,27 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CdcSplit, DotProduct, DotProductI8, InterleaveBits, SqDist, UniqueWordsRatio}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session-extensions installer — the production path for shipping this
-  * library's custom Catalyst pieces to every session on a cluster:
+/** Session-extensions installer, set by every session [[Session]] builds:
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * Currently injects the native function surface (`unique_words_ratio`).
-  * Custom logical plans / optimizer rules / strategies would be injected
-  * here too (`injectOptimizerRule` / `injectPlannerStrategy`) — the survey's
-  * conclusion (SURVEY.md §4) is that this engine needs none for
-  * correctness: every reference operator lowers to DataFrame algebra that
-  * Catalyst already optimizes.
+  * It installs two things:
+  *   - the SQL names of every native function in `graft.functions`
+  *     (`nativeFunctions`), each behind the same argument-count check, so
+  *     SQL text can call them; DataFrame code uses the typed constructors
+  *     and needs none of this;
+  *   - the [[graft.plans.FuseDotProduct]] optimizer rule, which rewrites the
+  *     composed plain-double dot product to the native `dot_f32` loop.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("unique_words_ratio"),
-      new ExpressionInfo(classOf[UniqueWordsRatio].getName, "unique_words_ratio"),
-      (exprs: Seq[Expression]) => UniqueWordsRatio(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_f32"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sq_dist"),
-      new ExpressionInfo(classOf[SqDist].getName, "sq_dist"),
-      (exprs: Seq[Expression]) => SqDist(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("interleave_bits"),
-      new ExpressionInfo(classOf[InterleaveBits].getName, "interleave_bits"),
-      (exprs: Seq[Expression]) => InterleaveBits(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_split"),
-      new ExpressionInfo(classOf[CdcSplit].getName, "cdc_split"),
-      (exprs: Seq[Expression]) => CdcSplit(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("dot_i8"),
-      new ExpressionInfo(classOf[DotProductI8].getName, "dot_i8"),
-      (exprs: Seq[Expression]) => DotProductI8(exprs(0), exprs(1))))
-    // Spark's own runtime-filter bloom machinery, exposed as SQL functions
-    // (see graft.functions.BloomBridge for the operator-level rationale)
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
-    // rewrite composed plain-double aggregate(zip_with(..)) dot products to
-    // the fused native expression — bit-exact, one codegen'd loop
+    for (f <- graft.functions.nativeFunctions)
+      ext.injectFunction((
+        FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name),
+        f.sqlBuilder _))
     ext.injectOptimizerRule(_ => graft.plans.FuseDotProduct)
   }
 }

@@ -1,30 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round measurement harness: dump `.explain("formatted")`
-  * for named queries to text files (the judge's plan evidence —
-  * `plans/r15/<query>_{before,after}.txt`).
+/** Dumps `.explain("formatted")` for named queries to text files
+  * (`<outDir>/<query>_<tag>.txt`, as under `plans/`).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
   *
-  * Same session shape as Bench/Verify (master/shuffle partitions from
-  * SPARK_GRAFT_CPUS) so the dumped plans are the plans the bench times.
-  * Queries whose construction runs eager sub-jobs (localCheckpoint
-  * staging) dump the FINAL fragment's plan — the staged chain's plan
-  * shape is claimed from code + job counts in OPTIMIZATION notes, since
-  * a checkpoint boundary truncates lineage by design. */
+  * Runs in the [[Session]] that Bench and Verify use, so the dumped plans
+  * are the plans the bench times. Queries whose construction runs eager
+  * sub-jobs (localCheckpoint staging) dump the final fragment's plan: a
+  * checkpoint boundary truncates the lineage of the staged chain. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, qlist) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.fromEnv()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // plan PROBES for shared bodies whose plan sits BEHIND a checkpoint in
     // every declared query's final fragment (a LogicalRDD erases the
@@ -33,7 +22,6 @@ object PlanDump {
     val probes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
       "probe_assign_nearest" -> { (s: SparkSession, dir: String) =>
         import org.apache.spark.sql.functions.col
-        graft.functions.SqDist.register(s) // query entries do this lazily
         val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
         graft.queries.Similarity.assignToNearest(emb,
           graft.queries.Similarity.trainCoarseOn(

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session-conf knob for scale studies (mirrors Bench): non-default
-    // knobs generally trade oracle hash-equality for the production shape,
-    // so the driver never sets this — it's for local measurement dumps
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(
-          s"SPARK_GRAFT_CONF entry '$kv' is not k=v (expected 'k1=v1;k2=v2')")
-      } })
+    val spark = Session.fromEnv()
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: GRAFT_VERIFY_ONLY=q14_cube,q15_asof_join
     // dumps just those queries (the driver never sets it → full run)

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,8 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * TernaryExpression's null-out on that impossible input where the
   * composed form would append-all — a documented, unreachable divergence.
   *
-  * `spark.graft.bpeNative` (default true) switches the trainer between
-  * this and the composed fold; measured at sf1 in STRESS_sf1.md. */
+  * The trainer always merges with this expression; the composed fold is
+  * kept only as the reference `BpeMergeSpec` compares against. The two
+  * were measured at sf1 in STRESS_sf1.md. */
 case class BpeMerge(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression {
 
@@ -91,27 +90,5 @@ object BpeMerge {
       i += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, m))
-  }
-
-  /** Register `bpe_merge` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[BpeMerge].getName, "bpe_merge")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bpe_merge"),
-      info,
-      (exprs: Seq[Expression]) => {
-        // arity-checked here so a miscalled bpe_merge surfaces as a proper
-        // analysis error naming the signature, not an
-        // IndexOutOfBoundsException at plan time
-        if (exprs.length != 3)
-          throw new org.apache.spark.sql.AnalysisException(
-            "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            Map(
-              "functionName" -> "`bpe_merge`(tokens ARRAY<STRING>, left STRING, right STRING)",
-              "expectedNum" -> "3",
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        BpeMerge(exprs(0), exprs(1), exprs(2))
-      })
   }
 }

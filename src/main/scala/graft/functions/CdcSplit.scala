@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -65,14 +63,5 @@ object CdcSplit {
     }
     out += UTF8String.fromString(str.substring(start, n))
     new GenericArrayData(out.toArray)
-  }
-
-  /** Register `cdc_split` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[CdcSplit].getName, "cdc_split")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cdc_split"),
-      info,
-      (exprs: Seq[Expression]) => CdcSplit(exprs.head))
   }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -76,14 +74,5 @@ object DotProduct {
       i += 1
     }
     acc
-  }
-
-  /** Register `dot_f32` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[DotProduct].getName, "dot_f32")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_f32"),
-      info,
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)))
   }
 }

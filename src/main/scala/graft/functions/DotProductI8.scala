@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
 
@@ -68,14 +66,5 @@ object DotProductI8 {
       i += 1
     }
     acc
-  }
-
-  /** Register `dot_i8` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[DotProductI8].getName, "dot_i8")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dot_i8"),
-      info,
-      (exprs: Seq[Expression]) => DotProductI8(exprs(0), exprs(1)))
   }
 }

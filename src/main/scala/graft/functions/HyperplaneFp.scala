@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
@@ -88,14 +86,5 @@ object HyperplaneFp {
       j += 1
     }
     fp
-  }
-
-  /** Register `hyperplane_fp` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[HyperplaneFp].getName, "hyperplane_fp")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hyperplane_fp"),
-      info,
-      (exprs: Seq[Expression]) => HyperplaneFp(exprs(0), exprs(1)))
   }
 }

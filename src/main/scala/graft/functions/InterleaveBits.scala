@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -64,13 +62,4 @@ object InterleaveBits {
   }
 
   def morton(x: Long, y: Long): Long = spread(x) | (spread(y) << 1)
-
-  /** Register `interleave_bits` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[InterleaveBits].getName, "interleave_bits")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("interleave_bits"),
-      info,
-      (exprs: Seq[Expression]) => InterleaveBits(exprs(0), exprs(1)))
-  }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -92,14 +90,5 @@ object SqDist {
       i += 1
     }
     acc
-  }
-
-  /** Register `sq_dist` in a session's function registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[SqDist].getName, "sq_dist")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sq_dist"),
-      info,
-      (exprs: Seq[Expression]) => SqDist(exprs(0), exprs(1)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
@@ -83,8 +83,4 @@ object TopKAgg {
     val fn = udaf(TopKPayloadAgg(k), ExpressionEncoder[(Double, Long, Long, Long)]())
     (score: Column, id: Column, p1: Column, p2: Column) => fn(score, id, p1, p2)
   }
-
-  /** Spec hook: register as a SQL function name in a session. */
-  def register(spark: SparkSession, name: String, k: Int): Unit =
-    spark.udf.register(name, udaf(TopKAgg(k), ExpressionEncoder[(Double, Long)]()))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,15 +60,5 @@ object UniqueWordsRatio {
       i += 1
     }
     seen.size.toDouble / total
-  }
-
-  /** Register `unique_words_ratio` in a session's function registry so SQL
-    * and `expr(...)` can call it. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val info = new ExpressionInfo(classOf[UniqueWordsRatio].getName, "unique_words_ratio")
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("unique_words_ratio"),
-      info,
-      (exprs: Seq[Expression]) => UniqueWordsRatio(exprs.head))
   }
 }

@@ -388,11 +388,10 @@ object Dedup {
     // that dominates at scale — while the fused walk emits chunk substrings
     // directly inside codegen. Same boundary rule as the oracle; hashing
     // and dedup grouping stay relational. (Measured at sf0.1: 4.9 s → 0.6 s.)
-    graft.functions.CdcSplit.register(s)
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       .filter(col("text").rlike("^[\\x01-\\x7f]*$"))
     val chunks = docs
-      .select(col("doc_id"), explode(expr("cdc_split(text)")).as("chunk"))
+      .select(col("doc_id"), explode(graft.functions.cdc_split(col("text"))).as("chunk"))
       .select(col("doc_id"), md5(col("chunk").cast("binary")).as("chunk_hash"),
               length(col("chunk")).cast("long").as("chunk_len"))
     chunks.groupBy(col("chunk_hash"))
@@ -455,7 +454,7 @@ object Dedup {
   }
 
   /** d8's converged component labels, staged per (session, sf-dir) like
-    * [[d3Pairs]] (optimization r15): the min-label fixpoint loop is an
+    * [[d3Pairs]]: the min-label fixpoint loop is an
     * iterative chain of join+aggregate+checkpoint rounds, and the cleaning
     * funnel consumes the SAME cluster table through two independent legs —
     * c1's dedup survivors (via c3→c13) and c11's cluster-anchored split —

@@ -346,59 +346,54 @@ object Pipeline {
       |       ELSE 'test' END AS split
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  /** C9: BLOOM-PRUNED decontamination — t14's gram-overlap contamination
-    * relation computed behind a broadcast bloom pre-filter, the 100 TB
-    * form of the decontamination shuffle. t14's scale note already says
-    * the eval suite is bounded-but-NOT-broadcastable (millions of grams);
-    * what CAN ship to every executor is its fixed-size bloom: `bloom_filter_agg`
-    * over the eval grams (Spark's own runtime-filter sketch machinery,
-    * user-registered via [[graft.functions.BloomBridge]] — the same
-    * composition Catalyst's `InjectRuntimeFilter` builds for shuffle-join
-    * pruning, stated explicitly as an operator), inlined once as a scalar
-    * subquery, probed with `might_contain(sketch, xxhash64(gram))`
-    * on the training side BEFORE the gram shuffle. Catalyst pushes the
-    * probe below the join into the train-side scan, so only grams that
-    * MIGHT match ever enter the exchange; the exact join over survivors
-    * then makes the result IDENTICAL to t14 (blooms have no false
-    * negatives — false positives only cost shuffle rows, bounded by the
-    * `spark.graft.bloomDecontam{Items,Bits}` sizing: 10M bits ≈ 1.2 MB
-    * broadcast, <1% FP at 1M eval grams). Measured at sf0.01: 25,943
-    * train gram rows → 205 entering the join (99.2% of the shuffle
-    * pruned); oracle = t14's exact SQL, unchanged by construction.
-    *
-    * Expressed via `spark.sql` because `might_contain` requires its
-    * sketch operand to be a constant or scalar subquery (it inlines the
-    * built sketch as a literal into the codegen'd probe filter and
-    * deserializes it once per task — exactly the build-once semantics the
-    * pre-filter needs). */
   /** The ONE sizing source for the decontamination bloom — read by BOTH the
     * batch gate (c9's scalar-subquery sketch) and the online gate (x37's
     * frozen literal sketch), so retuning the knobs can never silently
-    * diverge the two paths' FP rates (round-10 verdict finding #3: x37
-    * hardcoded the same values as literals). Sizing only moves the FP
-    * rate — both gates exact-verify survivors, so correctness is
-    * sizing-independent by construction (spec-pinned in StreamingSpec). */
+    * diverge the two paths' FP rates. Sizing only moves the FP rate — both
+    * gates exact-verify survivors, so correctness is sizing-independent by
+    * construction (spec-pinned in StreamingSpec). */
   private[graft] def bloomDecontamSizing(s: SparkSession): (Long, Long) =
     (s.conf.get("spark.graft.bloomDecontamItems", "1048576").toLong,
      s.conf.get("spark.graft.bloomDecontamBits", "10485760").toLong)
 
+  /** C9: BLOOM-PRUNED decontamination — t14's gram-overlap contamination
+    * relation computed behind a broadcast bloom pre-filter, the 100 TB
+    * form of the decontamination shuffle. t14's scale note already says
+    * the eval suite is bounded-but-NOT-broadcastable (millions of grams);
+    * what CAN ship to every executor is its fixed-size bloom:
+    * `bloom_filter_agg` over the eval grams (Spark's own runtime-filter
+    * sketch machinery — the same composition Catalyst's
+    * `InjectRuntimeFilter` builds for shuffle-join pruning, stated
+    * explicitly as an operator), inlined once as a scalar subquery
+    * (`Dataset.scalar()`), probed with `might_contain(sketch,
+    * xxhash64(gram))` on the training side BEFORE the gram shuffle.
+    * Catalyst pushes the probe below the join into the train-side scan, so
+    * only grams that MIGHT match ever enter the exchange; the exact join
+    * over survivors then makes the result IDENTICAL to t14 (blooms have no
+    * false negatives — false positives only cost shuffle rows, bounded by
+    * the `spark.graft.bloomDecontam{Items,Bits}` sizing: 10M bits ≈ 1.2 MB
+    * broadcast, <1% FP at 1M eval grams). Measured at sf0.01: 25,943
+    * train gram rows → 205 entering the join (99.2% of the shuffle
+    * pruned); oracle = t14's exact SQL, unchanged by construction.
+    *
+    * `might_contain` requires its sketch operand to be a constant or a
+    * scalar subquery: Spark builds the sketch once, inlines it as a
+    * literal into the codegen'd probe filter and deserializes it once per
+    * task — exactly the build-once semantics the pre-filter needs. */
   def c9_bloom_decontam(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomBridge.register(s)
     val (items, bits) = bloomDecontamSizing(s)
-    TextAnalysis.docGramsStr(s, dir, 3).createOrReplaceTempView("c9_grams")
-    s.sql(
-      s"""SELECT tr.doc_id AS train_doc, ev.doc_id AS eval_doc,
-         |       count(DISTINCT tr.gram) AS n_shared
-         |FROM c9_grams tr
-         |JOIN c9_grams ev ON ev.gram = tr.gram
-         |WHERE ev.doc_id % 100 = 0 AND tr.doc_id % 100 <> 0
-         |  AND might_contain(
-         |        (SELECT bloom_filter_agg(xxhash64(gram), CAST($items AS BIGINT),
-         |                          CAST($bits AS BIGINT))
-         |         FROM c9_grams WHERE doc_id % 100 = 0),
-         |        xxhash64(tr.gram))
-         |GROUP BY 1, 2
-         |ORDER BY 1, 2""".stripMargin)
+    val grams = TextAnalysis.docGramsStr(s, dir, 3)
+    val ev = grams.filter(col("doc_id") % 100 === 0)
+    val sketch = ev
+      .select(graft.functions.bloom_filter_agg(xxhash64(col("gram")), lit(items), lit(bits)))
+      .scalar()
+    val tr = grams.filter(col("doc_id") % 100 =!= 0)
+      .filter(graft.functions.might_contain(sketch, xxhash64(col("gram"))))
+    tr.select(col("doc_id").as("train_doc"), col("gram"))
+      .join(ev.select(col("doc_id").as("eval_doc"), col("gram")), Seq("gram"))
+      .groupBy(col("train_doc"), col("eval_doc"))
+      .agg(count_distinct(col("gram")).as("n_shared"))
+      .orderBy("train_doc", "eval_doc")
   }
 
   /** C10: the SPLIT-LEAKAGE AUDIT — the eval-integrity check every serious
@@ -501,9 +496,9 @@ object Pipeline {
 
   /** C12: the SPLIT-DELTA LEDGER — the release-engineering consequence of
     * adopting c11's cluster-anchored split over c6's naive doc-hash split
-    * (the round-10 verdict's missing audit leg of the c6 → c10 → c11
-    * chain): re-splitting moves every doc whose cluster anchor hashes into
-    * a different bucket than its own id, and a release review needs the
+    * (the audit leg of the c6 → c10 → c11 chain): re-splitting moves
+    * every doc whose cluster anchor hashes into a different bucket than
+    * its own id, and a release review needs the
     * per-doc ledger of those moves plus the ONE transition that
     * invalidates frozen eval history — a c6 `test` doc landing in c11
     * `train` (its content, published with an earlier eval freeze, would
@@ -590,8 +585,8 @@ object Pipeline {
   /** The c14 trainer's two hyper-parameters, single-sourced for the Spark
     * chain and the unrolled oracle (the Sq8RerankDepthDefault discipline).
     * Both were decided by a MEASURED sweep (DuckDB CTE-literal sweep on
-    * the real tables, then replicated-grid numpy confirmation; round-12
-    * notes):
+    * the real tables, then replicated-grid numpy confirmation;
+    * NOTES_r12.md):
     *
     *   - iterations 8: recall-at-half-budget on the trusted slice climbs
     *     4 → 8 (sf0.1: 0.566 → 0.662) and plateaus beyond (12: 0.662,
@@ -609,7 +604,7 @@ object Pipeline {
   private[graft] val QualityGdEta = 32
 
   /** C14: the MODEL-BASED QUALITY GATE — the one standard LLM-pipeline
-    * stage the c-family still lacked (round-11 verdict lead item): a
+    * stage of the c-family: a
     * TRAINED classifier scoring every document, DCLM / FineWeb-Edu class.
     * The c-family's quality gate so far is t2's arithmetic heuristic; the
     * modern pipeline trains a linear model whose positives are a TRUSTED
@@ -714,10 +709,10 @@ object Pipeline {
     val r6 = QUtil.round6 _
     val eta = lit(QualityGdEta.toDouble)
     val grams = hashedGramBuckets(Tables.documents(s, dir))
-    // doc_id-ALIGNED staging (optimization r15, guide §2.4 "remove shuffles
-    // outright"): every consumer below — labels' groupBy, feats' join, each
-    // iteration's margins groupBy(doc_id) and gradient join — clusters on
-    // doc_id, and localCheckpoint PRESERVES the checkpointed plan's output
+    // doc_id-ALIGNED staging (removes shuffles outright): every consumer
+    // below — labels' groupBy, feats' join, each iteration's margins
+    // groupBy(doc_id) and gradient join — clusters on doc_id, and
+    // localCheckpoint PRESERVES the checkpointed plan's output
     // partitioning, so one compact repartition of the aggregated (doc,
     // bucket) rows here removes the per-iteration Exchange over the feature
     // table (8 iterations × 2 ops each: measured 16 → 1 feats-sized
@@ -761,11 +756,10 @@ object Pipeline {
         .groupBy(col("doc_id")).agg(sum((col("x") * col("w")).cast(DEC)).as("sd"))
         .crossJoin(broadcast(bias))
         .select(col("doc_id"), r6(col("sd").cast("double") + col("bias")).as("m"))
-    // WEIGHTS + BIAS in ONE checkpointed ≤257-row relation per iteration
-    // (optimization r16, r15 verdict item 3 "fuse adjacent 1-row checkpoint
-    // barriers"): r15 checkpointed w and bias separately — two eager job
-    // barriers per iteration whose scheduling floor, not data, dominates at
-    // bench SF (the 32-vs-8-core ratio ≈ 1 finding). The fused relation
+    // WEIGHTS + BIAS in ONE checkpointed ≤257-row relation per iteration:
+    // checkpointing w and bias separately costs two eager job barriers per
+    // iteration, whose scheduling floor, not data, dominates at bench SF
+    // (32- and 8-core times match). The fused relation
     // tags the bias row with a NULL bucket; one barrier per iteration
     // computes both branches inside one job. The per-iteration bias
     // checkpoint REASON is unchanged (un-checkpointed, bias_i's lineage
@@ -1048,8 +1042,8 @@ object Pipeline {
 
   /** C15: the RELEASE-MANIFEST INCREMENT — the settled-vs-delta shape
     * (text d12/d13, postings t30, vectors s18/x34, media m9) applied to
-    * the release relation itself, closing the c-family's increment story
-    * (round-11 verdict item 4): a production release pipeline does not
+    * the release relation itself, closing the c-family's increment story:
+    * a production release pipeline does not
     * recompute c13 from scratch when a crawl increment arrives — it folds
     * the increment into the shipped manifest and publishes the DELTA
     * LEDGER: one row per manifest CHANGE.
@@ -1316,12 +1310,12 @@ object Pipeline {
     * train tokens, ranks contiguous 1..n per stage) — spec-pinned, the
     * budget-identity discipline c15 established. */
   def c17_curriculum(s: SparkSession, dir: String): DataFrame =
-    // the presentation orderBy lives HERE, not in curriculumOver
-    // (optimization r15): curriculumOver's output is also STAGING input —
-    // c18's packing and c19Settled's checkpoint neither need nor keep a
-    // global order, and materializing a sorted plan would pay a full sort
-    // exchange for nothing (guide §2.4: "an orderBy used only to make
-    // output deterministic" is an accidental shuffle).
+    // the presentation orderBy lives HERE, not in curriculumOver:
+    // curriculumOver's output is also STAGING input — c18's packing and
+    // c19Settled's checkpoint neither need nor keep a global order, and
+    // materializing a sorted plan would pay a full sort exchange for
+    // nothing (an orderBy used only to make output deterministic is an
+    // accidental shuffle).
     c17CurriculumUnordered(s, dir).orderBy("doc_id")
 
   /** The c17 relation WITHOUT the presentation sort — what every staging
@@ -1348,7 +1342,7 @@ object Pipeline {
           .cast("long"))
       .withColumn("h", pmod(col("doc_id") * lit(1103515245L) + lit(12345L),
                             lit(2147483648L)))
-      // materialized (optimization r15): m fans out to THREE consumers
+      // materialized: m fans out to THREE consumers
       // below (sOff, total, staged) and DataFrames do not share subplans —
       // un-checkpointed, the whole upstream universe chain (for c17: the
       // c16 gated-manifest join tree) executed once PER CONSUMER. One
@@ -1385,7 +1379,7 @@ object Pipeline {
     * input columns (minus h's bucket scaffolding) plus `rank_in_stage`. */
   private[graft] def rankWithinStage(staged: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // materialized (optimization r15): hb feeds both the per-(stage, hbkt)
+    // materialized: hb feeds both the per-(stage, hbkt)
     // count relation and the ranking join below — un-checkpointed, the
     // staged input's window/join chain executed twice per call.
     val hb = staged.withColumn("hbkt", floor(col("h") / lit(8388608L)).cast("long"))
@@ -1494,7 +1488,7 @@ object Pipeline {
     * exists anywhere, which is the re-weight contract c18's scaladoc
     * states and QueriesSmokeSpec pins.
     *
-    * INVARIANT (ADVICE r14): every input row must have `n_tokens ≥ 1`.
+    * INVARIANT: every input row must have `n_tokens ≥ 1`.
     * The chunk explosion below computes `sequence(off div 128,
     * (off+n_tokens−1) div 128)`; a zero-token doc sitting exactly on a
     * shard boundary would make the upper bound one LESS than the lower,
@@ -1511,7 +1505,7 @@ object Pipeline {
     import org.apache.spark.sql.expressions.Window
     val L = 128L
     val W = TextAnalysis.packBucketWidth
-    // materialized (optimization r15): cur fans out to THREE consumers
+    // materialized: cur fans out to THREE consumers
     // (offsets, totals, the offset-attach + chunk explosion) — for c18 the
     // un-checkpointed input was the ENTIRE c16→c17 curriculum chain,
     // recomputed once per consumer (× the three-fold fan-out already
@@ -1573,11 +1567,10 @@ object Pipeline {
   /** The SETTLED TERMINAL ARTIFACTS staged per session — what a release
     * pipeline keeps warm between increments at the funnel's END (the
     * c15SettledIndex discipline extended to c17/c18, closing the one gap
-    * where the settled-vs-delta story stopped — round-13 verdict lead
-    * item): the shipped curriculum over the settled gated train manifest
-    * (frozen c14 model — an increment does NOT retrain the gate; model
-    * refresh is a separate release event, the x39–x41 frozen-artifact
-    * convention), its score-grid histogram, its nine decile-boundary
+    * where the settled-vs-delta story stopped): the shipped curriculum over
+    * the settled gated train manifest (frozen c14 model — an increment
+    * does NOT retrain the gate; model refresh is a separate release event,
+    * the x39–x41 frozen-artifact convention), its score-grid histogram, its nine decile-boundary
     * positions, and its shard manifest. */
   private[graft] def c19Settled(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
@@ -1620,7 +1613,7 @@ object Pipeline {
     * point pass runs only over the ≤9 crossing buckets, PARTITIONED by k.
     * Boundaries whose rank exceeds the universe (n < 10) are absent —
     * every consumer treats an absent boundary as an unclearable one, so
-    * the degenerate regime stays total (the ADVICE r13 lesson). */
+    * the degenerate regime stays total. */
   private[graft] def decileBounds(hist: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hb = hist.withColumn("bkt",
@@ -1695,7 +1688,7 @@ object Pipeline {
   }
 
   /** c19's ledger fold from a PRECOMPUTED c15 manifest ledger — factored
-    * (r15) so the c20 release composite can thread ONE c15 fold through
+    * so the c20 release composite can thread ONE c15 fold through
     * the manifest rollup and the curriculum fold instead of running the
     * manifest increment twice. */
   private[graft] def c19CurriculumDeltaFrom(s: SparkSession, dir: String,
@@ -1718,8 +1711,8 @@ object Pipeline {
   /** The c19 boundary-sweep fold CORE over explicit relations — the exact
     * dataflow c19's scaladoc derives, factored free of the table wiring so
     * `C19FoldPropertySpec` can drive it with randomized universes/deltas
-    * against the plain recompute (r14 verdict #3; the curriculumOver /
-    * packShards one-body discipline). Inputs: the settled curriculum
+    * against the plain recompute (the curriculumOver / packShards
+    * one-body discipline). Inputs: the settled curriculum
     * `cur0` (doc_id, stage, n_tokens, score, si), its score-grid
     * histogram `hist0` (si, c), its boundary positions `b0` (k, si, ck —
     * [[decileBounds]] of hist0), the increment's `enters`
@@ -1811,7 +1804,7 @@ object Pipeline {
       .localCheckpoint()) // the O(delta + boundary-shift) ledger, consumed 4×
 
   /** c19's shard repack from a PRECOMPUTED curriculum ledger — factored
-    * (r15) for the c20 release composite, which computes the ledger once
+    * for the c20 release composite, which computes the ledger once
     * and threads it through both the curriculum rollup and this repack. */
   private[graft] def c19ShardDeltaFrom(s: SparkSession, dir: String,
                                        ledger: DataFrame): DataFrame = {
@@ -1886,7 +1879,7 @@ object Pipeline {
 
   /** The stage-skew READING's batch finisher over any per-stage arrival
     * counts `(stage, n_arrived)` — shipped inventory join, zero-fill,
-    * round4 shares, skew — factored to ONE body (r15) shared by the x42
+    * round4 shares, skew — factored to ONE body shared by the x42
     * streaming monitor's final reading and [[c19_fold_gate]]'s batch
     * consumption of it, so the signal the gate thresholds can never
     * drift from the signal the door emits (the frozenMarginSi/stageIdx
@@ -1947,8 +1940,8 @@ object Pipeline {
       .groupBy(col("stage")).agg(count(lit(1)).as("n_arrived"))
   }
 
-  /** C19-GATE: the SKEW-GATED FOLD DECISION — the x42 → c19 loop closed
-    * (r14 verdict #2): x42 emits the staleness reading (arriving traffic's
+  /** C19-GATE: the SKEW-GATED FOLD DECISION — the x42 → c19 loop closed:
+    * x42 emits the staleness reading (arriving traffic's
     * stage mix vs the shipped curriculum's), and this query CONSUMES it as
     * the compaction-scheduling decision every decide-at-the-door /
     * compact-at-night pipeline needs: if the mix skewed past the
@@ -2240,7 +2233,7 @@ object Pipeline {
        |ORDER BY 1, 2""".stripMargin
 
   /** C20: the RELEASE-INCREMENT COMPOSITE — the nightly compaction event
-    * itself (r14 verdict lead item): every asset family in the repo has an
+    * itself: every asset family in the repo has an
     * O(delta) settled-vs-delta increment (text d12/d13, postings t30,
     * vectors s18/c8, media m9, manifest c15, curriculum/shards c19), each
     * verified in isolation; a production release applies ONE crawl

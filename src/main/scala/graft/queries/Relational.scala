@@ -844,11 +844,10 @@ object Relational {
     * same 5-step magic-mask spread in SQL. Both inputs are < 2³¹, so the
     * code is non-negative and signed-BIGINT engines order it identically. */
   def q25_zorder(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.InterleaveBits.register(s)
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"),
         (col("event_id") % 1024).as("tbucket"))
-      .withColumn("z", expr("interleave_bits(user_id, tbucket)"))
+      .withColumn("z", graft.functions.interleave_bits(col("user_id"), col("tbucket")))
       .select(col("event_id"), col("z"))
       .orderBy("z", "event_id")
   }

@@ -55,16 +55,8 @@ object Similarity {
     * hash equality sets `spark.graft.exactDecimals=false` and gets the
     * plain-double fold; `SimilaritySpec` asserts the two paths agree on the
     * result set. */
-  private def exactDecimals(s: SparkSession): Boolean = {
-    val exact = s.conf.get("spark.graft.exactDecimals", "true").toBoolean
-    // the production path calls the native codegen'd expressions
-    if (!exact) {
-      graft.functions.DotProduct.register(s)
-      graft.functions.SqDist.register(s)
-      graft.functions.HyperplaneFp.register(s)
-    }
-    exact
-  }
+  private def exactDecimals(s: SparkSession): Boolean =
+    s.conf.get("spark.graft.exactDecimals", "true").toBoolean
 
   /** Dot product of two float-array columns — exact-decimal accumulation
     * (order-independent, the oracle default) or the native codegen'd
@@ -78,7 +70,7 @@ object Similarity {
         lit(0).cast(DEC),
         (acc, x) => (acc + x).cast(DEC)).cast("double")
     else
-      call_function("dot_f32", a, b)
+      graft.functions.dot_f32(a, b)
 
   /** S1 brute-force cosine top-k: queries = vec_id ≡ 0 (mod 100), k = 5. */
   def s1_ann_topk(s: SparkSession, dir: String): DataFrame = {
@@ -144,10 +136,9 @@ object Similarity {
     * `hyperplane_fp` expression — one fused pass over the raw buffer for
     * all bits, bit-identical to the composed per-bit double folds it
     * replaces ([[graft.functions.HyperplaneFp]]; equality asserted over
-    * the corpus in `SimilaritySpec`). Callers on that path registered the
-    * function via [[exactDecimals]]. */
+    * the corpus in `SimilaritySpec`). */
   private def fingerprintBits(emb: Column, exact: Boolean, nbits: Int): Column =
-    if (!exact) call_function("hyperplane_fp", emb, lit(nbits))
+    if (!exact) graft.functions.hyperplane_fp(emb, lit(nbits))
     else (0 until nbits).map { j =>
       val (a, b) = hyper(j)
       def plane(i: Column) = ((lit(a) * i + lit(b)) % 1009).cast("double") / 1009.0 - 0.5
@@ -339,7 +330,7 @@ object Similarity {
         }),
         lit(0).cast(DEC), (acc, x) => (acc + x).cast(DEC)).cast("double")
     else
-      call_function("sq_dist", a, b)
+      graft.functions.sq_dist(a, b)
 
   /** Rebuild (cluster, cemb array) rows from long-form (cluster, i, cv). */
   private def toArrays(longForm: DataFrame): DataFrame =
@@ -407,23 +398,21 @@ object Similarity {
   /** Nearest-centroid assignment (squared euclidean, ties to the lower
     * cluster id). Keeps all input columns plus (cluster, cemb).
     *
-    * Optimization r16 (guide §1.1 first-principles: the argmin over a
-    * bounded centroid set needs NO shuffle at all): the k centroid rows are
-    * folded to ONE array row (sorted ascending by cluster id) and the
-    * per-vector argmin is a pure `aggregate()` projection over that array —
-    * a strict `<` fold over ascending cluster ids IS the lexicographic
-    * min(dist, cluster) the previous forms computed. Zero Exchange; the
-    * N×k distance arithmetic is unchanged but runs inside one scan
-    * projection instead of a fan-out. History: the r14 `row_number` window
-    * shuffled N payload-carrying rows and sorted them; the r15
-    * `min(struct(dist, cluster))` groupBy shuffled narrowly but re-scanned
-    * `emb` and added two joins, regressing the whole IVF family 1.2–2.0×
-    * (r15 verdict item 1). This form has one scan, no exchange, no join.
+    * The argmin over a bounded centroid set needs no shuffle: the k
+    * centroid rows are folded to ONE array row (sorted ascending by cluster
+    * id) and the per-vector argmin is a pure `aggregate()` projection over
+    * that array — a strict `<` fold over ascending cluster ids IS the
+    * lexicographic min(dist, cluster). One scan, no exchange, no join; a
+    * `row_number` window (N payload-carrying rows shuffled and sorted) and
+    * a `min(struct(dist, cluster))` groupBy (a re-scan of `emb` plus two
+    * joins) both cost the IVF family 1.2–2.0× more.
     *
-    * Precondition (unchanged from r14): callers pass vec_id-unique
-    * relations. The fold computes each ROW's argmin, so duplicate vec_ids
-    * would each keep their own row (the r14 window kept exactly one) —
-    * all 9 call sites pass unique-vec_id relations by construction. */
+    * Preconditions: callers pass vec_id-unique relations. The fold
+    * computes each ROW's argmin, so duplicate vec_ids would each keep their
+    * own row — all 9 call sites pass unique-vec_id relations by
+    * construction. An empty centroid relation fails the query with
+    * `INVALID_ARRAY_INDEX_IN_ELEMENT_AT` (ANSI `element_at` on the empty
+    * array) instead of yielding NULL clusters (`AssignToNearestSpec`). */
   private[graft] def assignToNearest(emb: DataFrame, centroids: DataFrame, ex: Boolean): DataFrame = {
     val centArr = centroids
       .agg(array_sort(collect_list(struct(col("cluster"), col("cemb")))).as("_cs"))
@@ -677,9 +666,9 @@ object Similarity {
     * cell assignment, refined residual codebook, the full residual-subspace
     * candidate-distance table, and the encoded corpus codes. Four queries
     * consume it (s7, s10, s13, s16's IVF dense leg) and s14/c2 share its
-    * coarse half via [[trainCoarse]]'s own staging; before round 7 each
-    * re-ran training + assignment + residual encode from scratch (~33 s of
-    * the 174-query bench). A production index is TRAINED ONCE and served
+    * coarse half via [[trainCoarse]]'s own staging; unstaged, each re-ran
+    * training + assignment + residual encode from scratch (~33 s of the
+    * 174-query bench). A production index is TRAINED ONCE and served
     * many times — it is staged per (session, dir, precision) like
     * `s2Pairs`. The checkpoint-boundary concern that kept `bm25Postings`
     * lazy does not apply here: every staged piece was ALREADY
@@ -793,11 +782,10 @@ object Similarity {
   /** The full single-probe IVF-PQ ADC chain as SQL CTEs, through the
     * pre-rank scored relation `sc (q_id, cell, n_id, score_micro)` —
     * shared by the s7 (rank ≤ 5) and s13 (shortlist ≤ 10 → exact re-rank)
-    * oracles. The query-side modulus is a TEMPLATE PARAMETER (round-8
-    * advice: the old post-hoc `.replace` on CTE text would silently no-op
-    * if the spliced predicate were ever reworded — the modulus is now part
-    * of the generated text, so a drift is a syntax error, not a silent
-    * wrong-contract oracle). */
+    * oracles. The query-side modulus is a TEMPLATE PARAMETER, part of the
+    * generated text, so a drift is a syntax error, not a silent
+    * wrong-contract oracle (a post-hoc `.replace` on CTE text would
+    * silently no-op if the spliced predicate were ever reworded). */
   private def ivfpqAdcCtesAt(qmod: Int): String =
     s"""$elemsSqlCte, $coarseTrainCtes, asg AS (
       |  SELECT vec_id, cluster AS cell FROM (
@@ -846,10 +834,10 @@ object Similarity {
     * downstream CTEs can grade any probe width ≤ `nprobe` from ONE chain
     * (`WHERE probe = 1` is bit-identical to the single-probe chain: a
     * query's probe-1 cell is its corpus assignment and the folds are
-    * exact-decimal — the equivalence [[s10_ivfpq_recall]]'s oracle has
-    * hash-proven since round 5). Shared by the s10 audit and the
-    * multi-probe SERVING oracles (s16-ivf, s17-ivf, s19) since round 9's
-    * `spark.graft.servingNprobe` default moved serving to 2 probes. */
+    * exact-decimal — the equivalence [[s10_ivfpq_recall]]'s oracle
+    * hash-checks). Shared by the s10 audit and the multi-probe SERVING
+    * oracles (s16-ivf, s17-ivf, s19), which serve `spark.graft.servingNprobe`
+    * (default 2) probes. */
   private def ivfpqAdcCtesMp(qmod: Int, nprobe: Int): String =
     s"""$elemsSqlCte, $coarseTrainCtes, asg AS (
       |  SELECT vec_id, cluster AS cell FROM (
@@ -1109,7 +1097,6 @@ object Similarity {
     * corpus prune applies. */
   def c2_semdedup(s: SparkSession, dir: String): DataFrame = {
     val ex = exactDecimals(s)
-    graft.functions.DotProduct.register(s) // stage-1 prefilter is always native
     // The scaling knob: production holds the per-cell pair block constant
     // by growing k with the corpus (k = n / target cell size — the
     // SemDeDup deployment contract). MEASURED at sf1 (STRESS_sf1.md round
@@ -1147,7 +1134,7 @@ object Similarity {
       col("embedding").as("eb"), col("dist").as("db"), col("n2").as("nb2"))
     val removed = aSide.join(bSide, Seq("cell")).filter(col("va") < col("vb"))
       // stage 1: cheap native prefilter with a provably-safe margin
-      .filter(call_function("dot_f32", col("ea"), col("eb"))
+      .filter(graft.functions.dot_f32(col("ea"), col("eb"))
         / sqrt(col("na2") * col("nb2")) >= 0.3999)
       // stage 2: exact-decimal verify on the bounded survivors
       .withColumn("cosine",
@@ -1210,7 +1197,7 @@ object Similarity {
     * the per-cell pair block constant, which makes the two exhaustive
     * passes c2 inherits from the harness the next quadratic — Lloyd
     * training touches n·k distances per iteration and assignment another
-    * n·k (measured at sf1 round 6: 349.8 s exact vs 9.4 s at k = 100).
+    * n·k (measured at sf1: 349.8 s exact vs 9.4 s at k = 100).
     * Production replaces both:
     *
     *  1. TRAIN ON A BOUNDED SAMPLE — the coarse quantizer learns cluster
@@ -1244,7 +1231,6 @@ object Similarity {
     * hash-equality for the production shape. */
   def c2_semdedup_ann(s: SparkSession, dir: String): DataFrame = {
     val ex = exactDecimals(s)
-    graft.functions.DotProduct.register(s) // stage-1 prefilter is always native
     val k = s.conf.get("spark.graft.semdedupK", "10").toInt
     val m = semdedupSample(s)
     val g = s.conf.get("spark.graft.semdedupRouteCells", "4").toInt
@@ -1267,7 +1253,7 @@ object Similarity {
     * vector near a pilot boundary finds its true centroid in the second
     * probe. The default p = 1 was DECIDED BY [[c2_prune_audit]]'s
     * OUTCOME-level measurement at the production shape (sf1, k = 100,
-    * g = 10), which REFUTED the round-6 cell-level choice of p = 2:
+    * g = 10), which refuted a cell-level choice of p = 2:
     * cell agreement climbs steeply with probes (32% → 47.8% → 59.8% for
     * p = 1/2/3) but the kept/dropped verdict — the only thing SemDeDup
     * ships — is FLAT at 99.15% → 99.25% → 99.38% (drop-set Jaccard
@@ -1476,7 +1462,6 @@ object Similarity {
     * sampled-eval class as s19. */
   def c2_prune_audit(s: SparkSession, dir: String): DataFrame = {
     val ex = exactDecimals(s)
-    graft.functions.DotProduct.register(s) // semdedupPrune's native prefilter
     val k = s.conf.get("spark.graft.semdedupK", "10").toInt
     val m = semdedupSample(s)
     val g = s.conf.get("spark.graft.semdedupRouteCells", "4").toInt
@@ -1616,7 +1601,6 @@ object Similarity {
     * re-ranks only the survivors (≈3-30 per query, duplicate cliques
     * included by the margin). */
   def s11_knn_graph(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val decDot = (a: Column, b: Column) =>
       aggregate(
         zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(DEC)),
@@ -1640,7 +1624,7 @@ object Similarity {
             Seq("label"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
-        (call_function("dot_f32", col("qe"), col("ne"))
+        (graft.functions.dot_f32(col("qe"), col("ne"))
           / sqrt(col("qn2") * col("nn2"))).as("dcos"))
       .withColumn("rk_d", row_number().over(
         byQ.orderBy(col("dcos").desc, col("n_id"))))
@@ -1720,7 +1704,6 @@ object Similarity {
     * identical double dcos) ahead of the ranking exchange. */
   def s11_knn_graph_sharded(s: SparkSession, dir: String): DataFrame = {
     val ex = exactDecimals(s)
-    graft.functions.DotProduct.register(s) // stage-1 prefilter is always native
     val b = s.conf.get("spark.graft.s11BandBits", "8").toInt
     // The fingerprint honors the production-precision switch exactly like
     // s2's — the 2b×64 projection folds are the dominant LINEAR cost at
@@ -1748,7 +1731,7 @@ object Similarity {
             Seq("label", "k", "bv"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
-        (call_function("dot_f32", col("qe"), col("ne"))
+        (graft.functions.dot_f32(col("qe"), col("ne"))
           / sqrt(col("qn2") * col("nn2"))).as("dcos"))
       .distinct() // both-bands collisions: identical double, exact dedupe
       .withColumn("rk_d", row_number().over(
@@ -2799,7 +2782,7 @@ object Similarity {
     * index's recall loss (s10's measurement seen through the eval lens) —
     * the harness measures real systems over data with no signal in it,
     * which is precisely why the report prints the number instead of
-    * assuming one. Since round 9 the report grades the probe lever
+    * assuming one. The report grades the probe lever
     * directly (p ∈ {1, 2, 4} at the serving depth): at sf0.1 the dense
     * rows read 0.285 / 0.42 / 0.525 — the deploy-gate measurement behind
     * [[servingNprobe]] = 2 and [[servingRerankDepth]] = 200, under which
@@ -2807,7 +2790,7 @@ object Similarity {
     * brute-fused bar (fused trails dense because RRF dilutes with the
     * zero-signal lexical leg — this corpus's honest ceiling). The
     * `_p2_d10` rows keep the DEPTH axis in the gated artifact: they
-    * serve the rounds-5–8 depth-10 shortlist at the default probe
+    * serve a depth-10 shortlist at the default probe
     * width, so the report itself shows why the depth sweep — not more
     * probes — was the recall fix. */
   def s19_retrieval_eval(s: SparkSession, dir: String): DataFrame = {
@@ -3116,17 +3099,14 @@ object Similarity {
     * and the registered oracle strings both derive from these constants,
     * so the pinned-default contract (`servingNprobe`'s scaladoc: oracles
     * pin the DEFAULT; overriding a knob trades oracle hash-equality for a
-    * different recall/cost point) cannot drift between the two sides
-    * (round-10 advice: the oracles previously hardcoded 50 as a separate
-    * literal). */
+    * different recall/cost point) cannot drift between the two sides. */
   private[graft] val Sq8RerankDepthDefault = 50
 
   /** The depth-∞ sentinel for the SQ8 serving family — the ONE constant
     * shared by x38's registered oracle (`s22SqlAt(Sq8DepthUnbounded, …)`)
     * and its spec batch twin (`ivfSq8Served(…, Sq8DepthUnbounded)`), so
     * the "shortlist depth at corpus scale" posture can never silently
-    * diverge between the two sides (round-11 advice: the oracle spliced a
-    * literal 1,000,000 while the spec used Int.MaxValue). Int.MaxValue is
+    * diverge between the two sides. Int.MaxValue is
     * exact in both engines (`q_rank <= 2147483647` over a BIGINT
     * row_number); the stated corpus-size assumption is that no single
     * query's probed cells ever hold ≥ 2^31 candidates — at p·N/k per
@@ -3193,7 +3173,6 @@ object Similarity {
     trainCoarse(s, dir, exactDecimals(s))
 
   private[graft] def sq8Quantized(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProductI8.register(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val scales = sq8Scales(s, dir)
     emb.crossJoin(broadcast(scales))
@@ -3215,7 +3194,7 @@ object Similarity {
     val qq = qv.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("qvec").as("qq"))
     qv.join(broadcast(qq), col("vec_id") =!= col("q_id"))
-      .withColumn("iscore", call_function("dot_i8", col("qvec"), col("qq")))
+      .withColumn("iscore", graft.functions.dot_i8(col("qvec"), col("qq")))
       .withColumn("q_rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("iscore").desc, col("vec_id"))).cast("long"))
       .select(col("q_id"), col("vec_id"), col("iscore"), col("q_rank"))
@@ -3228,7 +3207,7 @@ object Similarity {
     * loop — `dot_i8`), keep the top-[[sq8RerankDepth]] shortlist per
     * query, and re-rank only those raw vectors with the exact cosine.
     * Where PQ buys ~16-32× compression at the cost of trained codebooks
-    * and lossy ADC ordering (the round-9 depth study), SQ8 buys 4× with
+    * and lossy ADC ordering (s10's depth rows), SQ8 buys 4× with
     * NO training and a far tighter ordering — the standard first rung of
     * the ANN memory-bandwidth ladder.
     *
@@ -3282,7 +3261,7 @@ object Similarity {
       |)""".stripMargin
 
   /** s20 oracle at an explicit re-rank depth (the conf default below —
-    * template-parameterized, per the round-9 `ivfpqAdcCtesAt` rule). */
+    * template-parameterized, like `ivfpqAdcCtesAt`). */
   def s20SqlAt(depth: Int): String =
     s"""WITH $elemsSqlCte, $sq8SqlCtes, norms AS (
       |  SELECT vec_id, sum((v * v)::DECIMAL(30,20))::VARCHAR::DOUBLE AS n2 FROM e GROUP BY 1
@@ -3314,16 +3293,16 @@ object Similarity {
     * relation (the s10/s19 audit-contains-its-subjects shape): the raw
     * int8 ordering served directly (`sq8_direct`) and the exact re-rank
     * at depths 10 / 50 / 200. This is the deploy-gate measurement behind
-    * [[sq8RerankDepth]] — round 9 proved shortlist depth is the
-    * high-leverage axis for the PQ index; this audit asks the same
+    * [[sq8RerankDepth]] — shortlist depth is the high-leverage axis for
+    * the PQ index (s10's depth rows); this audit asks the same
     * question of SQ8 and prints where the depth curve flattens (SQ8's
     * int8 ordering is far closer to exact than PQ's ADC, so it converges
     * at a much shallower depth — the measured reason the s20 default can
     * be 50 where the PQ stack needed 200). Systems five through seven are
     * the LABEL-routed ivf leg at literal probe widths 1/2/4 (all depth
-    * 50, one multi-probe scored relation): the p1 row is round 10's
-    * condemned single-cell posture (0.12 recall@5 vs the global 1.00) and
-    * the p2/p4 rows the width recovery — the measured history that led to
+    * 50, one multi-probe scored relation): the p1 row is the single-cell
+    * posture (0.12 recall@5 vs the global 1.00) and the p2/p4 rows the
+    * width recovery — the measurement that led to
     * [[s24_router_audit]], which then retired this router from serving
     * (s24 is s22's standing deploy gate).
     *
@@ -3374,7 +3353,7 @@ object Similarity {
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits5"),
            max(when(col("vec_id") === col("top1"),
              floor(lit(1000000.0) / col("rk") + 0.5).cast("long"))).as("rr_micro"))
-    // Denominator = the FULL query set for every leg (round-11 advice): a
+    // Denominator = the FULL query set for every leg: a
     // leg whose probed cells yield ZERO candidates for some query must
     // count as zero hits there, not drop out of n_queries — otherwise
     // narrow-probe legs inflate recall on singleton cells and n_queries
@@ -3407,12 +3386,11 @@ object Similarity {
       .filter(col("rk") <= 5).select(col("q_id"), col("vec_id"), col("rk"))
     // the IVF-routed legs at LITERAL probe widths 1/2/4 and depth 50, all
     // from ONE multi-probe scored relation (probe <= p filters, the s10
-    // audit shape): p1 is round 10's condemned single-cell posture, p2 is
-    // the shipped `servingNprobe` default, p4 the next rung — the rows
-    // print the routing recovery curve the round-10 verdict asked for.
-    // Literal parameters keep the system labels honest under any conf
-    // (round-10 advice: the old leg read the depth knob while its label
-    // said d50).
+    // audit shape): p1 is the single-cell posture, p2 is the shipped
+    // `servingNprobe` default, p4 the next rung — the rows print the
+    // routing recovery curve. Literal parameters keep the system labels
+    // honest under any conf (a leg that read the depth knob could serve
+    // another depth than its d50 label says).
     val mp = ivfSq8ScoredMp(s, dir, 4)
       .select(col("q_id"), col("probe"), col("vec_id"), col("iscore"))
       .localCheckpoint()
@@ -3439,7 +3417,7 @@ object Similarity {
   }
 
   /** S23: the JOINT probe × depth GRID for the IVF×SQ8 leg — the two
-    * serving axes have each been priced alone (probe width by the round-9
+    * serving axes have each been priced alone (probe width by the
     * `servingNprobe` study and s21's p-rows; rerank depth by s21's d-rows)
     * but never TOGETHER for this backend, and the shipped default
     * (p = 2, d = 50) is only justified if no cheaper grid cell matches it.
@@ -3604,7 +3582,7 @@ object Similarity {
     * s3/s22 inherited? This audit swaps routers under the identical int8
     * backend and grades both at probe widths 1/2/4 (depth literal 50,
     * where the grid showed depth is free): cells from the corpus LABELS
-    * (round 10's shipped router) vs cells from the TRAINED coarse
+    * (the router s22 first served) vs cells from the TRAINED coarse
     * quantizer (s4/s7's k-means, k = 10, squared-euclidean assignment —
     * the router the PQ stack already serves with). Same ground truth,
     * same scored shape, one report — the measured delta is the price of
@@ -3629,7 +3607,7 @@ object Similarity {
     * the same pass every PQ query already stages. */
   def s24_router_audit(s: SparkSession, dir: String): DataFrame = {
     val (cosines, truth5, top1) = sq8EvalGround(s, dir)
-    // router A: label-centroid cells — round 10's shipped router
+    // router A: label-centroid cells
     val labelMp = ivfSq8ScoredMp(s, dir, 4)
       .select(col("q_id"), col("probe"), col("vec_id"), col("iscore"))
       .localCheckpoint()
@@ -3658,8 +3636,7 @@ object Similarity {
   }
 
   /** S25: the CELL-COUNT SWEEP — the last unpriced axis of the IVF×SQ8
-    * serve, at PRODUCTION TRAINING DISCIPLINE (the round-11 verdict's
-    * carry-forward on this query's own first cut). Width (s21), depth
+    * serve, at PRODUCTION TRAINING DISCIPLINE. Width (s21), depth
     * (s23), and router (s24) are each measured; the cell COUNT k is the
     * axis that changes with corpus scale (a 100 TB deployment runs
     * k ≈ √N cells, not 10). Sweep points: literal k ∈ {5, 10, 20} PLUS
@@ -3686,7 +3663,7 @@ object Similarity {
     * sample truncates the 2000-vector corpus; see NOTES_r12.md): the
     * sampled rows price the same frontier the full-corpus training did
     * — the delta is the production trade stated with numbers, either
-    * direction an acceptable answer per the round-11 verdict.
+    * direction an acceptable answer.
     *
     * Scale contract: training is O(m·k) per point (corpus-independent);
     * the per-point ASSIGNMENT pass is the one O(N·k) term left — the
@@ -3706,9 +3683,8 @@ object Similarity {
     * [[s25_routed_sweep]] — the twins differ ONLY in the corpus
     * `assign` step (exact O(N·k) argmin vs c2-ann's two-level route), so
     * a future change to the scan/re-rank chain lands in both or neither
-    * (r13 verdict: the verbatim-duplicated bodies were the drift class
-    * c14's featurization factoring just closed; the separate-QUERY
-    * decision stands — only the ORACLE was byte-stability-bound).
+    * (two verbatim copies of one body drift apart; the twins stay separate
+    * QUERIES so each oracle stays byte-stable).
     * `assign(emb, centroids, ex, k)` must return (vec_id, cluster). */
   private def s25SweepReport(s: SparkSession, dir: String)(
       assign: (DataFrame, DataFrame, Boolean, Int) => DataFrame): DataFrame = {
@@ -3741,7 +3717,7 @@ object Similarity {
         .join(broadcast(route), Seq("cluster"))
         .filter(col("vec_id") =!= col("q_id"))
         .join(broadcast(qq), Seq("q_id"))
-        .withColumn("iscore", call_function("dot_i8", col("qvec"), col("qq")))
+        .withColumn("iscore", graft.functions.dot_i8(col("qvec"), col("qq")))
         .select(col("q_id"), col("vec_id"), col("iscore"))
         .localCheckpoint()
       val leg = scored
@@ -3776,8 +3752,8 @@ object Similarity {
       .orderBy("cells")
   }
 
-  /** S25-ROUTED: the cell sweep ON THE PRODUCTION ASSIGNMENT PATH — the
-    * round-12 verdict's named carry-forward closed: [[s25_cell_sweep]]'s
+  /** S25-ROUTED: the cell sweep ON THE PRODUCTION ASSIGNMENT PATH —
+    * [[s25_cell_sweep]]'s
     * per-point corpus assignment is the exhaustive O(N·k) exact-decimal
     * pass (the declared audit cost, ~200 s of the sf1 cold sweep at
     * k = 141); this twin runs the IDENTICAL sweep — same sampled
@@ -4160,10 +4136,10 @@ object Similarity {
     * refine contract). Like s20, the int8 leg is oracle-exact on every
     * precision path.
     *
-    * Serving posture — BOTH axes decided by measurement this round:
+    * Serving posture — BOTH axes decided by measurement:
     * routing width = [[servingNprobe]] (default 2, the knob the PQ legs
-    * priced in round 9; round 10 shipped this leg hardcoded single-cell
-    * and its own gate read recall@5 0.12 vs 1.00), and the ROUTER is the
+    * priced; hardcoded single-cell routing read recall@5 0.12 vs 1.00 at
+    * this leg's own gate), and the ROUTER is the
     * TRAINED coarse quantizer, not the label centroids it launched with:
     * [[s24_router_audit]] measured trained cells at ~2× the label cells'
     * recall at every width (sf0.1: 0.43 vs 0.23 at the p = 2 default;
@@ -4201,7 +4177,7 @@ object Similarity {
     * (the s10 audit-contains-its-subjects shape, here for the int8
     * backend). The corpus never shuffles: the prune is a broadcast
     * equi-join on the cell label, and scoring is the codegen'd `dot_i8`.
-    * AUDIT-ONLY since round 11: [[s24_router_audit]] measured the trained
+    * AUDIT-ONLY: [[s24_router_audit]] measured the trained
     * router at ~2× this router's recall per width, so serving (s22) moved
     * there; s21/s23/s24's label legs keep grading this one. */
   private def ivfSq8ScoredMp(s: SparkSession, dir: String,
@@ -4214,7 +4190,7 @@ object Similarity {
       .join(broadcast(ivfSq8Routes(s, dir, maxProbes)), Seq("label")) // p/cells prune
       .filter(col("vec_id") =!= col("q_id"))
       .join(broadcast(qq), Seq("q_id"))
-      .withColumn("iscore", call_function("dot_i8", col("qvec"), col("qq")))
+      .withColumn("iscore", graft.functions.dot_i8(col("qvec"), col("qq")))
       .select(col("q_id"), col("probe"), col("label"), col("vec_id"), col("iscore"))
   }
 
@@ -4252,8 +4228,8 @@ object Similarity {
   }
 
   /** [[ivfSq8ScoredMp]]'s twin over the TRAINED router's cells — the
-    * SERVING scored relation since round 11 ([[s24_router_audit]]'s
-    * measured ~2× recall-per-probe win become code). Same shape: per-probe
+    * SERVING scored relation ([[s24_router_audit]] measured ~2× recall
+    * per probe over the label router). Same shape: per-probe
     * int8 scores, corpus never shuffles, candidate carries its own
     * trained cell. */
   private def ivfSq8ScoredMpTrained(s: SparkSession, dir: String,
@@ -4265,7 +4241,7 @@ object Similarity {
       .join(broadcast(ivfSq8TrainedRoutes(s, dir, maxProbes)), Seq("cluster"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(broadcast(qq), Seq("q_id"))
-      .withColumn("iscore", call_function("dot_i8", col("qvec"), col("qq")))
+      .withColumn("iscore", graft.functions.dot_i8(col("qvec"), col("qq")))
       .select(col("q_id"), col("probe"), col("cluster"), col("vec_id"), col("iscore"))
   }
 

@@ -193,13 +193,12 @@ object TextAnalysis {
     * (`graft.functions.UniqueWordsRatio`) instead of the composed
     * split/array_distinct form — one tokenizer pass per row. */
   def t5_uwr_native(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.UniqueWordsRatio.register(s)
     // round4 via the DataFrame API: `lit(10000.0)` is a DOUBLE literal. (In
     // SQL text, `10000.0` parses as DECIMAL and the division comes out
     // decimal(28,7) — a schema mismatch against the oracle's DOUBLE.)
     Tables.documents(s, dir)
       .select(col("doc_id"),
-        round4(expr("unique_words_ratio(text)")).as("uniq_ratio"))
+        round4(graft.functions.unique_words_ratio(col("text"))).as("uniq_ratio"))
       .orderBy("doc_id")
   }
 
@@ -657,13 +656,12 @@ object TextAnalysis {
     t14Rel(s, dir).orderBy("train_doc", "eval_doc")
 
   /** t14's contamination relation — the full (train_doc, eval_doc,
-    * n_shared) table. NOT staged (optimization r16): the only consumer of
-    * the full relation is the declared t14 query itself (one use per run),
-    * and r15's unconditional `localCheckpoint` here charged every funnel
-    * query an eager materialization of the whole pair table when all any
-    * funnel leg reads is the contaminated-id SET — c15_budget_delta paid
-    * 7.1 → 9.0 s for a checkpoint it used once (r15 verdict item 4). The
-    * funnel legs now stage [[t14ContaminatedIds]] instead. */
+    * n_shared) table. NOT staged: the only consumer of the full relation
+    * is the declared t14 query itself (one use per run), and a
+    * `localCheckpoint` here would charge every funnel query an eager
+    * materialization of the whole pair table when all any funnel leg reads
+    * is the contaminated-id SET (c15_budget_delta paid 7.1 → 9.0 s for such
+    * a checkpoint). The funnel legs stage [[t14ContaminatedIds]] instead. */
   private def t14Rel(s: SparkSession, dir: String): DataFrame = {
     val N = 3
     val gramsStr = docGramsStr(s, dir, N)
@@ -685,7 +683,7 @@ object TextAnalysis {
     * consumer (c3's decontamination inside the c13 chain,
     * c15SettledIndex's settled gate, c15_manifest_increment's delta gate)
     * actually reads of t14. Staging THIS instead of the full t14 relation
-    * (r15's choice) keeps the shared-artifact discipline (one gram
+    * keeps the shared-artifact discipline (one gram
     * self-join per session; the eval set does not grow with the crawl)
     * while the materialized artifact is doc-id-set-sized, not
     * pair-table-sized. */
@@ -884,7 +882,9 @@ object TextAnalysis {
     * available `a b` adjacency with the merged symbol, and never let a
     * freshly merged symbol re-match as the LEFT of an overlapping pair
     * (automatic here: the merged symbol `a_b` ≠ `a` since `b` is nonempty).
-    * `try_element_at` keeps the empty-accumulator probe ANSI-safe. */
+    * `try_element_at` keeps the empty-accumulator probe ANSI-safe. The
+    * trainer merges with the native `bpe_merge`, which computes the same
+    * result in one O(n) pass; this fold is kept as its reference. */
   private[graft] def mergeGreedy(arr: Column, a: Column, b: Column): Column =
     aggregate(arr, array().cast("array<string>"),
       (acc, x) =>
@@ -905,8 +905,8 @@ object TextAnalysis {
     * Spark plan, per round: the pair count is ONE map-side-combined shuffle
     * over (w1, w2); the winning rule is a `TakeOrderedAndProject` top-1
     * (never a global sort) broadcast as a single row; re-tokenization is a
-    * SHUFFLE-FREE narrow projection — a per-document `aggregate` fold over
-    * the token array ([[mergeGreedy]]), so document payloads never move
+    * SHUFFLE-FREE narrow projection — a per-document merge pass over the
+    * token array (`bpe_merge`), so document payloads never move
     * between executors across rounds. Each round's corpus is materialized
     * (`localCheckpoint`; `persist(MEMORY_AND_DISK)` on a cluster) because
     * two consumers branch from it (next round's pair count + the
@@ -922,8 +922,11 @@ object TextAnalysis {
   /** The shared BPE training chain: [[bpeRounds]] rounds of pair-count →
     * top-1 rule → greedy re-tokenize. Returns (final re-tokenized corpus,
     * one 1-row step summary per round). t18 reports the steps; t20 applies
-    * the final corpus. */
-  private def bpeTrain(s: SparkSession, dir: String)
+    * the final corpus. The merge pass is the native O(n) `bpe_merge`;
+    * `BpeMergeSpec` passes the composed O(n²)-per-doc [[mergeGreedy]] fold
+    * as `merge` to check the two agree on the whole chain. */
+  private[graft] def bpeTrain(s: SparkSession, dir: String,
+      merge: (Column, Column, Column) => Column = graft.functions.bpe_merge)
       : (DataFrame, Seq[DataFrame]) = {
     var docs = Tables.documents(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("arr"))
@@ -940,16 +943,8 @@ object TextAnalysis {
         .agg(count(lit(1)).as("cnt"))
         .orderBy(desc("cnt"), asc("w1"), asc("w2")).limit(1)
         .localCheckpoint() // 1 row; consumed by the re-tokenize AND the output
-      // the merge pass: native O(n) expression by default; the composed
-      // O(n²)-per-doc fold survives as the bit-identity cross-check
-      // (BpeMergeSpec) and the `bpeNative=false` escape hatch
-      val mergePass =
-        if (s.conf.get("spark.graft.bpeNative", "true").toBoolean) {
-          graft.functions.BpeMerge.register(s)
-          call_function("bpe_merge", col("arr"), col("w1"), col("w2"))
-        } else mergeGreedy(col("arr"), col("w1"), col("w2"))
       docs = docs.crossJoin(broadcast(best))
-        .select(col("doc_id"), mergePass.as("arr"))
+        .select(col("doc_id"), merge(col("arr"), col("w1"), col("w2")).as("arr"))
         .localCheckpoint()
       val after = docs.agg(sum(size(col("arr"))).cast("long").as("tokens_after"))
       best.crossJoin(broadcast(after))
@@ -966,7 +961,7 @@ object TextAnalysis {
     * application are the same chain here (the corpus IS the training set);
     * in production the 4-rule table is the broadcast artifact and the
     * apply pass is the chain's shuffle-free fold over any OTHER corpus —
-    * which is why the fold ([[mergeGreedy]]) and the rule selection are
+    * which is why the merge pass and the rule selection are
     * separate stages. One extra shuffle total: the final (lang) rollup. */
   def t20_bpe_encode(s: SparkSession, dir: String): DataFrame = {
     val encoded = bpeTrain(s, dir)._1
@@ -1649,8 +1644,8 @@ object TextAnalysis {
               explode(toks).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    // Default LAZY for batch — decided by measurement, not the first
-    // intuition (STRESS_sf1.md round 6): materializing here
+    // Default LAZY for batch — decided by measurement (STRESS_sf1.md):
+    // materializing here
     // wins t27 alone marginally at sf1 (15.9 vs 16.6 s) but costs s16
     // 1.4× (61.7 vs 43.9 s) because the checkpoint boundary blinds
     // Catalyst — the fused form lets the optimizer push s16's
@@ -1803,7 +1798,7 @@ object TextAnalysis {
     bm25TopK(docs, mergedPruned, dfRel, stats)
   }
 
-  /** t30's index-build pieces, factored to object scope (r15): the c20
+  /** t30's index-build pieces, factored to object scope: the c20
     * release composite reuses [[bm25TfOf]] for its postings-family rollup
     * and the settled-universe consistency pin reads [[bm25SettledIndex]]'s
     * stats row directly — one tokenization/aggregation body for the

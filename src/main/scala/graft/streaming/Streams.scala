@@ -1607,16 +1607,15 @@ object Streams {
 
   /** x37's frozen eval-suite sketch, sized from the SAME conf knobs as the
     * batch gate (c9's `Pipeline.bloomDecontamSizing` — one sizing source,
-    * both paths; round-10 verdict #3): a retune moves both gates' FP rates
+    * both paths): a retune moves both gates' FP rates
     * together and never correctness, since survivors exact-verify on both
     * paths. Factored so `StreamingSpec` can pin the knob wiring (the
     * serialized sketch size tracks the bits knob). */
   private[graft] def decontamSketch(s: SparkSession,
                                     ev: DataFrame): Array[Byte] = {
-    graft.functions.BloomBridge.register(s)
     val (items, bits) = graft.queries.Pipeline.bloomDecontamSizing(s)
     graft.plans.BroadcastContract.boundedCollect(
-      ev.agg(call_function("bloom_filter_agg", xxhash64(col("gram")),
+      ev.agg(graft.functions.bloom_filter_agg(xxhash64(col("gram")),
         lit(items), lit(bits)).as("bf")),
       "frozen decontam bloom sketch: one row by aggregation")
       .head.getAs[Array[Byte]](0)
@@ -1629,13 +1628,12 @@ object Streams {
   private[graft] def x37Gate(s: SparkSession, dir: String)(
       docsIn: DataFrame): Dataset[DecontamOut] = {
     import s.implicits._
-    graft.functions.BloomBridge.register(s)
     val N = 3
     // DISTINCT (gram, eval_doc): docGramsStr emits one row per gram
     // OCCURRENCE, and an eval doc that repeats a shared trigram would
     // otherwise join a train gram more than once — the in-trigger gather
     // counts join rows, so without the dedup n_shared would exceed t14's
-    // count(DISTINCT gram) on ordinary text (round-10 advice, high)
+    // count(DISTINCT gram) on ordinary text
     val ev = graft.queries.TextAnalysis.docGramsStr(s, dir, N)
       .filter(col("doc_id") % 100 === 0)
       .select(col("gram"), col("doc_id").as("eval_doc"))
@@ -1649,7 +1647,7 @@ object Streams {
       .filter(size(split(col("text"), " ")) >= N)
       .select(col("doc_id").as("train_doc"),
               explode(array_distinct(gramsExpr)).as("gram"))
-      .filter(call_function("might_contain", lit(sketch), xxhash64(col("gram"))))
+      .filter(graft.functions.might_contain(lit(sketch), xxhash64(col("gram"))))
       .join(ev, Seq("gram")) // stream-static exact verify
       .select(col("train_doc"), col("eval_doc")).as[DecontamIn]
     val out = cand.groupByKey(_.train_doc)
@@ -1788,7 +1786,7 @@ object Streams {
     * of the STATIC corpus — the "vector search endpoint" shape, where the
     * index is a settled relation and queries are traffic.
     *
-    * ROUTER-GENERATION POSTURE (round-11 verdict #3, resolved round 12):
+    * ROUTER-GENERATION POSTURE:
     * this operator is **s3's historical twin, not the shipped online
     * serve** — it routes on the LABEL centroids s24's router audit
     * RETIRED from serving (trained ≈ 2× label recall at every probe
@@ -1799,7 +1797,7 @@ object Streams {
     * boundedCollect fold, TopKAgg state) that x38 inherits. The engine's
     * ONE serving-posture online ANN path is [[x38_stream_sq8_serve]],
     * which serves on the TRAINED coarse router at `servingNprobe` width —
-    * the round-11 router decision, online. A trained-router exact-scan
+    * s24's router decision, online. A trained-router exact-scan
     * twin would duplicate x38's semantics (x38 already ranks the probed
     * trained cells by exact cosine; the int8 codes ride as payload), so
     * none is shipped. Spec-pinned in `StreamingSpec` ("one serving
@@ -1888,7 +1886,7 @@ object Streams {
   }
 
   /** X38: ONLINE IVF×SQ8 SERVING — s22's trained-router int8 serve with
-    * the query side as traffic, closing the online loop for the round-11
+    * the query side as traffic, closing the online loop for s24's
     * router decision the way x26 did for the label-celled exact scan:
     * query vectors arrive, quantize and route PER ROW against two frozen
     * artifacts, and are answered from the probed cells of the STATIC int8
@@ -1906,7 +1904,7 @@ object Streams {
     *  2. The cell scan is a stream-static equi-join on the cluster key
     *     against the settled code+raw table — each query touches its p
     *     probed cells, never the corpus (x26's pruning discipline on the
-    *     round-11 router).
+    *     trained router).
     *  3. Per-query state is O(5): the served list lives in the bounded
     *     [[graft.functions.TopKPayloadAgg]] (complete mode — the serving
     *     endpoint's answer table), carrying each neighbor's cell and
@@ -1923,7 +1921,6 @@ object Streams {
     * .s22SqlAt]] with the shortlist depth at corpus scale. */
   def x38_stream_sq8_serve(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.Similarity
-    graft.functions.DotProductI8.register(s)
     val probes = Similarity.servingNprobe(s)
     val cents = graft.plans.BroadcastContract.boundedCollect(
         Similarity.sq8TrainedCentroids(s, dir),
@@ -1966,7 +1963,7 @@ object Streams {
           Similarity.exactDot(col("ne"), col("qemb"))
             / sqrt(col("qn2") * col("n2"))).as("cosine"),
         col("n_id"), col("cluster"),
-        call_function("dot_i8", col("nq"), col("qq8")).as("iscore"))
+        graft.functions.dot_i8(col("nq"), col("qq8")).as("iscore"))
     val topk = graft.functions.TopKAgg.topKPayload(5)
     val answers = scored.groupBy(col("q_id"))
       .agg(topk(col("cosine"), col("n_id"), col("cluster"), col("iscore")).as("top"))
@@ -2040,7 +2037,6 @@ object Streams {
   private[graft] def x39Gate(s: SparkSession, dir: String)(
       docsIn: DataFrame): Dataset[GateOut] = {
     import s.implicits._
-    graft.functions.BloomBridge.register(s)
     val N = 3
     // frozen settled artifacts — static sides, equi-joined, never broadcast
     val digS = Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0)
@@ -2073,7 +2069,7 @@ object Streams {
       .filter(col("doc_id") % 100 =!= 0)
       .filter(size(split(col("text"), " ")) >= N)
       .select(col("doc_id"), explode(array_distinct(gramsExpr)).as("gram"))
-      .filter(call_function("might_contain", lit(sketch), xxhash64(col("gram"))))
+      .filter(graft.functions.might_contain(lit(sketch), xxhash64(col("gram"))))
       .join(ev, Seq("gram"))
       .select(col("doc_id"), lit("cont").as("tag"), col("eval_doc").as("other"),
         lit("").as("predicted"), lit(0.0).as("quality"), lit(0L).as("n_tokens"))
@@ -2191,7 +2187,7 @@ object Streams {
     * stateful (not shareable across threads) but digest(bytes) resets it,
     * so one instance per executor thread serves every row it processes —
     * the per-document instantiation was the measured allocation cost on
-    * x41's hot path (ADVICE r13). */
+    * x41's hot path. */
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
@@ -2207,7 +2203,7 @@ object Streams {
     * x41's placement and x42's skew monitor (ONE op sequence at the door —
     * the hashedGramBuckets discipline): grams fold STRAIGHT into the
     * 256-way bucket counts (no materialized unigram++bigram Seq; one
-    * thread-hoisted digest — ADVICE r13), then x40's decimal mirror
+    * thread-hoisted digest), then x40's decimal mirror
     * op-for-op (x = round6(cnt/n), HALF_UP double→DECIMAL(30,20) products,
     * exact BigDecimal addition in any order, round6(·+bias)) — bit-equal
     * to the batch fold by the x40 argument. Returns the margin's 1e-6
@@ -2244,8 +2240,7 @@ object Streams {
     * over the stage-sorted `(stage, min_si)` boundary array — by RAW
     * stage id (non-dense-safe: mirrors the oracle's max(b.stage) rule);
     * below every boundary → the lowest shipped stage. Takes the boundary
-    * pairs alone (r14 verdict #2: x42 previously padded a dummy third
-    * field to reuse x41's tail-carrying tuple shape). */
+    * pairs alone, so x42 needs no dummy tail field to share it with x41. */
   private def stageIdx(bounds: Array[(Long, Long)], si: Long): Int = {
     var idx = -1
     var j = 0
@@ -2253,7 +2248,7 @@ object Streams {
     if (idx >= 0) idx else 0
   }
 
-  /** The x41/x42 oracle-equality precondition (ADVICE r14): those gates'
+  /** The x41/x42 oracle-equality precondition: those gates'
     * hash parity is load-bearing on [[docsStream]]'s one-file-per-trigger
     * convention delivering the WHOLE documents table in ONE micro-batch —
     * a multi-file table would interleave arrival order across triggers and
@@ -2343,12 +2338,12 @@ object Streams {
   private[graft] def x41Place(s: SparkSession, dir: String)(
       docsIn: DataFrame): Dataset[PlaceOut] = {
     import s.implicits._
-    // the c17 chain is staged FIRST (optimization r16): its c16 layer
-    // overlaps the c13 staging with the c14 trainer (QUtil.par2), so the
-    // c14Model call below is a cache hit — calling the trainer first (the
-    // r15 order) serialized the two chains.
+    // the c17 chain is staged FIRST: its c16 layer overlaps the c13
+    // staging with the c14 trainer (QUtil.par2), so the c14Model call below
+    // is a cache hit — calling the trainer first would serialize the two
+    // chains.
     // the shipped curriculum's boundaries and tails: stage → (min si, tokens).
-    // Rows are keyed by their RAW stage id, not array position (ADVICE r13):
+    // Rows are keyed by their RAW stage id, not array position:
     // on a degenerate curriculum with fewer than 10 train docs the stage ids
     // are non-dense (e.g. {0,3,6}), and a count-derived positional label
     // would return a real tail where the oracle's by-id lookup misses — the
@@ -2486,7 +2481,7 @@ object Streams {
   private[graft] def x42Counts(s: SparkSession, dir: String): Dataset[(Long, Long)] = {
     import s.implicits._
     // c17 chain first — its c16 layer overlaps c13 staging with the c14
-    // trainer (QUtil.par2); c14Model below is then a cache hit (r16)
+    // trainer (QUtil.par2); c14Model below is then a cache hit
     val bounds = graft.plans.BroadcastContract.boundedCollect(
       graft.queries.Pipeline.c17CurriculumUnordered(s, dir) // agg input: the sort is dead weight
         .withColumn("si", floor(col("score") * 1000000.0 + 0.5).cast("long"))

@@ -15,10 +15,8 @@ class BloomManifestSpec extends SparkSpec {
   test("bloom manifest: zero false negatives, bounded false positives") {
     val dir = "/root/testdata/sf0.001"
     // the builder/probe expressions exist in Catalyst (the runtime-filter
-    // rule injects them) but are not in the public registry — BloomBridge
-    // is the library's registration point (c9_bloom_decontam's machinery)
-    graft.functions.BloomBridge.register(spark)
-
+    // rule injects them) but are not in the public registry —
+    // GraftExtensions installs their SQL names (c9_bloom_decontam's machinery)
     // manifest over the purchase users (the "interesting keys" side)
     val purchasers = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")

@@ -52,7 +52,6 @@ class BpeMergeSpec extends SparkSpec {
   }
 
   private def nativeMerge(arrs: Seq[Seq[String]], a: String, b: String): Seq[Seq[String]] = {
-    graft.functions.BpeMerge.register(spark)
     val df = spark.createDataFrame(
       arrs.zipWithIndex.map { case (ar, i) => (i, ar) }).toDF("i", "arr")
     df.select(col("i"), call_function("bpe_merge", col("arr"), lit(a), lit(b)).as("m"))
@@ -75,16 +74,13 @@ class BpeMergeSpec extends SparkSpec {
     for (a <- alpha; b <- alpha)
       assert(nativeMerge(arrs, a, b) == sparkMerge(arrs, a, b), s"($a, $b)")
     // whole-corpus cross-check: the full t18 chain under both forms
-    val key = "spark.graft.bpeNative"
-    def run() = {
-      graft.queries.QUtil.clearStaged()
-      TextAnalysis.t18_bpe_merges(spark, "/root/testdata/sf0.001")
-        .collect().map(_.toSeq).toSeq
-    }
-    val native = run()
-    spark.conf.set(key, "false")
-    try assert(run() == native, "t18 diverged between native and composed merge")
-    finally spark.conf.unset(key)
+    val dir = "/root/testdata/sf0.001"
+    graft.queries.QUtil.clearStaged()
+    val native = TextAnalysis.t18_bpe_merges(spark, dir).collect().map(_.toSeq).toSeq
+    graft.queries.QUtil.clearStaged()
+    val composed = TextAnalysis.bpeTrain(spark, dir, TextAnalysis.mergeGreedy)._2
+      .reduce(_.union(_)).orderBy("step").collect().map(_.toSeq).toSeq
+    assert(composed == native, "t18 diverged between native and composed merge")
   }
 
   test("t18 smoke: one merge rule per round, token totals strictly decrease") {
@@ -104,7 +100,6 @@ class BpeMergeSpec extends SparkSpec {
   }
 
   test("bpe_merge wrong arity raises a proper analysis error naming the signature") {
-    graft.functions.BpeMerge.register(spark)
     val few = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT bpe_merge(array('a','b'))").collect()
     }

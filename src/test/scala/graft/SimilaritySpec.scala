@@ -13,7 +13,6 @@ class SimilaritySpec extends SparkSpec {
     // optimizer rule (installed on this session) rewrites the composed
     // aggregate(zip_with(..)) spelling to dot_f32, so an in-engine fold
     // would compare the expression against itself
-    graft.functions.DotProduct.register(spark)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(org.apache.spark.sql.functions.col("vec_id"),
               org.apache.spark.sql.functions.col("embedding").as("a"))
@@ -428,7 +427,6 @@ class SimilaritySpec extends SparkSpec {
     // aggregate(zip_with) double folds exactly — same plane arithmetic,
     // same ascending accumulation — for every corpus vector and at both a
     // narrow and a wide bit count (the s11BandBits knob range)
-    graft.functions.HyperplaneFp.register(spark)
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     for (nbits <- Seq(16, 24)) {
@@ -506,7 +504,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native dot_i8: exact integer scores + the composed fold's null semantics") {
-    graft.functions.DotProductI8.register(spark)
     val d = spark.sql("SELECT dot_i8(CAST(array(1, -2, 3) AS ARRAY<TINYINT>), " +
       "CAST(array(4, 5, 6) AS ARRAY<TINYINT>)) AS d").collect()(0)
     assert(d.getLong(0) == 4L - 10L + 18L)
@@ -537,7 +534,6 @@ class SimilaritySpec extends SparkSpec {
     // paths) against an in-memory argmin, with duplicated centroid
     // vectors forcing exact distance ties.
     import spark.implicits._
-    graft.functions.SqDist.register(spark)
     val rnd = new scala.util.Random(11)
     val emb = (0L until 60L).map(i => (i, Seq.fill(4)(rnd.nextInt(3).toDouble)))
     val cents0 = (0L until 5L).map(c => (c, Seq.fill(4)(rnd.nextInt(3).toDouble)))

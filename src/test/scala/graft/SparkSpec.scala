@@ -9,14 +9,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
+  lazy val session: SparkSession = Session.builder(4)
     .config("spark.sql.warehouse.dir", // keep saveAsTable out of the repo
       java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

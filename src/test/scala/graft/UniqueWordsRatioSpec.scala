@@ -14,7 +14,6 @@ class UniqueWordsRatioSpec extends SparkSpec {
   private val text = Gen.listOf(Gen.oneOf(word, Gen.const(""))).map(_.mkString(" "))
 
   test("matches the composed built-in form on random strings (property)") {
-    UniqueWordsRatio.register(spark)
     val samples = Gen.listOfN(200, text).sample.get
     val df = samples.toDF("s")
       .withColumn("native", expr("unique_words_ratio(s)"))
@@ -25,7 +24,6 @@ class UniqueWordsRatioSpec extends SparkSpec {
   }
 
   test("hand cases: repeats, empties, single token") {
-    UniqueWordsRatio.register(spark)
     val cases = Seq(
       "a a a" -> 1.0 / 3.0,
       "a b c" -> 1.0,
@@ -38,7 +36,6 @@ class UniqueWordsRatioSpec extends SparkSpec {
   }
 
   test("participates in whole-stage codegen (no UDF iterator boundary)") {
-    UniqueWordsRatio.register(spark)
     val df = Tables.documents(spark, "/root/testdata/sf0.001")
       .selectExpr("doc_id", "unique_words_ratio(text) AS r")
     df.collect()

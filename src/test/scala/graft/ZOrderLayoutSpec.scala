@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class ZOrderLayoutSpec extends SparkSpec {
 
   test("z-ordered layout confines a box query to few files; linear layout does not") {
-    graft.functions.InterleaveBits.register(spark)
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("user_id"),
         (col("event_id") % 1024).as("tbucket"))
