@@ -255,27 +255,11 @@ object Similarity {
     * scoring must reproduce the oracle's decimal folds bit-for-bit). */
   private[graft] def exactDot(a: Column, b: Column): Column = dot(a, b, exact = true)
 
-  /** The exact-decimal squared distance, shared the same way (x34's
-    * per-row routing/encode folds). Works at any array length — the
-    * 64-dim assignment fold and the 8-dim subspace folds alike. */
-  private[graft] def exactSqDist(a: Column, b: Column): Column =
-    sqDist(a, b, exact = true)
-
   def s3_ivf_topk(s: SparkSession, dir: String): DataFrame = {
     val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    // centroids via explode (cheap: N×D rows, exact-decimal means)
-    val cent = labelCentroids(s, dir)
-    val q = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
-    val q2c = q.crossJoin(broadcast(cent))
-      .withColumn("cdp", dot(col("qemb"), col("cemb"), ex))
-    val routed = q2c
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdp").desc, col("label"))))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("qemb"), col("label"))
+    val routed = labelRoutes(s, dir, 1, ex).select(col("q_id"), col("qemb"), col("label"))
     emb.join(broadcast(routed), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cosine", round4(dot(col("embedding"), col("qemb"), ex)))
@@ -321,7 +305,7 @@ object Similarity {
     * engines — and each addend quantized before the order-independent sum),
     * or the native codegen'd `sq_dist` expression (one fused loop over the
     * raw buffers) on the production path. */
-  private def sqDist(a: Column, b: Column, exact: Boolean): Column =
+  private[graft] def sqDist(a: Column, b: Column, exact: Boolean): Column =
     if (exact)
       aggregate(
         zip_with(a, b, (x, c) => {
@@ -395,45 +379,68 @@ object Similarity {
     centroids
   }
 
-  /** Nearest-centroid assignment (squared euclidean, ties to the lower
-    * cluster id). Keeps all input columns plus (cluster, cemb).
+  /** The `p` nearest entries of `cents` to the vector `v`: the one
+    * nearest-centroid decision of every router, batch and streaming.
     *
-    * The argmin over a bounded centroid set needs no shuffle: the k
-    * centroid rows are folded to ONE array row (sorted ascending by cluster
-    * id) and the per-vector argmin is a pure `aggregate()` projection over
-    * that array — a strict `<` fold over ascending cluster ids IS the
-    * lexicographic min(dist, cluster). One scan, no exchange, no join; a
-    * `row_number` window (N payload-carrying rows shuffled and sorted) and
-    * a `min(struct(dist, cluster))` groupBy (a re-scan of `emb` plus two
-    * joins) both cost the IVF family 1.2–2.0× more.
+    * `cents` is an `array<struct<cluster, cemb>>` (a broadcast one-row
+    * `collect_list`, or a [[centroidLit]]); `dist(v, cemb)` is the metric,
+    * smaller meaning nearer (label routing passes the negated dot). The
+    * result is `array<struct<dist, cluster, cemb>>` sorted by
+    * (dist, cluster), so ties go to the lower cluster id and position i is
+    * probe rank i. Each distance is computed once per row, with no shuffle.
     *
-    * Preconditions: callers pass vec_id-unique relations. The fold
-    * computes each ROW's argmin, so duplicate vec_ids would each keep their
-    * own row — all 9 call sites pass unique-vec_id relations by
-    * construction. An empty centroid relation fails the query with
-    * `INVALID_ARRAY_INDEX_IN_ELEMENT_AT` (ANSI `element_at` on the empty
-    * array) instead of yielding NULL clusters (`AssignToNearestSpec`). */
-  private[graft] def assignToNearest(emb: DataFrame, centroids: DataFrame, ex: Boolean): DataFrame = {
-    val centArr = centroids
-      .agg(array_sort(collect_list(struct(col("cluster"), col("cemb")))).as("_cs"))
-    val seed = element_at(col("_cs"), 1)
-    val best = aggregate(
-      col("_cs"),
-      struct(lit(Double.PositiveInfinity).as("dist"),
-             seed.getField("cluster").as("cluster"),
-             seed.getField("cemb").as("cemb")),
-      (acc, c) => {
-        val d = sqDist(col("embedding"), c.getField("cemb"), ex)
-        when(d < acc.getField("dist"),
-             struct(d.as("dist"), c.getField("cluster").as("cluster"),
-                    c.getField("cemb").as("cemb")))
-          .otherwise(acc)
-      })
-    emb.crossJoin(broadcast(centArr))
-      .withColumn("_best", best)
-      .select(emb.columns.map(col) ++
-        Seq(col("_best.cluster").as("cluster"), col("_best.cemb").as("cemb")): _*)
+    * An empty `cents` fails the query with `INVALID_ARRAY_INDEX_IN_ELEMENT_AT`
+    * (ANSI `element_at` on its first entry) at every `p`, instead of routing
+    * nowhere (`AssignToNearestSpec`). */
+  private[graft] def nearest(v: Column, cents: Column, p: Int,
+                             dist: (Column, Column) => Column): Column = {
+    val checked = when(element_at(cents, 1).isNotNull, cents)
+    slice(array_sort(transform(checked, c =>
+      struct(dist(v, c.getField("cemb")).as("dist"), c.getField("cluster").as("cluster"),
+             c.getField("cemb").as("cemb")))), 1, p)
   }
+
+  /** One entry of a literal [[nearest]] centroid array. */
+  private[graft] case class Centroid(cluster: Long, cemb: Seq[Double])
+
+  /** A collected bounded centroid table as one literal `cents` array for
+    * [[nearest]] — a single literal node, whatever the table's size. */
+  private[graft] def centroidLit(rows: Seq[(Long, Seq[Double])]): Column =
+    typedlit(rows.map { case (c, e) => Centroid(c, e) })
+
+  /** Label routing's metric: the negated dot, so the largest dot is nearest. */
+  private[graft] def negDot(ex: Boolean): (Column, Column) => Column = (a, b) => -dot(a, b, ex)
+
+  /** Every row of `points` routed to its `p` nearest `centroids`
+    * (cluster, cemb) under `dist`, through [[nearest]] over the broadcast
+    * one-row centroid array: one row per (point, probe), `points`' columns
+    * plus probe (1 = nearest), cluster, cemb and dist. */
+  private[graft] def routeNearest(points: DataFrame, v: Column, centroids: DataFrame,
+                                  p: Int, dist: (Column, Column) => Column): DataFrame = {
+    val cs = centroids.agg(collect_list(struct(col("cluster"), col("cemb"))).as("_cs"))
+    points.crossJoin(broadcast(cs))
+      .select(points.columns.map(col) :+
+        posexplode(nearest(v, col("_cs"), p, dist)).as(Seq("_pos", "_n")): _*)
+      .select(points.columns.map(col) ++ Seq((col("_pos") + 1).as("probe"),
+        col("_n.cluster").as("cluster"), col("_n.cemb").as("cemb"),
+        col("_n.dist").as("dist")): _*)
+  }
+
+  /** Nearest-centroid assignment (squared euclidean, ties to the lower
+    * cluster id): all input columns plus (cluster, cemb). */
+  private[graft] def assignToNearest(emb: DataFrame, centroids: DataFrame, ex: Boolean): DataFrame =
+    routeNearest(emb, col("embedding"), centroids, 1, sqDist(_, _, ex))
+      .select(emb.columns.map(col) ++ Seq(col("cluster"), col("cemb")): _*)
+
+  /** Queries (`vec_id % 100 = 0`) routed to their `p` nearest label cells
+    * by dot product (larger is nearer, ties to the lower label):
+    * (q_id, qemb, probe, label). */
+  private def labelRoutes(s: SparkSession, dir: String, p: Int, ex: Boolean): DataFrame =
+    routeNearest(
+      Tables.embeddings(s, dir).filter(col("vec_id") % 100 === 0)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qemb")),
+      col("qemb"), labelCentroids(s, dir).withColumnRenamed("label", "cluster"), p, negDot(ex))
+      .select(col("q_id"), col("qemb"), col("probe"), col("cluster").as("label"))
 
   /** One Lloyd iteration as SQL over an element CTE (`e` = the full
     * corpus; `es` = c2-ann's bounded training sample): assign every
@@ -735,11 +742,11 @@ object Similarity {
     val ex = exactDecimals(s)
     val idx = ivfpqIndex(s, dir, ex)
     // Single-probe fast path: a query's probe-1 cell IS its corpus
-    // assignment (assignToNearest and the qroute window rank by the same
-    // (dist, cluster) key), so the probe-1 residual equals the corpus
-    // residual and the per-(query, j, c) subspace distances are exactly the
-    // rows cand1 already holds — read the LUT off the checkpointed
-    // candidate table instead of recomputing route → residual → fold.
+    // assignment (both route through `nearest` with the same metric), so the
+    // probe-1 residual equals the corpus residual and the per-(query, j, c)
+    // subspace distances are exactly the rows cand1 already holds — read the
+    // LUT off the checkpointed candidate table instead of recomputing
+    // route → residual → fold.
     val lut = if (nprobe == 1)
       idx.cand1.filter(col("vec_id") % qmod === 0)
         .join(idx.asg.select(col("vec_id"), col("cell")), Seq("vec_id"))
@@ -749,13 +756,9 @@ object Similarity {
     else {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       // query routing: the nprobe nearest cells, probe rank attached
-      val qroute = emb.filter(col("vec_id") % qmod === 0)
-        .crossJoin(broadcast(idx.coarse))
-        .withColumn("dist", sqDist(col("embedding"), col("cemb"), ex))
-        .withColumn("probe", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cluster"))).cast("long"))
-        .filter(col("probe") <= nprobe)
-        .select(col("vec_id").as("q_id"), col("probe"),
+      val qroute = routeNearest(emb.filter(col("vec_id") % qmod === 0), col("embedding"),
+          idx.coarse, nprobe, sqDist(_, _, ex))
+        .select(col("vec_id").as("q_id"), col("probe").cast("long").as("probe"),
                 col("cluster").as("cell"), col("embedding"), col("cemb"))
       // per-(query, probed cell) residuals — the residual basis is the PROBED
       // cell's centroid (for probe 1 this is bit-identical to the corpus
@@ -1114,8 +1117,7 @@ object Similarity {
     val coarse = trainCoarse(s, dir, ex, k)
     // (vec_id, cell, embedding, exact centroid sq-distance, squared norm) —
     // consumed by both pair sides and the final verdict join; staged once
-    val asg = assignToNearest(emb, coarse, ex)
-      .withColumn("dist", sqDist(col("embedding"), col("cemb"), ex))
+    val asg = routeNearest(emb, col("embedding"), coarse, 1, sqDist(_, _, ex))
       .withColumn("n2", dot(col("embedding"), col("embedding"), ex))
       .select(col("vec_id"), col("cluster").as("cell"), col("embedding"),
               col("dist"), col("n2"))
@@ -1269,22 +1271,14 @@ object Similarity {
   private def annAssign(emb: DataFrame, coarse: DataFrame, ex: Boolean,
                         g: Int, p: Int): DataFrame = {
     val pilots = coarse.filter(col("cluster") < g)
-      .select(col("cluster").as("pcell"), col("cemb").as("pemb"))
     // 2a. the centroid index: each trained centroid joins its nearest
     // pilot's group (k×g distances — index build cost, not corpus cost)
-    val cindex = coarse.crossJoin(broadcast(pilots))
-      .withColumn("pdist", sqDist(col("cemb"), col("pemb"), ex))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cluster")).orderBy(col("pdist"), col("pcell"))))
-      .filter(col("rn") === 1)
-      .select(col("pcell"), col("cluster"), col("cemb"))
+    val cindex = routeNearest(coarse.select(col("cluster").as("c"), col("cemb").as("ce")),
+        col("ce"), pilots, 1, sqDist(_, _, ex))
+      .select(col("cluster").as("pcell"), col("c").as("cluster"), col("ce").as("cemb"))
     // 2b. route every vector to its p nearest pilots (g distances) …
-    val v2p = emb.crossJoin(broadcast(pilots))
-      .withColumn("pdist", sqDist(col("embedding"), col("pemb"), ex))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("pdist"), col("pcell"))))
-      .filter(col("rn") <= p)
-      .select(col("vec_id"), col("embedding"), col("pcell"))
+    val v2p = routeNearest(emb, col("embedding"), pilots, p, sqDist(_, _, ex))
+      .select(col("vec_id"), col("embedding"), col("cluster").as("pcell"))
     // … then score only those pilots' centroid groups (~p·k/g per vector;
     // groups are disjoint — cindex maps each centroid to exactly one pilot)
     v2p.join(broadcast(cindex), Seq("pcell"))
@@ -1318,9 +1312,8 @@ object Similarity {
     val p = s.conf.get("spark.graft.semdedupRouteProbes", "1").toInt
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), ex, k)
-    val exact = assignToNearest(emb, coarse, ex)
-      .withColumn("dist_e", sqDist(col("embedding"), col("cemb"), ex))
-      .select(col("vec_id"), col("cluster").as("cell_exact"), col("dist_e"))
+    val exact = routeNearest(emb, col("embedding"), coarse, 1, sqDist(_, _, ex))
+      .select(col("vec_id"), col("cluster").as("cell_exact"), col("dist").as("dist_e"))
     val ann = annAssign(emb, coarse, ex, g, p)
       .select(col("vec_id"), col("cell").as("cell_ann"), col("dist").as("dist_a"))
     ann.join(exact, Seq("vec_id"))
@@ -1469,8 +1462,7 @@ object Similarity {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     // identical sampled-trained centroids on BOTH sides
     val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), ex, k)
-    val asgE = assignToNearest(emb, coarse, ex)
-      .withColumn("dist", sqDist(col("embedding"), col("cemb"), ex))
+    val asgE = routeNearest(emb, col("embedding"), coarse, 1, sqDist(_, _, ex))
       .withColumn("n2", dot(col("embedding"), col("embedding"), ex))
       .select(col("vec_id"), col("cluster").as("cell"), col("embedding"),
               col("dist"), col("n2"))
@@ -1925,15 +1917,7 @@ object Similarity {
     val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val cent = labelCentroids(s, dir)
-    val routed = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cdp", dot(col("qemb"), col("cemb"), ex))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdp").desc, col("label"))))
-      .filter(col("rn") === 1)
-      .select(col("q_id"), col("qemb"), col("label"))
+    val routed = labelRoutes(s, dir, 1, ex).select(col("q_id"), col("qemb"), col("label"))
     emb.filter(col("vec_id") % 2 === 0) // the metadata predicate: scan-level, pre-join
       .join(broadcast(routed), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -3705,13 +3689,9 @@ object Similarity {
     def sweepPoint(k: Int): (DataFrame, DataFrame) = {
       val cent = trainCoarseOn(trainEmb, ex, k) // sampled training: O(m·k)
       val asg = assign(emb, cent, ex, k)
-      val route = emb.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
-        .crossJoin(broadcast(cent))
-        .withColumn("dist", sqDist(col("qemb"), col("cemb"), ex))
-        .withColumn("probe", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cluster"))))
-        .filter(col("probe") <= 2) // the serving width, literal
+      val route = routeNearest(emb.filter(col("vec_id") % 100 === 0)
+          .select(col("vec_id").as("q_id"), col("embedding").as("qemb")),
+        col("qemb"), cent, 2, sqDist(_, _, ex)) // the serving width, literal
         .select(col("q_id"), col("cluster"))
       val scored = qv.join(asg, Seq("vec_id"))
         .join(broadcast(route), Seq("cluster"))
@@ -4158,15 +4138,7 @@ object Similarity {
     * pin s22's cell contract at any width. */
   private[graft] def ivfSq8Routes(s: SparkSession, dir: String,
                                   probes: Int): DataFrame = {
-    val ex = exactDecimals(s)
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
-    q.crossJoin(broadcast(labelCentroids(s, dir)))
-      .withColumn("cdp", dot(col("qemb"), col("cemb"), ex))
-      .withColumn("probe", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cdp").desc, col("label"))))
-      .filter(col("probe") <= probes)
-      .select(col("q_id"), col("probe"), col("label"))
+    labelRoutes(s, dir, probes, exactDecimals(s)).select(col("q_id"), col("probe"), col("label"))
   }
 
   /** The multi-probe IVF×SQ8 scored relation over LABEL cells: every
@@ -4217,13 +4189,9 @@ object Similarity {
   private[graft] def ivfSq8TrainedRoutes(s: SparkSession, dir: String,
                                          probes: Int): DataFrame = {
     val ex = exactDecimals(s)
-    Tables.embeddings(s, dir).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
-      .crossJoin(broadcast(trainCoarse(s, dir, ex)))
-      .withColumn("dist", sqDist(col("qemb"), col("cemb"), ex))
-      .withColumn("probe", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cluster"))))
-      .filter(col("probe") <= probes)
+    routeNearest(Tables.embeddings(s, dir).filter(col("vec_id") % 100 === 0)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qemb")),
+      col("qemb"), trainCoarse(s, dir, ex), probes, sqDist(_, _, ex))
       .select(col("q_id"), col("probe"), col("cluster"))
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.Tables
@@ -1786,31 +1786,21 @@ object Streams {
     * of the STATIC corpus — the "vector search endpoint" shape, where the
     * index is a settled relation and queries are traffic.
     *
-    * ROUTER-GENERATION POSTURE:
-    * this operator is **s3's historical twin, not the shipped online
-    * serve** — it routes on the LABEL centroids s24's router audit
-    * RETIRED from serving (trained ≈ 2× label recall at every probe
-    * width), and it stays pinned to that router deliberately, the way
-    * s21/s23 keep grading the retired router as measured history: its
-    * contract is bit-for-bit equality with s3 (shares `s3Sql`), and its
-    * value is the routing/codegen machinery below (`routeExpr`, the
-    * boundedCollect fold, TopKAgg state) that x38 inherits. The engine's
-    * ONE serving-posture online ANN path is [[x38_stream_sq8_serve]],
-    * which serves on the TRAINED coarse router at `servingNprobe` width —
-    * s24's router decision, online. A trained-router exact-scan
-    * twin would duplicate x38's semantics (x38 already ranks the probed
-    * trained cells by exact cosine; the int8 codes ride as payload), so
-    * none is shipped. Spec-pinned in `StreamingSpec` ("one serving
-    * generation"): x38 routes on s22's trained cells while x26 ≡ s3,
-    * so the historical leg can never silently re-enter serving.
+    * This operator routes on the LABEL centroids, not the trained coarse
+    * router that s22 serves on, because its contract is bit-for-bit
+    * equality with s3 (it shares `s3Sql`). The serving-posture online ANN
+    * path is [[x38_stream_sq8_serve]], which routes on the trained cells at
+    * `servingNprobe` width. `StreamingSpec` ("one serving generation") pins
+    * both: x38 routes on s22's trained cells while x26 ≡ s3.
     *
     * The three scale decisions:
     *  1. ROUTING is a pure per-row expression: the per-label centroid
     *     table (one row per label, structurally bounded) is materialized
-    *     via `BroadcastContract.boundedCollect` and folded into a
-    *     nearest-centroid argmax over literals — the reference's
+    *     via `BroadcastContract.boundedCollect` into one literal array and
+    *     routed by `Similarity.nearest` — the reference's
     *     replicate-bounded-state-to-all-instances move (SURVEY §2.2 P7);
     *     no per-row join fan-out, no stream-side aggregation for routing.
+    *     The expression's size does not grow with the label count.
     *  2. The cell scan is a stream-static EQUI join on the cell key — the
     *     partition-pruned ANN shape; each arriving query touches one
     *     cell's rows, never the corpus.
@@ -1823,49 +1813,17 @@ object Streams {
     * (`Similarity.exactDot` against the byte-identical `labelCentroids`),
     * argmax ties break to the smaller label and top-k boundary ties to the
     * smaller vec_id — bit-for-bit s3's ranking; shares `s3Sql`. */
-  /** Nearest-centroid routing over a collected bounded centroid table as a
-    * pure per-row expression — argmax as array_min over (−cdp, cell)
-    * structs: each decimal dot is computed ONCE (a nested when-fold would
-    * duplicate the fold subtree 2^labels times), and min of (−cdp asc,
-    * cell asc) ≡ s3's ORDER BY cdp DESC, label — the identical tie-break.
-    *
-    * Two codegen regimes, switched at `maxLiteral`
-    * (`spark.graft.x26MaxLiteralCells`, default 32): the UNROLLED form
-    * builds one struct subtree per label — fully inlined whole-stage
-    * codegen, but the generated code is O(labels × fold), which at a
-    * large label inventory blows the JIT method limit; above the
-    * threshold the centroid table rides as ONE literal array and the
-    * argmax becomes a runtime `transform` + `array_min` loop — codegen
-    * size O(1), data size O(labels), the replicate-bounded-state routing
-    * table in its array-value form. Both forms run the same exact-decimal
-    * fold per element, so routing decisions are bit-identical
-    * (`QueriesSmokeSpec` pins equality and the size independence). */
-  private[graft] def routeExpr(cents: Seq[(Int, Seq[Double])],
-                               maxLiteral: Int): org.apache.spark.sql.Column = {
-    import graft.queries.Similarity
-    if (cents.length <= maxLiteral)
-      array_min(array(cents.map { case (lab, ce) =>
-        struct((-Similarity.exactDot(col("qemb"), typedlit(ce))).as("ncdp"),
-               lit(lab).as("cell"))
-      }: _*))
-    else
-      array_min(transform(typedlit(cents), c =>
-        struct((-Similarity.exactDot(col("qemb"), c.getField("_2"))).as("ncdp"),
-               c.getField("_1").as("cell"))))
-  }
-
   def x26_stream_ann_topk(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.Similarity
     val cents = graft.plans.BroadcastContract.boundedCollect(
         Similarity.labelCentroids(s, dir), "IVF routing table: one row per label")
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
-    val best = routeExpr(cents.toSeq,
-      s.conf.get("spark.graft.x26MaxLiteralCells", "32").toInt)
+      .map(r => (r.getInt(0).toLong, r.getSeq[Double](1))).toSeq
+    val best = element_at(Similarity.nearest(col("qemb"), Similarity.centroidLit(cents), 1,
+      Similarity.negDot(ex = true)), 1)
     val routed = embStream(s, dir)
       .filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
-      .withColumn("cell", best.getField("cell"))
+      .withColumn("cell", best.getField("cluster").cast("int"))
     val corpus = Tables.embeddings(s, dir)
       .select(col("vec_id").as("n_id"), col("label").as("cell"),
               col("embedding").as("ne"))
@@ -1895,12 +1853,11 @@ object Streams {
     * Composition, stage for stage:
     *  1. BOTH frozen artifacts are structurally bounded and fold in via
     *     the sanctioned `boundedCollect`: the k-row TRAINED centroid table
-    *     becomes a per-row top-p cell expression (array_sort over
-    *     (exact sqDist, cluster) structs — bit-identical to the batch
-    *     router's ORDER BY dist, cluster), and the 1-row per-dim scale
-    *     array becomes the per-row int8 quantize (`zip_with` against a
-    *     literal — byte-identical codes to [[graft.queries.Similarity]]'s
-    *     corpus encoder).
+    *     becomes a per-row top-p cell expression (`Similarity.nearest`
+    *     under the exact sqDist — the batch router's own function), and
+    *     the 1-row per-dim scale array becomes the per-row int8 quantize
+    *     (`zip_with` against a literal — byte-identical codes to
+    *     [[graft.queries.Similarity]]'s corpus encoder).
     *  2. The cell scan is a stream-static equi-join on the cluster key
     *     against the settled code+raw table — each query touches its p
     *     probed cells, never the corpus (x26's pruning discipline on the
@@ -1925,17 +1882,14 @@ object Streams {
     val cents = graft.plans.BroadcastContract.boundedCollect(
         Similarity.sq8TrainedCentroids(s, dir),
         "trained coarse router: k rows by construction")
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
     val scales = graft.plans.BroadcastContract.boundedCollect(
         Similarity.sq8Scales(s, dir),
         "per-dimension SQ8 scales: one row by aggregation")
       .head.getSeq[Double](0)
-    // per-row top-p routing: sort (dist, cluster) structs, keep p, project
     val routeCells = transform(
-      slice(array_sort(array(cents.map { case (cl, ce) =>
-        struct(Similarity.exactSqDist(col("qemb"), typedlit(ce)).as("dist"),
-               lit(cl).as("cluster"))
-      }: _*)), 1, probes), c => c.getField("cluster"))
+      Similarity.nearest(col("qemb"), Similarity.centroidLit(cents), probes,
+        Similarity.sqDist(_, _, exact = true)), c => c.getField("cluster"))
     // per-row int8 quantize against the frozen scales (the corpus
     // encoder's exact op sequence)
     val qq8 = zip_with(col("qemb"), typedlit(scales), (x, sc) =>
@@ -2576,13 +2530,12 @@ object Streams {
     * runs at write time (x26 is the read path; together they close the
     * serving loop). Both frozen artifacts are structurally bounded and
     * fold in via the sanctioned replicate-bounded-state move
-    * (`boundedCollect`): the k-row settled coarse quantizer becomes a
-    * nearest-cell argmin over literals (x26's array_min form, distance
-    * metric instead of dot, the winning centroid carried in the struct so
-    * the residual reuses it); the ≤ 8×4 subvector codebook becomes eight
-    * per-subspace argmins over the residual slices. No state store, no
-    * watermark, no shuffle — a pure stateless projection that scales with
-    * arrival rate alone (x24's class).
+    * (`boundedCollect`): the k-row settled coarse quantizer becomes one
+    * literal array routed by `Similarity.nearest` (the winning centroid
+    * rides in its struct, so the residual reuses it); the ≤ 8×4 subvector
+    * codebook becomes eight per-subspace `nearest` calls over the residual
+    * slices. No state store, no watermark, no shuffle — a pure stateless
+    * projection that scales with arrival rate alone (x24's class).
     *
     * Exactness: every fold is the proven exact-decimal sqDist; assignment
     * ties break (dist, cluster) and code ties (sqd, c) — bit-for-bit the
@@ -2604,7 +2557,7 @@ object Streams {
     val idxS = Similarity.ivfpqSettledIndex(s, dir, ex = true)
     val cents = graft.plans.BroadcastContract.boundedCollect(idxS.coarse,
         "frozen settled coarse quantizer: k rows by seeding")
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
     // codebook rows (j, c, i, cv) → per-subspace (c, 8-dim subvector)
     val cbByJ = graft.plans.BroadcastContract.boundedCollect(idxS.cb1,
         "frozen residual codebook: <= 8x4x8 rows by construction")
@@ -2612,24 +2565,19 @@ object Streams {
       .groupBy(_._1).map { case (j, rows) =>
         j -> rows.groupBy(_._2).map { case (c, dims) =>
           c -> dims.sortBy(_._3).map(_._4).toSeq
-        }.toSeq.sortBy(_._1)
+        }.toSeq
       }
-    // nearest settled cell, winning centroid carried for the residual
-    val best = array_min(array(cents.map { case (cl, ce) =>
-      struct(Similarity.exactSqDist(col("embedding"), typedlit(ce)).as("d"),
-             lit(cl).as("cell"), typedlit(ce).as("cemb"))
-    }: _*))
+    def nearest1(v: Column, cs: Seq[(Long, Seq[Double])]): Column =
+      element_at(Similarity.nearest(v, Similarity.centroidLit(cs), 1,
+        Similarity.sqDist(_, _, exact = true)), 1)
     val codesOf = (0 until 8).map { j =>
-      val subJ = slice(col("res"), j * 8 + 1, 8)
-      val bestCode = array_min(array(cbByJ(j).map { case (c, cvs) =>
-        struct(Similarity.exactSqDist(subJ, typedlit(cvs)).as("d"), lit(c).as("c"))
-      }: _*))
-      struct(lit(j.toLong).as("j"), bestCode.getField("c").as("c"))
+      val bestCode = nearest1(slice(col("res"), j * 8 + 1, 8), cbByJ(j))
+      struct(lit(j.toLong).as("j"), bestCode.getField("cluster").as("c"))
     }
     in
       .filter(col("vec_id") % 10 === 0) // the arriving delta slice
-      .withColumn("best", best)
-      .select(col("vec_id"), col("best.cell").as("cell"),
+      .withColumn("best", nearest1(col("embedding"), cents)) // centroid kept for the residual
+      .select(col("vec_id"), col("best.cluster").as("cell"),
         zip_with(col("embedding"), col("best.cemb"),
           (x, c) => x.cast("double") - c).as("res"))
       .select(col("vec_id"), col("cell"), explode(array(codesOf: _*)).as("jc"))

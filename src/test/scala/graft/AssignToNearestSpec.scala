@@ -9,8 +9,12 @@ class AssignToNearestSpec extends SparkSpec {
     import spark.implicits._
     val emb = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
     val cents = Seq.empty[(Long, Seq[Double])].toDF("cluster", "cemb")
-    for (ex <- Seq(true, false)) {
-      val e = intercept[Exception](Similarity.assignToNearest(emb, cents, ex).collect())
+    // the p = 1 assignment and a p = 2 route both fail
+    for (ex <- Seq(true, false);
+         routed <- Seq(Similarity.assignToNearest(emb, cents, ex),
+                       Similarity.routeNearest(emb, emb("embedding"), cents, 2,
+                         Similarity.sqDist(_, _, ex)))) {
+      val e = intercept[Exception](routed.collect())
       val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage)).toSeq
       assert(msgs.exists(_.contains("INVALID_ARRAY_INDEX_IN_ELEMENT_AT")), msgs.mkString("\n"))

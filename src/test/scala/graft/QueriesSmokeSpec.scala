@@ -9,15 +9,34 @@ class QueriesSmokeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** What the three full-surface tests read of one declared query: its row
+    * count and, for a batch query, the broadcast-contract violations of its
+    * analyzed and optimized plans. */
+  private case class Walked(rows: Long, unboundedHints: Seq[String],
+                            unboundedNonEquiJoins: Seq[String])
+
+  /** Every declared query built once. Building a query can run eager
+    * checkpoints (and, for the x-queries, the whole stream), so the three
+    * tests share this one walk. The x-queries execute their streams inside
+    * their functions, so only batch plans are walked. */
+  private lazy val walk: Seq[(String, Walked)] = SparkEntry.queries.toSeq.map {
+    case (name, fn) =>
+      val df = fn(spark, dir)
+      val batch = !name.startsWith("x")
+      name -> Walked(df.count(),
+        if (batch) graft.plans.BroadcastContract.unboundedHints(df.queryExecution.analyzed)
+        else Nil,
+        if (batch) graft.plans.BroadcastContract.unboundedNonEquiJoins(
+          df.queryExecution.optimizedPlan)
+        else Nil)
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("every declared query runs and returns rows at sf0.001") {
-    val empties = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, dir).count()
-      if (n == 0) Some(name) else None
-    }
+    val empties = walk.collect { case (name, w) if w.rows == 0 => name }
     // near-dup pairs may legitimately be empty at tiny scale; the invariant
     // audits are empty exactly when the invariant holds
     val allowedEmpty = Set("d2_ngram_jaccard", "d3_minhash_lsh", "s2_lsh_neardup",
@@ -212,18 +231,13 @@ class QueriesSmokeSpec extends SparkSpec {
 
   test("no broadcast hint on an unbounded relation (100 TB contract)") {
     // Contract + bounding rules live in graft.plans.BroadcastContract (main
-    // code, shared with Streams.runToMemory). Here: walk every BATCH
-    // query's analyzed plan. The x-queries execute streams inside their
-    // functions, so their plans aren't walkable without running them — they
-    // are covered instead by runToMemory's runtime assertBounded, which
-    // every streaming query passes through (the rows-smoke test above runs
-    // all 17, so a violation fails this suite via that path).
-    val streaming = SparkEntry.queries.keySet.filter(_.startsWith("x"))
-    val bad = SparkEntry.queries.toSeq.collect {
-      case (name, fn) if !streaming(name) =>
-        graft.plans.BroadcastContract.unboundedHints(
-          fn(spark, dir).queryExecution.analyzed).map(n => s"$name: $n")
-    }.flatten
+    // code, shared with Streams.runToMemory). Here: every BATCH query's
+    // analyzed plan, from the shared walk. The x-queries execute streams
+    // inside their functions, so their plans aren't walkable without
+    // running them — they are covered instead by runToMemory's runtime
+    // assertBounded, which every streaming query passes through (the walk
+    // runs them all, so a violation fails this suite via that path).
+    val bad = walk.flatMap { case (name, w) => w.unboundedHints.map(n => s"$name: $n") }
     assert(bad.isEmpty,
       s"unbounded relation under a broadcast hint:\n${bad.mkString("\n")}")
   }
@@ -233,12 +247,8 @@ class QueriesSmokeSpec extends SparkSpec {
     // relations is quadratic however it's physically planned. Walk every
     // batch query's OPTIMIZED plan (post-pushdown, where join conditions
     // are in final form) and require a bounded side on each non-equi join.
-    val streaming = SparkEntry.queries.keySet.filter(_.startsWith("x"))
-    val bad = SparkEntry.queries.toSeq.collect {
-      case (name, fn) if !streaming(name) =>
-        graft.plans.BroadcastContract.unboundedNonEquiJoins(
-          fn(spark, dir).queryExecution.optimizedPlan).map(j => s"$name: $j")
-    }.flatten
+    val bad = walk.flatMap { case (name, w) =>
+      w.unboundedNonEquiJoins.map(j => s"$name: $j") }
     assert(bad.isEmpty,
       s"non-equi join with no bounded side:\n${bad.mkString("\n")}")
   }
@@ -473,40 +483,42 @@ class QueriesSmokeSpec extends SparkSpec {
   }
 
   test("x26 routing falls back to the O(1)-codegen array form above the label threshold") {
-    // the unrolled argmax inlines one exact-decimal fold subtree PER LABEL
-    // — at a synthetic 300-label inventory its expression tree is O(labels)
-    // and would blow codegen; above x26MaxLiteralCells the centroid table
-    // must ride as one literal array with a runtime transform loop whose
-    // tree size is label-count-INDEPENDENT, and both forms must route
-    // every query vector identically (same fold, same tie-break)
+    // x26 routes through Similarity.nearest over ONE literal centroid
+    // array: the routing expression's tree must not grow with the label
+    // inventory, and every query vector must land on the driver-computed
+    // exact-decimal argmax of the dot product, ties to the lower label
     import org.apache.spark.sql.catalyst.expressions.Expression
+    import graft.queries.Similarity
     val q0 = Tables.embeddings(spark, dir).limit(1)
       .select(col("embedding").as("qemb"))
     def treeSize(c: org.apache.spark.sql.Column): Int = {
       def go(e: Expression): Int = 1 + e.children.map(go).sum
       q0.select(c.as("x")).queryExecution.analyzed.expressions.map(go).sum
     }
+    // deterministic synthetic centroids; label l and l + 150 share one
+    // vector, so at 300 labels every argmax is an exact tie
     val mk = (n: Int) => (0 until n).map(l =>
-      (l, Seq.tabulate(64)(i => math.sin(l * 64 + i)))) // deterministic synth centroids
+      (l.toLong, Seq.tabulate(64)(i => math.sin((l % 150) * 64 + i))))
+    def route(cents: Seq[(Long, Seq[Double])]) =
+      element_at(Similarity.nearest(col("qemb"), Similarity.centroidLit(cents), 1,
+        Similarity.negDot(ex = true)), 1).getField("cluster")
     val small = mk(8); val big = mk(300)
-    val compact8 = graft.streaming.Streams.routeExpr(small, 0)
-    val compact300 = graft.streaming.Streams.routeExpr(big, 0)
-    assert(treeSize(compact300) == treeSize(compact8),
-      "compact routing tree must not grow with the label inventory")
-    val unrolled300 = graft.streaming.Streams.routeExpr(big, 1000)
-    assert(treeSize(unrolled300) > 100 * treeSize(compact300),
-      "unrolled form unexpectedly small — threshold test is vacuous")
-    // default threshold actually switches: 300 > 32 picks the compact form
-    assert(treeSize(graft.streaming.Streams.routeExpr(big, 32)) == treeSize(compact300))
-    // bit-identical decisions: route real query vectors through both forms
+    assert(treeSize(route(big)) == treeSize(route(small)),
+      "routing tree must not grow with the label inventory")
+    def exactDot(q: Seq[Float], c: Seq[Double]): Double =
+      q.zip(c).map { case (x, y) =>
+        BigDecimal(x.toDouble * y).setScale(20, BigDecimal.RoundingMode.HALF_UP)
+      }.sum.toDouble
     val q = Tables.embeddings(spark, dir).limit(20)
       .select(col("embedding").as("qemb"))
-    val rows = q.select(
-        graft.streaming.Streams.routeExpr(big, 1000).getField("cell").as("a"),
-        graft.streaming.Streams.routeExpr(big, 0).getField("cell").as("b"))
-      .collect()
-    assert(rows.nonEmpty && rows.forall(r => r.getInt(0) == r.getInt(1)),
-      "routing decisions diverge between the unrolled and array forms")
+    val rows = q.select(col("qemb"), route(big).as("cell")).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val qv = r.getSeq[Float](0)
+      val want = big.map { case (l, ce) => (-exactDot(qv, ce), l) }.min._2
+      assert(want < 150 && r.getLong(1) == want,
+        s"routed to ${r.getLong(1)}, driver argmax $want")
+    }
   }
 
   test("cluster card partitions the corpus and bounds its moments (s14)") {

@@ -528,11 +528,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("assignToNearest zero-shuffle fold equals the brute-force argmin, ties to lower cluster") {
-    // r16 rewrote the assignment from a groupBy argmin + two joins (the
-    // r15 IVF-family regression) to a pure per-row aggregate() fold over
-    // the broadcast centroid array — this pins the fold (both precision
-    // paths) against an in-memory argmin, with duplicated centroid
-    // vectors forcing exact distance ties.
+    // assignment and top-p routing are one per-row sort over the broadcast
+    // centroid array (Similarity.nearest); this pins both precision paths
+    // against an in-memory argmin and a driver-side sort by
+    // (dist, cluster), with duplicated centroid vectors forcing exact
+    // distance ties.
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val emb = (0L until 60L).map(i => (i, Seq.fill(4)(rnd.nextInt(3).toDouble)))
@@ -540,11 +540,9 @@ class SimilaritySpec extends SparkSpec {
     val cents = cents0.updated(3, (3L, cents0(1)._2)) // clusters 1 and 3 tie exactly
     val embDf = emb.toDF("vec_id", "embedding")
     val centDf = cents.toDF("cluster", "cemb")
-    val expected = emb.map { case (id, e) =>
-      id -> cents.map { case (c, ce) =>
-        (e.zip(ce).map { case (x, y) => (x - y) * (x - y) }.sum, c)
-      }.min._2
-    }.toMap
+    def byDist(e: Seq[Double]): Seq[(Double, Long)] =
+      cents.map { case (c, ce) => (e.zip(ce).map { case (x, y) => (x - y) * (x - y) }.sum, c) }
+    val expected = emb.map { case (id, e) => id -> byDist(e).min._2 }.toMap
     for (ex <- Seq(true, false)) {
       val out = graft.queries.Similarity.assignToNearest(embDf, centDf, ex)
       val rows = out.collect()
@@ -557,6 +555,19 @@ class SimilaritySpec extends SparkSpec {
         assert(r.getAs[scala.collection.Seq[Double]]("cemb") == cmap(r.getLong(2)), s"ex=$ex cemb")
         assert(r.getAs[scala.collection.Seq[Double]]("embedding") ==
           emb(r.getLong(0).toInt)._2, s"ex=$ex embedding")
+      }
+      // top-p: probe i is the i-th entry of the (dist, cluster) sort
+      for (p <- Seq(1, 2, 5)) {
+        val got = Similarity.routeNearest(embDf, embDf("embedding"), centDf, p,
+            Similarity.sqDist(_, _, ex))
+          .collect().groupBy(_.getAs[Long]("vec_id")).map { case (id, rs) =>
+            id -> rs.map(r => r.getAs[Int]("probe") -> r.getAs[Long]("cluster")).sorted.toSeq
+          }
+        val want = emb.map { case (id, e) =>
+          id -> byDist(e).sorted.take(p).map(_._2).zipWithIndex
+            .map { case (c, i) => (i + 1) -> c }
+        }.toMap
+        assert(got == want, s"ex=$ex p=$p")
       }
     }
   }

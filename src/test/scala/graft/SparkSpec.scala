@@ -9,8 +9,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = Session.builder(4)
-    .config("spark.sql.warehouse.dir", // keep saveAsTable out of the repo
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val s = Session.builder(4)
+      .config("spark.sql.warehouse.dir", // keep saveAsTable out of the repo
+        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN") // as Session.fromEnv
+    s
+  }
 }
