@@ -127,29 +127,22 @@ object Bench {
     // calib. The drifting quantity is MICRO-BATCH SCHEDULING LATENCY (trigger
     // planning, state-store commits, sink bookkeeping), orthogonal to
     // CPU throughput. calib_stream times a fixed, deterministic, no-op
-    // FMGWS query over eight one-row files (maxFilesPerTrigger=1 → eight
+    // FMGWS query, started through the x-block's runner
+    // (`Streams.runToMemory`), over eight one-row files (maxFilesPerTrigger=1 → eight
     // micro-batches; compute is nil, so per-trigger scheduling cost is
     // the whole number) 3×, min reported — streaming deltas are read
     // against THIS scalar's window ratio, batch deltas against calib's.
     val calibStream = {
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger, GroupStateTimeout}
+      import org.apache.spark.sql.streaming.{OutputMode, GroupStateTimeout}
+      import spark.implicits._
       val base = java.nio.file.Files.createTempDirectory("graft_calib_stream")
       val streamDir = base.resolve("stream")
       java.nio.file.Files.createDirectories(streamDir)
-      for (i <- 0 until 8) {
-        val tmp = base.resolve(s"tmp$i")
-        spark.range(i.toLong, i.toLong + 1L).coalesce(1).write.parquet(tmp.toString)
-        // Files.list returns an open directory stream — close it, or each
-        // bench run leaks one fd per chunk file
-        val ls = java.nio.file.Files.list(tmp)
-        val part = try ls
-          .filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
-        finally ls.close()
-        java.nio.file.Files.move(part, streamDir.resolve(f"$i%02d_chunk.parquet"))
-      }
+      for (i <- 0 until 8)
+        graft.streaming.Streams.writeOneFile(spark.range(i.toLong, i.toLong + 1L).toDF(),
+          streamDir.resolve(f"$i%02d_chunk.parquet"), "parquet")
       val schema = spark.read.parquet(streamDir.toString).schema
-      def run(i: Int): Double = {
-        import spark.implicits._
+      def run(): Double = {
         val t0 = System.nanoTime()
         val out = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -162,13 +155,11 @@ object Bench {
               st.update(n)
               Iterator.single((k, n))
           }
-        val q = out.toDF("k", "n").writeStream.format("memory")
-          .queryName(s"graft_calib_stream_${i}_${System.nanoTime()}")
-          .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        graft.streaming.Streams.runToMemory(out.toDF("k", "n"), OutputMode.Append(),
+          "graft_calib_stream")
         (System.nanoTime() - t0) / 1e9
       }
-      val v = (1 to 3).map(run).min
+      val v = (1 to 3).map(_ => run()).min
       // the calibration fixture is ephemeral — delete it, or three runs
       // per bench accumulate one temp tree each in /tmp
       val walk = java.nio.file.Files.walk(base)

@@ -112,19 +112,11 @@ object LdbcE2E {
     * Shared by ldbc_dsv2 and ldbc_roundtrip. */
   private def cachedWireLines(s: SparkSession, dir: String): java.nio.file.Path = {
     import java.nio.file.Files
-    import scala.util.Using
     val linesDir = graft.streaming.Streams.eventsDerivedDir(dir, "ldbc_lines")
     val marker = linesDir.resolve("lines.txt")
     if (!Files.exists(marker)) {
       Files.createDirectories(linesDir)
-      val tmp = linesDir.resolve("_build")
-      taggedWireLines(s, dir).coalesce(1).write.mode("overwrite").text(tmp.toString)
-      val part = Using.resource(Files.list(tmp))(
-        _.filter(_.toString.endsWith(".txt")).findFirst().get())
-      Files.move(part, marker)
-      Using.resource(Files.walk(tmp))(
-        _.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p)))
+      graft.streaming.Streams.writeOneFile(taggedWireLines(s, dir), marker, "text")
     }
     marker
   }

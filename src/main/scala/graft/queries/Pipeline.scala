@@ -760,7 +760,8 @@ object Pipeline {
     // checkpointing w and bias separately costs two eager job barriers per
     // iteration, whose scheduling floor, not data, dominates at bench SF
     // (32- and 8-core times match). The fused relation
-    // tags the bias row with a NULL bucket; one barrier per iteration
+    // tags the bias row with a NULL bucket (a weight row's bucket is a
+    // prefix of md5 of a non-null gram, never NULL); one barrier per iteration
     // computes both branches inside one job. The per-iteration bias
     // checkpoint REASON is unchanged (un-checkpointed, bias_i's lineage
     // embeds g0_1..g0_i — quadratic doc passes); the arithmetic is

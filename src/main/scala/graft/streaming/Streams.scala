@@ -21,11 +21,15 @@ import scala.util.Using
   * update mode emitting per event, exactly like the reference's
   * `ValueState` process functions.
   *
+  * Every query ends in [[runToMemory]], the one place that starts a stream.
+  * The state store is the session's provider (HDFS-backed by default), except
+  * for `transformWithState` plans, which need RocksDB: the runner picks it
+  * for those from the plan. Either way the keyed state replaces the
+  * reference's external memcached (design-document.pdf p.1 §2.1).
+  *
   * Scale notes: a streaming windowed agg shuffles once on (window, key) with
   * partial aggregation, the same plan as batch; `flatMapGroupsWithState`
-  * shuffles once on the key and holds O(1) state per key in the state store
-  * (RocksDB-backed on a real cluster — the design the reference wanted
-  * instead of external memcached, design-document.pdf p.1 §2.1).
+  * shuffles once on the key and holds O(1) state per key in the state store.
   */
 object Streams {
 
@@ -74,9 +78,39 @@ object Streams {
     val streamDir = derivedDir(dir, table)
     Files.createDirectories(streamDir)
     linkTable(streamDir, s"$table.parquet", dir, table)
-    val reader = s.readStream.schema(s.read.parquet(Tables.path(dir, table)).schema)
+    dirStream(s, streamDir, s"$table.parquet", maxFilesPerTrigger)
+  }
+
+  /** The parquet files of `streamDir` as a file stream with the schema of
+    * its file `schemaFile`. The source takes files oldest first, so the
+    * directory builders write them one by one in name order. */
+  private def dirStream(s: SparkSession, streamDir: Path, schemaFile: String,
+                        maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val schema = s.read.parquet(streamDir.resolve(schemaFile).toString).schema
+    val reader = s.readStream.schema(schema)
     maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
       .parquet(streamDir.toString)
+  }
+
+  /** The jittered arrival-order replay `name` (see [[replayStreamDirCols]])
+    * as a stream of `filesPerTrigger` chunk files per micro-batch. */
+  private def replayStream(s: SparkSession, dir: String, name: String, extra: Seq[String],
+                           filesPerTrigger: Int = 1): DataFrame =
+    dirStream(s, replayStreamDirCols(s, dir, name, extra), "0_chunk.parquet",
+      Some(filesPerTrigger))
+
+  /** Write `df` as the one file `dest`: coalesce to one partition, write it
+    * into a sibling build directory, move the part file to `dest` (replacing
+    * a file a crashed build left there) and delete the build directory. */
+  private[graft] def writeOneFile(df: DataFrame, dest: Path, format: String): Unit = {
+    val tmp = dest.resolveSibling(s"_build_${dest.getFileName}")
+    df.coalesce(1).write.mode("overwrite").format(format).save(tmp.toString)
+    val part = Using.resource(Files.list(tmp))(
+      _.iterator().asScala.find(_.getFileName.toString.startsWith("part-")))
+      .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
+    Files.move(part, dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Using.resource(Files.walk(tmp))(
+      _.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p)))
   }
 
   /** The events table as a file stream, timestamps normalized. */
@@ -106,47 +140,47 @@ object Streams {
       case _ => raw
     }
 
-  /** Run a bounded streaming query to completion against an in-memory sink
-    * and return the final table.
-    *
-    * The stream is PLANNED with a reduced shuffle-partition count (state
-    * store instances = shuffle partitions, each paying a per-micro-batch
-    * commit; these bounded replays are overhead-bound, not data-bound, so
-    * 32 partitions × 5 batches × 2 stores is pure fixed cost). This is
-    * harness tuning for the bounded replay only — a production deployment
-    * sizes `spark.sql.shuffle.partitions` to the stream's real key
-    * cardinality and keeps the session default. */
-  private val runLock = new Object
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val providerLock = new Object
 
-  private def runToMemory(df: DataFrame, mode: OutputMode, name: String): DataFrame = {
-    // Every streaming query passes through here — enforce the 100 TB
-    // broadcast contract at runtime (the batch spec walk can't see these
-    // plans without executing the stream, so the check lives at the choke
-    // point instead).
-    graft.plans.BroadcastContract.assertBounded(df, name)
+  /** Run a bounded stream to completion (`Trigger.AvailableNow`) into a
+    * memory sink and return the sink's final table.
+    *
+    * The state store is chosen from the plan: a `transformWithState` node
+    * needs the RocksDB provider (the HDFS-backed one has no column
+    * families), so if the session's provider is another one, RocksDB is set
+    * for `start()` only and the previous value restored right after; the
+    * provider is fixed once the query has started. Every other stream runs
+    * under the session's provider, and every stream with the session's
+    * `spark.sql.shuffle.partitions`.
+    *
+    * `label` is the query name. The sink's temp view is dropped before the
+    * frame is returned (the frame keeps reading the sink), so a run leaves
+    * no table behind; two runs under one label must not overlap. The
+    * broadcast contract is asserted here because streaming plans cannot be
+    * walked without starting them. */
+  private[graft] def runToMemory(df: DataFrame, mode: OutputMode, label: String): DataFrame = {
+    graft.plans.BroadcastContract.assertBounded(df, label)
     val s = df.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    // The conf tweak is session-global while the stream plans; serialize
-    // concurrent bounded replays in the same session so one call's restore
-    // can't clobber another's reduced value mid-plan.
-    runLock.synchronized {
-      val prev = s.conf.getOption(key)
-      val reduced = math.min(8, prev.flatMap(_.toIntOption).getOrElse(8))
-      try {
-        s.conf.set(key, reduced.toString)
-        val q = df.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
+    val writer = df.writeStream.format("memory").queryName(label)
+      .outputMode(mode).trigger(Trigger.AvailableNow())
+    val tws = df.queryExecution.logical
+      .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+      .isDefined
+    val q =
+      if (!tws || s.conf.getOption(providerKey).contains(rocksDb)) writer.start()
+      else providerLock.synchronized {
+        val prev = s.conf.getAll.get(providerKey) // None when unset
+        s.conf.set(providerKey, rocksDb)
+        try writer.start()
+        finally prev.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
       }
-    }
-    s.table(name)
+    q.awaitTermination()
+    val out = s.table(label)
+    s.catalog.dropTempView(label)
+    out
   }
 
   /** X1: watermarked sliding-window counts (W2 streaming twin). Complete
@@ -160,7 +194,7 @@ object Streams {
              / 100.0).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("win_start"),
               col("event_type"), col("n"), col("sum_value"))
-    runToMemory(agg, OutputMode.Complete(), s"x1_mem_${System.nanoTime()}")
+    runToMemory(agg, OutputMode.Complete(), "x1_stream_sliding_counts")
       .orderBy("win_start", "event_type")
   }
 
@@ -179,8 +213,7 @@ object Streams {
       .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("tsMicros"), col("value"))
       .as[Ev]
-    runToMemory(runningSumStateful(ds).toDF(), OutputMode.Update(),
-        s"x2_mem_${System.nanoTime()}")
+    runToMemory(runningSumStateful(ds).toDF(), OutputMode.Update(), "x2_stream_running_sum")
       .orderBy("event_id")
   }
 
@@ -250,7 +283,7 @@ object Streams {
           state.update(st)
           emitted.iterator
       }
-    runToMemory(out.toDF(), OutputMode.Update(), s"x3_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Update(), "x3_stream_resolver")
       .orderBy("event_id")
   }
 
@@ -280,30 +313,20 @@ object Streams {
     }
   }
 
-  /** X9: the running sum via `transformWithState` (TWS). TWS mandates the
-    * RocksDB state-store provider, so the query sets it for its own run and
-    * restores the previous provider after. Final output = the batch st4
-    * oracle, like x2. */
+  /** X9: the running sum via `transformWithState` (TWS), which runs on the
+    * RocksDB state store ([[runToMemory]] picks it from the plan). Final
+    * output = the batch st4 oracle, like x2. */
   def x9_tws_running_sum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds: Dataset[Ev] = eventsStream(s, dir)
-        .select(col("event_id"), col("user_id"),
-                unix_micros(col("ts")).as("tsMicros"), col("value"))
-        .as[Ev]
-      val out = ds.groupByKey(_.user_id)
-        .transformWithState(new RunningSumProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-      runToMemory(out.toDF(), OutputMode.Update(), s"x9_mem_${System.nanoTime()}")
-        .orderBy("event_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
+    val ds: Dataset[Ev] = eventsStream(s, dir)
+      .select(col("event_id"), col("user_id"),
+              unix_micros(col("ts")).as("tsMicros"), col("value"))
+      .as[Ev]
+    val out = ds.groupByKey(_.user_id)
+      .transformWithState(new RunningSumProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+    runToMemory(out.toDF(), OutputMode.Update(), "x9_tws_running_sum")
+      .orderBy("event_id")
   }
 
   case class ParkedEdge(id: Long, parent: Long)
@@ -379,28 +402,15 @@ object Streams {
     * Final output = the batch st1 oracle. */
   def x10_tws_timer_resolver(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val streamDir = replayStreamDir(s, dir)
-      val schema = s.read.parquet(streamDir.resolve("0_chunk.parquet").toString).schema
-      val ds = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-        .select(col("event_id"), col("ts"), col("arrival_s"))
-        .withWatermark("ts", "30 minutes")
-        .as[TEdge]
-      val out = ds.groupByKey(e => if (e.event_id < 0) -1L else e.event_id / 7)
-        .transformWithState(new TimerResolverProcessor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update())
-      runToMemory(out.toDF(), OutputMode.Update(), s"x10_mem_${System.nanoTime()}")
-        .orderBy("event_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
+    val ds = replayStream(s, dir, "events_replay", Nil)
+      .select(col("event_id"), col("ts"), col("arrival_s"))
+      .withWatermark("ts", "30 minutes")
+      .as[TEdge]
+    val out = ds.groupByKey(e => if (e.event_id < 0) -1L else e.event_id / 7)
+      .transformWithState(new TimerResolverProcessor,
+        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update())
+    runToMemory(out.toDF(), OutputMode.Update(), "x10_tws_timer_resolver")
+      .orderBy("event_id")
   }
 
   case class FEv(event_id: Long, user_id: Long, tsMicros: Long, value: Double,
@@ -458,7 +468,7 @@ object Streams {
           state.update(st)
           outs.iterator
       }
-    runToMemory(out.toDF(), OutputMode.Update(), s"x7_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Update(), "x7_stream_features")
       .orderBy("event_id")
   }
 
@@ -579,8 +589,7 @@ object Streams {
               unix_micros(col("ts")).as("tsMicros"), col("value"),
               col("event_type"), col("props"))
       .as[FEv]
-    runToMemory(signatureStateful(ds).toDF(), OutputMode.Update(),
-        s"x35_mem_${System.nanoTime()}")
+    runToMemory(signatureStateful(ds).toDF(), OutputMode.Update(), "x35_stream_signature")
       .orderBy("event_id")
   }
 
@@ -612,7 +621,7 @@ object Streams {
           state.update(st)
           Iterator.single(EwmaOut(user, st.n, st.ewma))
       }
-    runToMemory(out.toDF(), OutputMode.Update(), s"x14_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Update(), "x14_stream_ewma")
       .orderBy("user_id")
   }
 
@@ -631,16 +640,12 @@ object Streams {
     * w10 oracle. */
   def x15_stream_ohlc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val streamDir = replayStreamDirCols(s, dir, "events_replay_ohlc",
-      Seq("user_id", "value"))
-    val schema = s.read.parquet(streamDir.resolve("0_chunk.parquet").toString).schema
     // 2 files per trigger (vs the timer queries' 1): the OHLC merge is
     // arrival-order-insensitive and nothing here fires at the watermark, so
     // halving the micro-batch count halves the state-store commit overhead
     // without touching the out-of-order semantics under test
-    val ds = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(streamDir.toString)
+    val ds = replayStream(s, dir, "events_replay_ohlc", Seq("user_id", "value"),
+        filesPerTrigger = 2)
       .withWatermark("ts", "30 minutes")
       .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("tsMicros"), col("value"))
@@ -673,7 +678,7 @@ object Streams {
           Iterator.single(OhlcOut(key._1, key._2, st.open, st.high, st.low,
             st.close, st.n, st.vol))
       }
-    val mem = runToMemory(out.toDF(), OutputMode.Update(), s"x15_mem_${System.nanoTime()}")
+    val mem = runToMemory(out.toDF(), OutputMode.Update(), "x15_stream_ohlc")
     import org.apache.spark.sql.expressions.Window
     mem.filter(col("user_id") =!= -1L)
       .withColumn("_rn", row_number().over( // keep each key's final bar
@@ -686,17 +691,13 @@ object Streams {
   case class TimerState(resolved: Map[Long, Long], parked: List[(Long, Long)])
 
   /** Build (once per events fingerprint, see [[eventsDerivedDir]]) a
-    * stream directory replaying `events` in the deterministic jittered
-    * ARRIVAL order of `Replay.arrivals` — 4 parquet chunk files in
-    * arrival order plus a far-future sentinel, so `maxFilesPerTrigger 1`
-    * yields micro-batches whose watermark advances exactly like the
-    * reference's replayed Kafka topic. */
-  private def replayStreamDir(s: SparkSession, dir: String): java.nio.file.Path =
-    replayStreamDirCols(s, dir, "events_replay", Nil)
-
-  /** Generalized replay dir: (event_id, ts, extra event columns, arrival_s)
-    * in jittered arrival order. Sentinel defaults per type: long → −1,
-    * double → 0.0, string → "". */
+    * stream directory `name` replaying `events` as (event_id, ts, `extra`
+    * event columns, arrival_s) in the deterministic jittered ARRIVAL order
+    * of `Replay.arrivals` — 4 parquet chunk files in arrival order plus a
+    * far-future sentinel, so `maxFilesPerTrigger 1` yields micro-batches
+    * whose watermark advances exactly like the reference's replayed Kafka
+    * topic. Sentinel defaults per type: long → −1, double → 0.0,
+    * string → "". */
   private[graft] def replayStreamDirCols(s: SparkSession, dir: String, name: String,
       extra: Seq[String]): java.nio.file.Path = {
     val streamDir = eventsDerivedDir(dir, name)
@@ -737,12 +738,7 @@ object Streams {
          ev.filter(col("_rk").between(lo, hi)).drop("_rk"))
       } :+ ("9_sentinel.parquet", sentinel)
       chunks.foreach { case (name, df) => // sequential: mtime order = name order
-        val tmp = streamDir.resolve(s"_build_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
-        Files.move(part, streamDir.resolve(name))
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
+        writeOneFile(df, streamDir.resolve(name), "parquet")
       }
     }
     streamDir
@@ -758,11 +754,7 @@ object Streams {
     * driving the retries. Final output = the batch st1 oracle. */
   def x3_timer_resolver(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val streamDir = replayStreamDir(s, dir)
-    val schema = s.read.parquet(streamDir.resolve("0_chunk.parquet").toString).schema
-    val ds = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
+    val ds = replayStream(s, dir, "events_replay", Nil)
       .select(col("event_id"), col("ts"), col("arrival_s"))
       .withWatermark("ts", "30 minutes")
       .as[TEdge]
@@ -812,7 +804,7 @@ object Streams {
           state.update(st)
           emitted.iterator
       }
-    runToMemory(out.toDF(), OutputMode.Update(), s"x3t_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Update(), "x3_timer_resolver")
       .orderBy("event_id")
   }
 
@@ -835,17 +827,13 @@ object Streams {
     * Scale: one shuffle on the window key with partial aggregation; state =
     * one running count per open window, evicted at the watermark. */
   def x16_emissions(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = replayStreamDir(s, dir)
-    val schema = s.read.parquet(streamDir.resolve("0_chunk.parquet").toString).schema
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
+    val agg = replayStream(s, dir, "events_replay", Nil)
       .filter(col("event_id") >= 0) // sentinel: update mode needs no flush
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n_events"))
       .select(unix_timestamp(col("window.start")).as("win_start"), col("n_events"))
-    runToMemory(agg, OutputMode.Update(), s"x16_mem_${System.nanoTime()}")
+    runToMemory(agg, OutputMode.Update(), "x16_late_refinement")
   }
 
   /** X16: the FINAL refined value per window — each window's count is
@@ -881,7 +869,7 @@ object Streams {
              / 100.0).as("sum_value"))
       .select(unix_timestamp(col("session_window.start")).as("sess_start"),
               col("user_id"), col("n_events"), col("sum_value"))
-    runToMemory(agg, OutputMode.Append(), s"x4_mem_${System.nanoTime()}")
+    runToMemory(agg, OutputMode.Append(), "x4_stream_sessions")
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "sess_start")
   }
@@ -905,7 +893,7 @@ object Streams {
              / 100.0).as("sum_value"))
       .select(unix_timestamp(col("session_window.start")).as("sess_start"),
               col("user_id"), col("n_events"), col("sum_value"))
-    runToMemory(agg, OutputMode.Append(), s"x23_mem_${System.nanoTime()}")
+    runToMemory(agg, OutputMode.Append(), "x23_stream_dyn_sessions")
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "sess_start")
   }
@@ -919,7 +907,7 @@ object Streams {
     val dedup = eventsStream(s, dir)
       .select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    runToMemory(dedup, OutputMode.Append(), s"x8_mem_${System.nanoTime()}")
+    runToMemory(dedup, OutputMode.Append(), "x8_stream_dedup")
       .orderBy("user_id", "event_type")
   }
 
@@ -944,7 +932,7 @@ object Streams {
       .select(col("user_id"), col("event_type"), col("hour_s"), col("ts"))
       .dropDuplicatesWithinWatermark("user_id", "event_type", "hour_s")
       .select(col("user_id"), col("event_type"), col("hour_s"))
-    runToMemory(dedup, OutputMode.Append(), s"x13_mem_${System.nanoTime()}")
+    runToMemory(dedup, OutputMode.Append(), "x13_stream_dedup_watermark")
       .orderBy("user_id", "event_type", "hour_s")
   }
 
@@ -982,7 +970,7 @@ object Streams {
       .select(col("p_id"), col("c_id"), col("p_user").as("user_id"),
               ((unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
                 / lit(1000000L)).cast("long").as("lag_s"))
-    runToMemory(joined, OutputMode.Append(), s"x11_mem_${System.nanoTime()}")
+    runToMemory(joined, OutputMode.Append(), "x11_stream_stream_join")
       .orderBy("p_id", "c_id")
   }
 
@@ -1023,15 +1011,8 @@ object Streams {
           java.time.LocalDateTime.ofInstant(farFuture, java.time.ZoneOffset.UTC)
         case _ => java.sql.Timestamp.from(farFuture)
       }
-      val tmp = Paths.get(streamDir.toString, "_sentinel_build")
-      s.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(sentinels(schema0, tsVal)).asJava,
-          schema0)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
-      Files.move(part, sentinelDone)
-      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
+      writeOneFile(s.createDataFrame(sentinels(schema0, tsVal).asJava, schema0),
+        sentinelDone, "parquet")
     }
     streamDir
   }
@@ -1039,12 +1020,8 @@ object Streams {
   /** Events as a 2-micro-batch stream (events file, then sentinel file). */
   private def sentinelEventsStream(s: SparkSession, dir: String, name: String,
       sentinels: (org.apache.spark.sql.types.StructType, Any) => Seq[Row]): DataFrame = {
-    val streamDir = sentinelStreamDir(s, dir, name, sentinels)
-    val schema = s.read.parquet(Tables.path(dir, "events")).schema
-    val raw = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
-    normalizeTs(raw)
+    normalizeTs(dirStream(s, sentinelStreamDir(s, dir, name, sentinels),
+      "0_events.parquet", Some(1)))
   }
 
   /** The ONE sentinel dir every watermark-flush consumer shares (x4's
@@ -1087,7 +1064,7 @@ object Streams {
       .select(col("p_id"), col("c_id"), col("p_user").as("user_id"),
               ((unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
                 / lit(1000000L)).cast("long").as("lag_s"))
-    runToMemory(joined, OutputMode.Append(), s"x12_mem_${System.nanoTime()}")
+    runToMemory(joined, OutputMode.Append(), "x12_stream_outer_join")
       .filter(col("user_id") =!= -1L)
       .orderBy("p_id", "c_id")
   }
@@ -1120,7 +1097,7 @@ object Streams {
               coalesce(col("p_user"), col("c_user")).as("user_id"),
               ((unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
                 / lit(1000000L)).cast("long").as("lag_s"))
-    runToMemory(joined, OutputMode.Append(), s"x17_mem_${System.nanoTime()}")
+    runToMemory(joined, OutputMode.Append(), "x17_stream_full_outer")
       .filter(col("user_id") >= 0)
       .orderBy("p_id", "c_id")
   }
@@ -1173,7 +1150,7 @@ object Streams {
              / 100.0).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("win_start"),
               col("c_mktsegment"), col("n"), col("sum_value"))
-    runToMemory(agg, OutputMode.Complete(), s"x5_mem_${System.nanoTime()}")
+    runToMemory(agg, OutputMode.Complete(), "x5_stream_static_join")
       .orderBy("win_start", "c_mktsegment")
   }
 
@@ -1208,12 +1185,8 @@ object Streams {
     * open windows × types, independent of corpus size. */
   def x18_stream_window_topk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val streamDir = replayStreamDirCols(s, dir, "events_replay_topk", Seq("event_type"))
-    val schema = s.read.parquet(streamDir.resolve("0_chunk.parquet").toString).schema
     val winMs = 6L * 3600 * 1000
-    val ds = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
+    val ds = replayStream(s, dir, "events_replay_topk", Seq("event_type"))
       .select(col("event_id"), col("ts"), col("event_type"), col("arrival_s"))
       .withWatermark("ts", "30 minutes")
       .as[TkEv]
@@ -1240,7 +1213,7 @@ object Streams {
             Iterator.empty
           }
       }
-    runToMemory(out.toDF(), OutputMode.Append(), s"x18_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Append(), "x18_stream_window_topk")
       .orderBy("win_start", "rank")
   }
 
@@ -1259,7 +1232,7 @@ object Streams {
     * batch window does.
     *
     * Scale: one shuffle on the key, a few bytes of state per user in the
-    * RocksDB store, per-event O(1) work. In production the counter would
+    * state store, per-event O(1) work. In production the counter would
     * carry a `ProcessingTimeTimeout` (or a windowed key) to expire idle
     * tenants; the bounded replay keeps `NoTimeout` so the final state
     * equals the batch order statistic the oracle computes. */
@@ -1270,8 +1243,7 @@ object Streams {
       .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("tsMicros"), lit(0.0).as("value"))
       .as[Ev]
-    runToMemory(admissionStateful(ds, Q).toDF(), OutputMode.Append(),
-        s"x19_mem_${System.nanoTime()}")
+    runToMemory(admissionStateful(ds, Q).toDF(), OutputMode.Append(), "x19_stream_admission")
       .orderBy("event_id")
   }
 
@@ -1327,27 +1299,18 @@ object Streams {
 
   /** X21: the admission quota via `transformWithState` — shares x19's
     * oracle (identical admission decisions), runs on the RocksDB provider
-    * TWS mandates, restoring the previous provider after. */
+    * TWS needs ([[runToMemory]] picks it from the plan). */
   def x21_tws_admission(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds: Dataset[Ev] = eventsStream(s, dir)
-        .select(col("event_id"), col("user_id"),
-                unix_micros(col("ts")).as("tsMicros"), lit(0.0).as("value"))
-        .as[Ev]
-      val out = ds.groupByKey(_.user_id)
-        .transformWithState(new AdmissionProcessor(5L),
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-      runToMemory(out.toDF(), OutputMode.Append(), s"x21_mem_${System.nanoTime()}")
-        .orderBy("event_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
+    val ds: Dataset[Ev] = eventsStream(s, dir)
+      .select(col("event_id"), col("user_id"),
+              unix_micros(col("ts")).as("tsMicros"), lit(0.0).as("value"))
+      .as[Ev]
+    val out = ds.groupByKey(_.user_id)
+      .transformWithState(new AdmissionProcessor(5L),
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
+    runToMemory(out.toDF(), OutputMode.Append(), "x21_tws_admission")
+      .orderBy("event_id")
   }
 
   case class DocTok(doc_id: Long, lang: String, n_tok: Long)
@@ -1394,8 +1357,7 @@ object Streams {
           state.update(off)
           outs.iterator
       }
-    runToMemory(out.toDF(), OutputMode.Append(),
-        s"x20_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Append(), "x20_stream_packing")
       .orderBy("doc_id")
   }
 
@@ -1436,7 +1398,7 @@ object Streams {
               md5(concat_ws(" ",
                 slice(col("tk"), (col("tok_start") + 1).cast("int"),
                       col("tok_len").cast("int")))).as("chunk_hash"))
-    runToMemory(out, OutputMode.Append(), s"x24_mem_${System.nanoTime()}")
+    runToMemory(out, OutputMode.Append(), "x24_stream_chunking")
       .orderBy("doc_id", "chunk_id")
   }
 
@@ -1486,7 +1448,7 @@ object Streams {
           first.foreach(state.update)
           outs.iterator
       }
-    runToMemory(out.toDF(), OutputMode.Append(), s"x22_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Append(), "x22_stream_incr_dedup")
       .orderBy("doc_id")
   }
 
@@ -1594,8 +1556,7 @@ object Streams {
     * Emits t14/c9's exact relation — shared oracle (final-value
     * fidelity). */
   def x37_stream_decontam(s: SparkSession, dir: String): DataFrame = {
-    runToMemory(x37Out(s, dir).toDF(), OutputMode.Append(),
-        s"x37_mem_${System.nanoTime()}")
+    runToMemory(x37Out(s, dir).toDF(), OutputMode.Append(), "x37_stream_decontam")
       .orderBy("train_doc", "eval_doc")
   }
 
@@ -1668,7 +1629,7 @@ object Streams {
 
   def x36_stream_media_ingest(s: SparkSession, dir: String): DataFrame = {
     runToMemory(mediaIngestStateful(x36Cands(s, dir)).toDF(), OutputMode.Append(),
-        s"x36_mem_${System.nanoTime()}")
+        "x36_stream_media_ingest")
       .orderBy("doc_id")
   }
 
@@ -1763,7 +1724,7 @@ object Streams {
           first.foreach(state.update)
           outs.iterator
       }
-    runToMemory(out.toDF(), OutputMode.Append(), s"x25_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Append(), "x25_stream_chunk_dedup")
       .orderBy("doc_id", "chunk_id")
   }
 
@@ -1835,7 +1796,7 @@ object Streams {
               col("n_id"))
       .groupBy(col("q_id"), col("cell"))
       .agg(topk(col("cosine"), col("n_id")).as("top"))
-    runToMemory(answers, OutputMode.Complete(), s"x26_mem_${System.nanoTime()}")
+    runToMemory(answers, OutputMode.Complete(), "x26_stream_ann_topk")
       .select(col("q_id"), col("cell"),
               posexplode(col("top")).as(Seq("pos", "e")))
       .select(col("q_id"), col("cell"), col("e._2").as("n_id"),
@@ -1921,7 +1882,7 @@ object Streams {
     val topk = graft.functions.TopKAgg.topKPayload(5)
     val answers = scored.groupBy(col("q_id"))
       .agg(topk(col("cosine"), col("n_id"), col("cluster"), col("iscore")).as("top"))
-    runToMemory(answers, OutputMode.Complete(), s"x38_mem_${System.nanoTime()}")
+    runToMemory(answers, OutputMode.Complete(), "x38_stream_sq8_serve")
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "e")))
       .select(col("q_id"), col("e._3").as("cell"), col("e._2").as("n_id"),
               col("e._4").as("iscore"), col("e._1").as("cosine"),
@@ -1978,7 +1939,7 @@ object Streams {
     val out = x39Out(s, dir).toDF()
       .withColumn("split", when(col("verdict") === "admit",
         graft.queries.Pipeline.splitOf(col("doc_id"))))
-    runToMemory(out, OutputMode.Append(), s"x39_mem_${System.nanoTime()}")
+    runToMemory(out, OutputMode.Append(), "x39_stream_release_admission")
       .orderBy("doc_id")
   }
 
@@ -2092,8 +2053,7 @@ object Streams {
     * the batch margin op-for-op. Shares c14's oracle (final-value
     * fidelity). */
   def x40_stream_quality_gate(s: SparkSession, dir: String): DataFrame =
-    runToMemory(x40Out(s, dir).toDF(), OutputMode.Append(),
-        s"x40_mem_${System.nanoTime()}")
+    runToMemory(x40Out(s, dir).toDF(), OutputMode.Append(), "x40_stream_quality_gate")
       .orderBy("doc_id")
 
   private[graft] def x40Out(s: SparkSession, dir: String): Dataset[QgOut] =
@@ -2279,8 +2239,7 @@ object Streams {
     * be exactly-once and contiguous per stage (the restart spec's
     * contract), but assigned in arrival order, as a real door's are. */
   def x41_stream_shard_placement(s: SparkSession, dir: String): DataFrame =
-    runToMemory(x41Out(s, dir).toDF(), OutputMode.Append(),
-        s"x41_mem_${System.nanoTime()}")
+    runToMemory(x41Out(s, dir).toDF(), OutputMode.Append(), "x41_stream_shard_placement")
       .orderBy("doc_id")
 
   private[graft] def x41Out(s: SparkSession, dir: String): Dataset[PlaceOut] =
@@ -2422,7 +2381,7 @@ object Streams {
     * the final round4 shares — no transcendental crosses engines. */
   def x42_stream_stage_skew(s: SparkSession, dir: String): DataFrame = {
     val placed = runToMemory(x42Counts(s, dir).toDF("stage", "n"),
-      OutputMode.Append(), s"x42_mem_${System.nanoTime()}")
+      OutputMode.Append(), "x42_stream_stage_skew")
     val arrived = placed.groupBy(col("stage")).agg(max(col("n")).as("n_arrived"))
     // the reading's finisher (shipped join, zero-fill, round4 shares,
     // skew) is Pipeline.stageSkewReport — ONE body with c19_fold_gate's
@@ -2544,7 +2503,7 @@ object Streams {
     * ([[graft.queries.Similarity.s18DeltaCodesSql]]). */
   def x34_stream_index_ingest(s: SparkSession, dir: String): DataFrame = {
     val out = x34Encode(s, dir)(embStream(s, dir))
-    runToMemory(out, OutputMode.Append(), s"x34_mem_${System.nanoTime()}")
+    runToMemory(out, OutputMode.Append(), "x34_stream_index_ingest")
       .orderBy("vec_id", "j")
   }
 
@@ -2656,7 +2615,7 @@ object Streams {
           val bucket = if (avg < 3.46) "head" else if (avg < 3.53) "middle" else "tail"
           Iterator.single(PplOut(rows.head.doc_id, rows.head.lang, n, avg, bucket))
       }
-    runToMemory(out.toDF(), OutputMode.Append(), s"x27_mem_${System.nanoTime()}")
+    runToMemory(out.toDF(), OutputMode.Append(), "x27_stream_perplexity")
       .orderBy("doc_id")
   }
 
@@ -2733,7 +2692,7 @@ object Streams {
             .map { case ((d, nh, sc), i) => Bm25Out(q, d, nh, sc, i + 1L) }
             .iterator
       }
-    runToMemory(answered.toDF(), OutputMode.Append(), s"x28_mem_${System.nanoTime()}")
+    runToMemory(answered.toDF(), OutputMode.Append(), "x28_stream_bm25")
       .orderBy("query_id", "rk")
   }
 
@@ -2762,8 +2721,7 @@ object Streams {
     val sketch = docsStream(s, dir)
       .select(explode(tk).as("tok")).as[String]
       .select(new graft.functions.MisraGriesAgg(k).toColumn.name("cands"))
-    val cands = runToMemory(sketch.toDF("cands"), OutputMode.Complete(),
-        s"x29_mem_${System.nanoTime()}")
+    val cands = runToMemory(sketch.toDF("cands"), OutputMode.Complete(), "x29_stream_heavy_hitters")
       .select(explode(col("cands")).as("tok"))
     val tokens = Tables.documents(s, dir).select(explode(tk).as("tok"))
     val total = tokens.agg(count(lit(1)).as("n"))
@@ -2812,8 +2770,7 @@ object Streams {
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("t"),
               tag.as("tag"))
       .as[FunEv]
-    runToMemory(funnelStateful(ds).toDF(), OutputMode.Update(),
-        s"x30_mem_${System.nanoTime()}")
+    runToMemory(funnelStateful(ds).toDF(), OutputMode.Update(), "x30_stream_funnel")
       .groupBy(col("user_id"))
       .agg(max(col("n_views")).as("n_views"), max(col("n_step2")).as("n_step2"),
            max(col("n_step3")).as("n_step3"))
@@ -2880,14 +2837,9 @@ object Streams {
     * store). */
   def x33_stream_funnel_buffered(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val streamDir = replayStreamDirCols(s, dir, "events_replay_funnel",
-      Seq("user_id", "event_type"))
-    val schema = s.read.parquet(streamDir.resolve("0_chunk.parquet").toString).schema
     val tag = when(col("event_type") === "view", 0)
       .when(col("event_type") === "click", 1).otherwise(2)
-    val ds = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir.toString)
+    val ds = replayStream(s, dir, "events_replay_funnel", Seq("user_id", "event_type"))
       // watermark BEFORE the type filter: the far-future sentinel advances
       // it even though the row itself is discarded below
       .withWatermark("ts", "30 minutes")
@@ -2897,7 +2849,7 @@ object Streams {
               unix_micros(col("ts")).as("t"), tag.as("tag"))
       .as[FunBufEv]
     val mem = runToMemory(funnelBufferedStateful(ds).toDF(), OutputMode.Update(),
-        s"x33_mem_${System.nanoTime()}")
+        "x33_stream_funnel_buffered")
     import org.apache.spark.sql.expressions.Window
     mem
       .withColumn("rn", row_number().over( // n_seen strictly grows per emission
@@ -3011,8 +2963,7 @@ object Streams {
     val out = driftStateful(
       gramsOf(docsStream(s, dir).filter(col("doc_id") % 10 === 0)).as[DriftIn],
       scMap, stMap)
-    val snapshots = runToMemory(out.toDF(), OutputMode.Update(),
-        s"x31_mem_${System.nanoTime()}")
+    val snapshots = runToMemory(out.toDF(), OutputMode.Update(), "x31_stream_drift")
     // monotone delta_grams selects each language's final (= batch) reading
     snapshots
       .withColumn("rn", row_number().over(
@@ -3111,45 +3062,35 @@ object Streams {
     * readings to x31 trigger for trigger; shares t29's oracle. */
   def x32_tws_drift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tk = split(col("text"), " ")
-      def gramsOf(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), col("lang"), tk.as("tk"), size(tk).as("n"))
-        .select(col("doc_id"), col("lang"),
-          explode(concat(col("tk"),
-            when(col("n") >= 2,
-              expr("transform(sequence(1, n - 1), i -> concat(tk[i-1], ' ', tk[i]))"))
-              .otherwise(typedlit(Seq.empty[String])))).as("gram"))
-        .select(col("lang"),
-                substring(md5(col("gram").cast("binary")), 1, 2).as("bucket"))
-      val settledRel = gramsOf(Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
-        .groupBy(col("lang"), col("bucket")).agg(count(lit(1)).as("sc"))
-      val scMap = graft.plans.BroadcastContract.boundedCollect(settledRel,
-          "settled drift model: 256 buckets x bounded language inventory")
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val stMap = scMap.groupBy(_._1._1).map { case (l, kv) => l -> kv.values.sum }
-      val out = gramsOf(docsStream(s, dir).filter(col("doc_id") % 10 === 0))
-        .as[DriftIn]
-        .groupByKey(_.lang)
-        .transformWithState(new DriftProcessor(scMap, stMap),
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-      val snapshots = runToMemory(out.toDF(), OutputMode.Update(),
-          s"x32_mem_${System.nanoTime()}")
-      snapshots
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
-            .orderBy(col("delta_grams").desc)))
-        .filter(col("rn") === 1)
-        .select(col("lang"), col("delta_grams"), col("kl"), col("drifted"))
-        .orderBy("lang")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
+    val tk = split(col("text"), " ")
+    def gramsOf(df: DataFrame): DataFrame = df
+      .select(col("doc_id"), col("lang"), tk.as("tk"), size(tk).as("n"))
+      .select(col("doc_id"), col("lang"),
+        explode(concat(col("tk"),
+          when(col("n") >= 2,
+            expr("transform(sequence(1, n - 1), i -> concat(tk[i-1], ' ', tk[i]))"))
+            .otherwise(typedlit(Seq.empty[String])))).as("gram"))
+      .select(col("lang"),
+              substring(md5(col("gram").cast("binary")), 1, 2).as("bucket"))
+    val settledRel = gramsOf(Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
+      .groupBy(col("lang"), col("bucket")).agg(count(lit(1)).as("sc"))
+    val scMap = graft.plans.BroadcastContract.boundedCollect(settledRel,
+        "settled drift model: 256 buckets x bounded language inventory")
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val stMap = scMap.groupBy(_._1._1).map { case (l, kv) => l -> kv.values.sum }
+    val out = gramsOf(docsStream(s, dir).filter(col("doc_id") % 10 === 0))
+      .as[DriftIn]
+      .groupByKey(_.lang)
+      .transformWithState(new DriftProcessor(scMap, stMap),
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+    val snapshots = runToMemory(out.toDF(), OutputMode.Update(), "x32_tws_drift")
+    snapshots
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("lang"))
+          .orderBy(col("delta_grams").desc)))
+      .filter(col("rn") === 1)
+      .select(col("lang"), col("delta_grams"), col("kl"), col("drifted"))
+      .orderBy("lang")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -202,6 +202,26 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("the stream runner leaves no view and no conf behind; reruns under one label agree") {
+    val dir = "/root/testdata/sf0.001"
+    val confKeys = Seq("spark.sql.streaming.stateStore.providerClass",
+                       "spark.sql.shuffle.partitions")
+    def confs = confKeys.map(k => (spark.conf.getOption(k), spark.conf.getAll.get(k)))
+    def views = spark.catalog.listTables().collect().map(_.name).toSet
+    val (confsBefore, viewsBefore) = (confs, views)
+    // x9 is a transformWithState plan: the runner switches it to RocksDB
+    for (name <- Seq("x3_timer_resolver", "x9_tws_running_sum")) {
+      val run = graft.streaming.Streams.queries(name)
+      val first = run(spark, dir)
+      val rows = first.collect().toSeq
+      assert(rows.nonEmpty, name)
+      assert(run(spark, dir).collect().toSeq == rows, s"$name: the rerun differs")
+      assert(first.collect().toSeq == rows, s"$name: the first frame changed after the rerun")
+    }
+    assert(views -- viewsBefore == Set.empty, "the runner left temp views behind")
+    assert(confs == confsBefore)
+  }
+
   test("admission quota state carries across micro-batches") {
     // A user's events split across two triggers: the quota must bind
     // GLOBALLY (3 admitted total), not reset per trigger (which would
