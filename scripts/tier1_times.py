@@ -5,12 +5,10 @@ Reads the JUnit XML reports sbt writes (default `target/test-reports`):
 
     python3 scripts/tier1_times.py [report_dir] [--top N]
     python3 scripts/tier1_times.py [report_dir] --against OTHER_REPORT_DIR
-                                   [--suites A,B,...]
 
 The total is the sum of the suites' own times, so it leaves out sbt start-up
 and compilation. With `--against`, each suite's time is printed beside its
-time in the other run and the delta (this run minus the other); `--suites`
-limits the table to the named suites (simple or fully qualified names).
+time in the other run and the delta (this run minus the other).
 """
 import argparse
 import glob
@@ -40,10 +38,8 @@ def summary(suites):
             f"{tests} tests, {failed} failed or errored")
 
 
-def print_against(this, other, only):
-    def wanted(name):
-        return not only or name in only or name.rsplit(".", 1)[-1] in only
-    names = sorted((n for n in this.keys() | other.keys() if wanted(n)),
+def print_against(this, other):
+    names = sorted(this.keys() | other.keys(),
                    key=lambda n: -max(this.get(n, (0,))[0], other.get(n, (0,))[0]))
     print(f"{'this':>9} {'other':>9} {'delta':>9}  suite")
     for n in names:
@@ -62,8 +58,6 @@ def main():
     ap.add_argument("--top", type=int, default=10)
     ap.add_argument("--against", metavar="OTHER_REPORT_DIR",
                     help="print each suite's time beside this other run's")
-    ap.add_argument("--suites", default="",
-                    help="comma-separated suites to compare (default: all)")
     args = ap.parse_args()
 
     this = read_suites(args.report_dir)
@@ -71,7 +65,7 @@ def main():
     if args.against:
         other = read_suites(args.against)
         print(f"other: {summary(other)}")
-        print_against(this, other, {s for s in args.suites.split(",") if s})
+        print_against(this, other)
         return
     ranked = sorted(this.items(), key=lambda kv: -kv[1][0])
     for name, (t, n, bad) in ranked[:args.top]:

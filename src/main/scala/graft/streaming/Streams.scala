@@ -152,13 +152,16 @@ object Streams {
     * needs the RocksDB provider (the HDFS-backed one has no column
     * families), so if the session's provider is another one, RocksDB is set
     * for `start()` only and the previous value restored right after; the
-    * provider is fixed once the query has started. Every other stream runs
-    * under the session's provider, and every stream with the session's
-    * `spark.sql.shuffle.partitions`.
+    * provider is fixed once the query has started. The check and the swap
+    * share one lock, so two `transformWithState` starts never race. Other
+    * streams take no lock: they run under whatever provider the session
+    * holds when they start (its own one unless a swap is in flight), and
+    * every stream with the session's `spark.sql.shuffle.partitions`.
     *
-    * `label` is the query name. The sink's temp view is dropped before the
-    * frame is returned (the frame keeps reading the sink), so a run leaves
-    * no table behind; two runs under one label must not overlap. The
+    * `label` is the query name. The sink's temp view is dropped when the
+    * run ends, failed or not (a returned frame keeps reading the sink), so
+    * a run leaves no table behind; two runs under one label must not
+    * overlap. The
     * broadcast contract is asserted here because streaming plans cannot be
     * walked without starting them. */
   private[graft] def runToMemory(df: DataFrame, mode: OutputMode, label: String): DataFrame = {
@@ -170,17 +173,18 @@ object Streams {
       .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
       .isDefined
     val q =
-      if (!tws || s.conf.getOption(providerKey).contains(rocksDb)) writer.start()
+      if (!tws) writer.start()
       else providerLock.synchronized {
         val prev = s.conf.getAll.get(providerKey) // None when unset
-        s.conf.set(providerKey, rocksDb)
-        try writer.start()
-        finally prev.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
+        if (prev.contains(rocksDb)) writer.start()
+        else {
+          s.conf.set(providerKey, rocksDb)
+          try writer.start()
+          finally prev.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
+        }
       }
-    q.awaitTermination()
-    val out = s.table(label)
-    s.catalog.dropTempView(label)
-    out
+    try { q.awaitTermination(); s.table(label) }
+    finally s.catalog.dropTempView(label)
   }
 
   /** X1: watermarked sliding-window counts (W2 streaming twin). Complete
