@@ -8,13 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * It installs two things:
-  *   - the SQL names of every native function in `graft.functions`
-  *     (`nativeFunctions`), each behind the same argument-count check, so
-  *     SQL text can call them; DataFrame code uses the typed constructors
-  *     and needs none of this;
-  *   - the [[graft.plans.FuseDotProduct]] optimizer rule, which rewrites the
-  *     composed plain-double dot product to the native `dot_f32` loop.
+  * It installs the SQL names of every native function in `graft.functions`
+  * (`nativeFunctions`), each behind the same argument-count check, so SQL
+  * text can call them; DataFrame code uses the typed constructors and needs
+  * none of this.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -23,6 +20,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         FunctionIdentifier(f.name),
         new ExpressionInfo(f.cls.getName, f.name),
         f.sqlBuilder _))
-    ext.injectOptimizerRule(_ => graft.plans.FuseDotProduct)
   }
 }

@@ -25,7 +25,7 @@ object PlanDump {
         val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
         graft.queries.Similarity.assignToNearest(emb,
           graft.queries.Similarity.trainCoarseOn(
-            emb.filter(col("vec_id") < 1024), ex = false, 10), ex = false)
+            emb.filter(col("vec_id") < 1024), 10))
       })
     for (name <- qlist.split(",").map(_.trim).filter(_.nonEmpty)) {
       val df = probes.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)

@@ -6,22 +6,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expression for the float-vector dot product — the hot
-  * inner loop of every similarity operator (s1 norms+scores, s2/d5
-  * verification, s3 routing).
+/** Native Catalyst expression for the float-vector dot product in plain
+  * double: the lossless prefilter of c2 and s11, which rank or gate on it
+  * with a margin before the exact-decimal fold re-scores the survivors.
   *
-  * The composed production path `aggregate(zip_with(a,b,*), 0d, +)` builds an
-  * intermediate 64-element array per pair and walks higher-order-function
-  * plumbing per element; this expression reads both `ArrayData` buffers
-  * directly in one fused loop and participates in whole-stage codegen via
-  * `doGenCode` (a static call inside the generated loop — no allocation, no
-  * lambda dispatch). Accumulation order is ascending index, the same order
-  * as the fold it replaces, so results are bit-identical to the composed
-  * plain-double form (`SimilaritySpec` asserts it).
-  *
-  * Used on the `spark.graft.exactDecimals=false` production path; the
-  * default oracle path keeps the exact-decimal fold (cross-engine hash
-  * equality needs order-independent sums, which no double loop provides).
+  * It reads both `ArrayData` buffers directly in one fused loop and
+  * participates in whole-stage codegen via `doGenCode` (a static call
+  * inside the generated loop — no allocation, no lambda dispatch).
+  * Accumulation order is ascending index, so results are bit-identical to
+  * the composed `aggregate(zip_with(a,b,*), 0d, +)` form (`SimilaritySpec`
+  * asserts it). Oracle-hashed scores keep the exact-decimal fold:
+  * cross-engine hash equality needs order-independent sums, which no
+  * double loop provides.
   */
 case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -39,9 +35,8 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override def prettyName: String = "dot_f32"
   // Null semantics mirror the composed `aggregate(zip_with(a,b,*),0d,+)`
   // form exactly: zip_with null-pads length mismatches and a null element
-  // poisons the sum — both yield NULL here too, so the FuseDotProduct
-  // rewrite is semantics-preserving on ragged/nullable arrays, not just on
-  // the clean fixed-width embeddings.
+  // poisons the sum — both yield NULL here too, on ragged/nullable arrays
+  // as well as on the clean fixed-width embeddings.
   override def nullable: Boolean = true
 
   protected override def nullSafeEval(a: Any, b: Any): Any =

@@ -10,12 +10,11 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
   * the scoring loop of the SQ8 scalar-quantization serving path (s20/s21).
   *
   * Unlike the float dot product ([[DotProduct]]), whose plain-double fold
-  * is order-DEPENDENT and therefore only usable on the
-  * `spark.graft.exactDecimals=false` production path, integer addition is
-  * exact and order-independent: this expression is bit-identical to the
-  * DuckDB oracle's grouped `sum(qa.q * qb.q)` under ANY accumulation
-  * order, so the SQ8 scorer runs the fused codegen'd loop on BOTH the
-  * oracle and production paths — no decimal fallback needed. 64 products
+  * is order-DEPENDENT and therefore only usable as a margin prefilter,
+  * integer addition is exact and order-independent: this expression is
+  * bit-identical to the DuckDB oracle's grouped `sum(qa.q * qb.q)` under
+  * ANY accumulation order, so the SQ8 scorer runs the fused codegen'd loop
+  * on the oracle-checked path — no decimal fallback needed. 64 products
   * of values in [-127, 127] bound the sum well inside a long.
   *
   * Null semantics mirror the composed

@@ -35,10 +35,6 @@ package object functions {
 
   private val DotF32Fn = NativeFunction("dot_f32", 2, classOf[DotProduct],
     e => DotProduct(e(0), e(1)))
-  private val SqDistFn = NativeFunction("sq_dist", 2, classOf[SqDist],
-    e => SqDist(e(0), e(1)))
-  private val HyperplaneFpFn = NativeFunction("hyperplane_fp", 2, classOf[HyperplaneFp],
-    e => HyperplaneFp(e(0), e(1)))
   private val DotI8Fn = NativeFunction("dot_i8", 2, classOf[DotProductI8],
     e => DotProductI8(e(0), e(1)))
   private val BpeMergeFn = NativeFunction("bpe_merge", 3, classOf[BpeMerge],
@@ -59,15 +55,11 @@ package object functions {
 
   /** Every native function, as `GraftExtensions` injects them. */
   private[graft] val nativeFunctions: Seq[NativeFunction] = Seq(
-    DotF32Fn, SqDistFn, HyperplaneFpFn, DotI8Fn, BpeMergeFn, CdcSplitFn,
+    DotF32Fn, DotI8Fn, BpeMergeFn, CdcSplitFn,
     InterleaveBitsFn, UniqueWordsRatioFn, BloomFilterAggFn, MightContainFn)
 
   /** Float-vector dot product ([[DotProduct]]). */
   def dot_f32(a: Column, b: Column): Column = DotF32Fn(a, b)
-  /** Squared euclidean distance of float/double vectors ([[SqDist]]). */
-  def sq_dist(a: Column, b: Column): Column = SqDistFn(a, b)
-  /** Random-hyperplane sign fingerprint of `nbits` bits ([[HyperplaneFp]]). */
-  def hyperplane_fp(v: Column, nbits: Column): Column = HyperplaneFpFn(v, nbits)
   /** int8-vector dot product ([[DotProductI8]]). */
   def dot_i8(a: Column, b: Column): Column = DotI8Fn(a, b)
   /** One greedy left-to-right merge pass of the pair (a, b) ([[BpeMerge]]). */

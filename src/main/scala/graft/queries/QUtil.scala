@@ -23,7 +23,7 @@ object QUtil {
     * queries of one session consume (trained centroids, settled indexes,
     * verified pair tables) are built once per `(session, key)` and shared.
     * `key` is a tuple whose first element names the family, e.g.
-    * `("coarse", dir, ex, k)`; one key always maps to one value type.
+    * `("coarse", dir, k)`; one key always maps to one value type.
     *
     * Sessions are compared by reference, and entries of stopped contexts
     * are evicted on each miss. The map stores a memoized thunk, so the

@@ -48,40 +48,25 @@ object Similarity {
   private def semdedupSample(s: SparkSession): Int =
     s.conf.get("spark.graft.semdedupSample", SemdedupSampleDefault.toString).toInt
 
-  /** Production-precision switch: exact-decimal folds (default) make every
-    * dot product bit-identical across engines and execution orders — the
-    * determinism the DuckDB oracle hashes against — at ~a few× the cost of
-    * plain doubles. A production deployment that does not need cross-engine
-    * hash equality sets `spark.graft.exactDecimals=false` and gets the
-    * plain-double fold; `SimilaritySpec` asserts the two paths agree on the
-    * result set. */
-  private def exactDecimals(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.exactDecimals", "true").toBoolean
-
-  /** Dot product of two float-array columns — exact-decimal accumulation
-    * (order-independent, the oracle default) or the native codegen'd
-    * `dot_f32` expression (one fused loop over the raw array buffers, same
-    * ascending accumulation order as the fold it replaces — the production
-    * path). */
-  private def dot(a: Column, b: Column, exact: Boolean): Column =
-    if (exact)
-      aggregate(
-        zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(DEC)),
-        lit(0).cast(DEC),
-        (acc, x) => (acc + x).cast(DEC)).cast("double")
-    else
-      graft.functions.dot_f32(a, b)
+  /** Dot product of two float-array columns with exact-decimal
+    * accumulation: each product is quantized to DECIMAL(30,20) before the
+    * sum, so the result is order-independent and matches the DuckDB
+    * oracle's grouped sum bit for bit. */
+  private[graft] def dot(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(DEC)),
+      lit(0).cast(DEC),
+      (acc, x) => (acc + x).cast(DEC)).cast("double")
 
   /** S1 brute-force cosine top-k: queries = vec_id ≡ 0 (mod 100), k = 5. */
   def s1_ann_topk(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"), col("n2").as("qn2"))
     emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("dp", dot(col("embedding"), col("qemb"), ex))
+      .withColumn("dp", dot(col("embedding"), col("qemb")))
       .withColumn("cosine", round4(col("dp") / sqrt(col("qn2") * col("n2"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
@@ -125,41 +110,19 @@ object Similarity {
   /** Sign-bit fingerprint as an array-native expression: bit_j = sign of
     * <v, r_j> with r_j[i] = ((a_j·(i+1) + b_j) mod 1009)/1009 − 0.5. The
     * projection accumulates exact decimals, so the sign is deterministic. */
-  private def fingerprint16(emb: Column, exact: Boolean): Column =
-    fingerprintBits(emb, exact, 16)
+  private def fingerprint16(emb: Column): Column = fingerprintBits(emb, 16)
 
   /** [[fingerprint16]] at a parametric width — the s11 sub-shard knob needs
     * wider fingerprints (2 bands × b bits) when bucket count scales with
-    * the corpus; `hyper(j)` is defined for any j.
-    *
-    * The production (non-exact) path is the native codegen'd
-    * `hyperplane_fp` expression — one fused pass over the raw buffer for
-    * all bits, bit-identical to the composed per-bit double folds it
-    * replaces ([[graft.functions.HyperplaneFp]]; equality asserted over
-    * the corpus in `SimilaritySpec`). */
-  private def fingerprintBits(emb: Column, exact: Boolean, nbits: Int): Column =
-    if (!exact) graft.functions.hyperplane_fp(emb, lit(nbits))
-    else (0 until nbits).map { j =>
+    * the corpus; `hyper(j)` is defined for any j. */
+  private def fingerprintBits(emb: Column, nbits: Int): Column =
+    (0 until nbits).map { j =>
       val (a, b) = hyper(j)
       def plane(i: Column) = ((lit(a) * i + lit(b)) % 1009).cast("double") / 1009.0 - 0.5
       val proj = aggregate(
           zip_with(emb, sequence(lit(1), lit(D)), (x, i) =>
             (x.cast("double") * plane(i)).cast(DEC)),
           lit(0).cast(DEC), (acc, x) => (acc + x).cast(DEC)).cast("double")
-      when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** The composed per-bit plain-double fold — superseded on the production
-    * path by the native `hyperplane_fp` but kept as the bit-identical
-    * baseline `SimilaritySpec` verifies the native expression against. */
-  private[graft] def fingerprintBitsComposedDouble(emb: Column, nbits: Int): Column =
-    (0 until nbits).map { j =>
-      val (a, b) = hyper(j)
-      def plane(i: Column) = ((lit(a) * i + lit(b)) % 1009).cast("double") / 1009.0 - 0.5
-      val proj = aggregate(
-          zip_with(emb, sequence(lit(1), lit(D)), (x, i) =>
-            x.cast("double") * plane(i)),
-          lit(0.0), (acc, x) => acc + x)
       when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -171,7 +134,7 @@ object Similarity {
     * verify/bench cycle. In production this is a persisted staging table;
     * here `localCheckpoint` plays that role. */
   def s2Pairs(s: SparkSession, dir: String): DataFrame =
-    stage(s, ("s2Pairs", dir, exactDecimals(s)))(
+    stage(s, ("s2Pairs", dir))(
       s2PairsUncached(s, dir).localCheckpoint())
 
   /** S2 random-hyperplane LSH near-dup: 16 sign bits, 2×8-bit bands,
@@ -181,9 +144,8 @@ object Similarity {
     s2Pairs(s, dir).orderBy("va", "vb")
 
   private def s2PairsUncached(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val fp = emb.select(col("vec_id"), fingerprint16(col("embedding"), ex).as("fp"))
+    val fp = emb.select(col("vec_id"), fingerprint16(col("embedding")).as("fp"))
     val bnd = fp.select(col("vec_id"),
       explode(array((0 until 2).map(k =>
         struct(lit(k).as("k"), (shiftright(col("fp"), 8 * k) % 256).as("bv"))): _*)).as("nb"))
@@ -200,7 +162,7 @@ object Similarity {
     val ea = emb.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val eb = emb.select(col("vec_id").as("vb"), col("embedding").as("eb"))
     cand.join(ea, Seq("va")).join(eb, Seq("vb"))
-      .withColumn("cosine", round4(dot(col("ea"), col("eb"), ex)))
+      .withColumn("cosine", round4(dot(col("ea"), col("eb"))))
       .filter(col("cosine") >= 0.4)
       .select(col("va"), col("vb"), col("cosine"))
   }
@@ -251,18 +213,13 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("i"), col("cv")))).as("pairs"))
       .select(col("label"), transform(col("pairs"), p => p.getField("cv")).as("cemb"))
 
-  /** The exact-decimal dot product as a shared builder (x26's routing and
-    * scoring must reproduce the oracle's decimal folds bit-for-bit). */
-  private[graft] def exactDot(a: Column, b: Column): Column = dot(a, b, exact = true)
-
   def s3_ivf_topk(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val routed = labelRoutes(s, dir, 1, ex).select(col("q_id"), col("qemb"), col("label"))
+    val routed = labelRoutes(s, dir, 1).select(col("q_id"), col("qemb"), col("label"))
     emb.join(broadcast(routed), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"), ex)))
+      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
       .filter(col("rank") <= 3)
@@ -300,21 +257,17 @@ object Similarity {
       |SELECT q_id, cell, n_id, cosine, rank FROM ranked
       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
 
-  /** Squared euclidean distance between two float-array columns — exact-
-    * decimal accumulated ((x−c)² is computed in double — identical in both
-    * engines — and each addend quantized before the order-independent sum),
-    * or the native codegen'd `sq_dist` expression (one fused loop over the
-    * raw buffers) on the production path. */
-  private[graft] def sqDist(a: Column, b: Column, exact: Boolean): Column =
-    if (exact)
-      aggregate(
-        zip_with(a, b, (x, c) => {
-          val d = x.cast("double") - c
-          (d * d).cast(DEC)
-        }),
-        lit(0).cast(DEC), (acc, x) => (acc + x).cast(DEC)).cast("double")
-    else
-      graft.functions.sq_dist(a, b)
+  /** Squared euclidean distance between two float-array columns with
+    * exact-decimal accumulation: (x−c)² is computed in double — identical in
+    * both engines — and each addend is quantized before the
+    * order-independent sum. */
+  private[graft] def sqDist(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, c) => {
+        val d = x.cast("double") - c
+        (d * d).cast(DEC)
+      }),
+      lit(0).cast(DEC), (acc, x) => (acc + x).cast(DEC)).cast("double")
 
   /** Rebuild (cluster, cemb array) rows from long-form (cluster, i, cv). */
   private def toArrays(longForm: DataFrame): DataFrame =
@@ -333,7 +286,7 @@ object Similarity {
     * oracle unrolls both iterations symbolically. Output: the trained
     * centroids in long form (cluster, i, cv). */
   def s4_kmeans_train(s: SparkSession, dir: String): DataFrame =
-    trainCoarse(s, dir, exactDecimals(s))
+    trainCoarse(s, dir)
       .select(col("cluster"), posexplode(col("cemb")).as(Seq("i", "cv")))
       .select(col("cluster"), col("i").cast("long").as("i"), round4(col("cv")).as("cv"))
       .orderBy("cluster", "i")
@@ -341,32 +294,30 @@ object Similarity {
   /** The s4 training loop itself, returning the UNROUNDED trained centroids
     * as (cluster, cemb array) — s4 rounds them for its output; s7 routes
     * through them at full double precision (the oracle's unrolled c2 CTE is
-    * the same unrounded value). Distance loop honors the production-
-    * precision switch; the per-dim means stay exact-decimal on both paths —
-    * they are one aggregate per iteration, not the corpus × k hot path.
+    * the same unrounded value). Distances and per-dim means are both
+    * exact-decimal folds.
     *
     * `k` defaults to the 10 cells every oracle unrolls symbolically; the
     * loop itself is k-agnostic (c2_semdedup exposes it as the
     * `spark.graft.semdedupK` scaling knob). */
-  private def trainCoarse(s: SparkSession, dir: String, ex: Boolean,
-                          k: Int = 10): DataFrame =
+  private def trainCoarse(s: SparkSession, dir: String, k: Int = 10): DataFrame =
     // k-row checkpointed relations consumed by s4/s7/s10/s13/s14/c2 and
-    // x38's router: one training pass per (session, dir, precision, k)
-    stage(s, ("coarse", dir, ex, k))(
+    // x38's router: one training pass per (session, dir, k)
+    stage(s, ("coarse", dir, k))(
       trainCoarseOn(
-        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), ex, k))
+        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")), k))
 
   /** The Lloyd loop over an arbitrary TRAINING relation (vec_id, embedding)
     * — the full corpus for [[trainCoarse]], a bounded sample for
     * [[c2_semdedup_ann]]'s production-k path (training cost O(|sample|·k),
     * independent of the corpus). */
-  private[graft] def trainCoarseOn(emb: DataFrame, ex: Boolean, k: Int): DataFrame = {
+  private[graft] def trainCoarseOn(emb: DataFrame, k: Int): DataFrame = {
     var centroids = graft.plans.BroadcastContract.boundedCheckpoint(
       emb.filter(col("vec_id") < k) // deterministic seed
         .select(col("vec_id").cast("long").as("cluster"), col("embedding").as("cemb")),
       s"k-means seed: $k rows by construction")
     for (_ <- 1 to 2) {
-      val assigned = assignToNearest(emb, centroids, ex)
+      val assigned = assignToNearest(emb, centroids)
         .select(col("vec_id"), col("cluster"), col("embedding"))
       val longForm = assigned
         .select(col("cluster"), posexplode(col("embedding")).as(Seq("i", "v")))
@@ -409,7 +360,7 @@ object Similarity {
     typedlit(rows.map { case (c, e) => Centroid(c, e) })
 
   /** Label routing's metric: the negated dot, so the largest dot is nearest. */
-  private[graft] def negDot(ex: Boolean): (Column, Column) => Column = (a, b) => -dot(a, b, ex)
+  private[graft] def negDot(a: Column, b: Column): Column = -dot(a, b)
 
   /** Every row of `points` routed to its `p` nearest `centroids`
     * (cluster, cemb) under `dist`, through [[nearest]] over the broadcast
@@ -428,18 +379,18 @@ object Similarity {
 
   /** Nearest-centroid assignment (squared euclidean, ties to the lower
     * cluster id): all input columns plus (cluster, cemb). */
-  private[graft] def assignToNearest(emb: DataFrame, centroids: DataFrame, ex: Boolean): DataFrame =
-    routeNearest(emb, col("embedding"), centroids, 1, sqDist(_, _, ex))
+  private[graft] def assignToNearest(emb: DataFrame, centroids: DataFrame): DataFrame =
+    routeNearest(emb, col("embedding"), centroids, 1, sqDist)
       .select(emb.columns.map(col) ++ Seq(col("cluster"), col("cemb")): _*)
 
   /** Queries (`vec_id % 100 = 0`) routed to their `p` nearest label cells
     * by dot product (larger is nearer, ties to the lower label):
     * (q_id, qemb, probe, label). */
-  private def labelRoutes(s: SparkSession, dir: String, p: Int, ex: Boolean): DataFrame =
+  private def labelRoutes(s: SparkSession, dir: String, p: Int): DataFrame =
     routeNearest(
       Tables.embeddings(s, dir).filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("qemb")),
-      col("qemb"), labelCentroids(s, dir).withColumnRenamed("label", "cluster"), p, negDot(ex))
+      col("qemb"), labelCentroids(s, dir).withColumnRenamed("label", "cluster"), p, negDot)
       .select(col("q_id"), col("qemb"), col("probe"), col("cluster").as("label"))
 
   /** One Lloyd iteration as SQL over an element CTE (`e` = the full
@@ -676,7 +627,7 @@ object Similarity {
     * coarse half via [[trainCoarse]]'s own staging; unstaged, each re-ran
     * training + assignment + residual encode from scratch (~33 s of the
     * 174-query bench). A production index is TRAINED ONCE and served
-    * many times — it is staged per (session, dir, precision) like
+    * many times — it is staged per (session, dir) like
     * `s2Pairs`. The checkpoint-boundary concern that kept `bm25Postings`
     * lazy does not apply here: every staged piece was ALREADY
     * `localCheckpoint`ed inside a single query's dataflow (self-joined or
@@ -686,10 +637,10 @@ object Similarity {
                                        cb1: DataFrame, cand1: DataFrame,
                                        codes: DataFrame)
 
-  private def ivfpqIndex(s: SparkSession, dir: String, ex: Boolean): IvfPqIndex =
-    stage(s, ("ivfpq", dir, ex)) {
+  private def ivfpqIndex(s: SparkSession, dir: String): IvfPqIndex =
+    stage(s, ("ivfpq", dir)) {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      buildIndexOn(emb, trainCoarse(s, dir, ex), ex)
+      buildIndexOn(emb, trainCoarse(s, dir))
     }
 
   /** Assignment + residual encode + codebook refinement against an
@@ -697,9 +648,9 @@ object Similarity {
     * index build, shared by [[ivfpqIndex]] (whole corpus) and
     * [[ivfpqSettledIndex]] (the settled slice of s18's incremental
     * maintenance). */
-  private def buildIndexOn(emb: DataFrame, coarse: DataFrame, ex: Boolean): IvfPqIndex = {
+  private def buildIndexOn(emb: DataFrame, coarse: DataFrame): IvfPqIndex = {
     // cell assignment for every vector (corpus side: nearest cell only)
-    val asg = assignToNearest(emb, coarse, ex)
+    val asg = assignToNearest(emb, coarse)
       .select(col("vec_id"), col("cluster").as("cell"), col("embedding"), col("cemb"))
       .localCheckpoint() // consumed by residuals and the code-cell join
     // residual elements (vec_id, cell, j, i, v): v − centroid[cell], long form
@@ -739,8 +690,7 @@ object Similarity {
     * (q_id, probe, cell, vec_id, score_micro) — callers rank/limit. */
   private def ivfpqScored(s: SparkSession, dir: String, nprobe: Int,
                           qmod: Int = 100): DataFrame = {
-    val ex = exactDecimals(s)
-    val idx = ivfpqIndex(s, dir, ex)
+    val idx = ivfpqIndex(s, dir)
     // Single-probe fast path: a query's probe-1 cell IS its corpus
     // assignment (both route through `nearest` with the same metric), so the
     // probe-1 residual equals the corpus residual and the per-(query, j, c)
@@ -757,7 +707,7 @@ object Similarity {
       val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       // query routing: the nprobe nearest cells, probe rank attached
       val qroute = routeNearest(emb.filter(col("vec_id") % qmod === 0), col("embedding"),
-          idx.coarse, nprobe, sqDist(_, _, ex))
+          idx.coarse, nprobe, sqDist)
         .select(col("vec_id").as("q_id"), col("probe").cast("long").as("probe"),
                 col("cluster").as("cell"), col("embedding"), col("cemb"))
       // per-(query, probed cell) residuals — the residual basis is the PROBED
@@ -839,8 +789,8 @@ object Similarity {
     * query's probe-1 cell is its corpus assignment and the folds are
     * exact-decimal — the equivalence [[s10_ivfpq_recall]]'s oracle
     * hash-checks). Shared by the s10 audit and the multi-probe SERVING
-    * oracles (s16-ivf, s17-ivf, s19), which serve `spark.graft.servingNprobe`
-    * (default 2) probes. */
+    * oracles (s16-ivf, s17-ivf, s19), which serve [[ServingNprobe]]
+    * (2) probes. */
   private def ivfpqAdcCtesMp(qmod: Int, nprobe: Int): String =
     s"""$elemsSqlCte, $coarseTrainCtes, asg AS (
       |  SELECT vec_id, cluster AS cell FROM (
@@ -923,7 +873,6 @@ object Similarity {
     * exact-decimal squared-distance fold on an integer micro-grid, so
     * ranks hash-match the oracle bit-for-bit. */
   def s13_ivfpq_rerank(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val short = ivfpqScored(s, dir, nprobe = 1)
       .withColumn("adc_rank", row_number().over(
@@ -936,7 +885,7 @@ object Similarity {
       .join(emb.withColumnRenamed("vec_id", "n_id"), Seq("n_id"))
       .join(broadcast(q), Seq("q_id"))
       .withColumn("sqd_micro",
-        floor(sqDist(col("embedding"), col("qemb"), ex) * 1000000.0 + 0.5).cast("long"))
+        floor(sqDist(col("embedding"), col("qemb")) * 1000000.0 + 0.5).cast("long"))
       .select(col("q_id"), col("n_id"), col("sqd_micro"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sqd_micro"), col("n_id"))).cast("long"))
@@ -1099,37 +1048,33 @@ object Similarity {
     * distance, and the kept verdict — the scan-time filter signal a
     * corpus prune applies. */
   def c2_semdedup(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    // The scaling knob: production holds the per-cell pair block constant
-    // by growing k with the corpus (k = n / target cell size — the
-    // SemDeDup deployment contract). MEASURED at sf1 (STRESS_sf1.md round
-    // 6): k ∝ n pins the mean cell at ~200 vectors and turns the 100×
-    // quadratic pair mass into a linear 10× with zero dataflow changes —
-    // and exposes the next bottleneck, the n·k Lloyd assignment, which at
-    // scaled k must run on the production-precision path (37× the
-    // exact-decimal harness) and in a real deployment trains on a sample
-    // and assigns via the ANN index (s3's routed search), per the paper.
-    // The oracle unrolls the default k = 10 symbolically, so like
-    // exactDecimals this knob trades oracle hash-equality for the
-    // production shape; the dataflow is identical at any k.
+    // The scaling knob: holding the per-cell pair block constant means
+    // growing k with the corpus (k = n / target cell size — the SemDeDup
+    // deployment contract); k ∝ n keeps the mean cell size fixed and turns
+    // the quadratic pair mass linear with no dataflow change. The cost then
+    // moves to the n·k Lloyd assignment, which c2_semdedup_ann bounds by
+    // training on a sample and assigning through a two-level route. The
+    // oracle unrolls the default k = 10 symbolically, so any other k trades
+    // oracle hash-equality for the scaled shape; the dataflow is identical
+    // at any k.
     val k = s.conf.get("spark.graft.semdedupK", "10").toInt
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val coarse = trainCoarse(s, dir, ex, k)
+    val coarse = trainCoarse(s, dir, k)
     // (vec_id, cell, embedding, exact centroid sq-distance, squared norm) —
     // consumed by both pair sides and the final verdict join; staged once
-    val asg = routeNearest(emb, col("embedding"), coarse, 1, sqDist(_, _, ex))
-      .withColumn("n2", dot(col("embedding"), col("embedding"), ex))
+    val asg = routeNearest(emb, col("embedding"), coarse, 1, sqDist)
+      .withColumn("n2", dot(col("embedding"), col("embedding")))
       .select(col("vec_id"), col("cluster").as("cell"), col("embedding"),
               col("dist"), col("n2"))
       .localCheckpoint()
-    semdedupPrune(asg, ex)
+    semdedupPrune(asg)
   }
 
   /** The within-cell pair search + keep-the-outlier verdict shared by
     * [[c2_semdedup]] and [[c2_semdedup_ann]] — `asg` is the checkpointed
     * (vec_id, cell, embedding, dist, n2) assignment; everything after the
     * assignment is assignment-strategy-independent. */
-  private def semdedupPrune(asg: DataFrame, ex: Boolean): DataFrame = {
+  private def semdedupPrune(asg: DataFrame): DataFrame = {
     val aSide = asg.select(col("vec_id").as("va"), col("cell"),
       col("embedding").as("ea"), col("dist").as("da"), col("n2").as("na2"))
     val bSide = asg.select(col("vec_id").as("vb"), col("cell"),
@@ -1140,7 +1085,7 @@ object Similarity {
         / sqrt(col("na2") * col("nb2")) >= 0.3999)
       // stage 2: exact-decimal verify on the bounded survivors
       .withColumn("cosine",
-        round4(dot(col("ea"), col("eb"), ex) / sqrt(col("na2") * col("nb2"))))
+        round4(dot(col("ea"), col("eb")) / sqrt(col("na2") * col("nb2"))))
       .filter(col("cosine") >= 0.4)
       .select(when(col("da") < col("db"), col("va"))
         .when(col("db") < col("da"), col("vb"))
@@ -1232,20 +1177,22 @@ object Similarity {
     * symbolically; like `semdedupK`, non-default knobs trade oracle
     * hash-equality for the production shape. */
   def c2_semdedup_ann(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val k = s.conf.get("spark.graft.semdedupK", "10").toInt
     val m = semdedupSample(s)
     val g = s.conf.get("spark.graft.semdedupRouteCells", "4").toInt
-    val p = s.conf.get("spark.graft.semdedupRouteProbes", "1").toInt
+    val p = SemdedupRouteProbes
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     // 1. bounded-sample training: O(m·k), corpus-size-independent
-    val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), ex, k)
-    val asg = annAssign(emb, coarse, ex, g, p)
-      .withColumn("n2", dot(col("embedding"), col("embedding"), ex))
+    val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), k)
+    val asg = annAssign(emb, coarse, g, p)
+      .withColumn("n2", dot(col("embedding"), col("embedding")))
       .select(col("vec_id"), col("cell"), col("embedding"), col("dist"), col("n2"))
       .localCheckpoint()
-    semdedupPrune(asg, ex)
+    semdedupPrune(asg)
   }
+
+  /** Pilot probes per vector in [[annAssign]]'s two-level route. */
+  private[graft] val SemdedupRouteProbes = 1
 
   /** The two-level ANN-routed assignment shared by [[c2_semdedup_ann]] and
     * [[c2_assign_audit]]: g pilot cells partition the k centroids by
@@ -1253,7 +1200,7 @@ object Similarity {
     * (g distances) then scores only those pilots' groups (~p·k/g).
     * MULTI-PROBE is the standard recall knob of two-level routing — a
     * vector near a pilot boundary finds its true centroid in the second
-    * probe. The default p = 1 was DECIDED BY [[c2_prune_audit]]'s
+    * probe. p = [[SemdedupRouteProbes]] = 1 was DECIDED BY [[c2_prune_audit]]'s
     * OUTCOME-level measurement at the production shape (sf1, k = 100,
     * g = 10), which refuted a cell-level choice of p = 2:
     * cell agreement climbs steeply with probes (32% → 47.8% → 59.8% for
@@ -1268,21 +1215,21 @@ object Similarity {
     * buy outcome fidelity (when a deployment's threshold demands it)
     * with probes. Returns (vec_id, embedding, cell, dist) with `dist` the exact
     * distance to the ROUTED centroid. */
-  private def annAssign(emb: DataFrame, coarse: DataFrame, ex: Boolean,
+  private def annAssign(emb: DataFrame, coarse: DataFrame,
                         g: Int, p: Int): DataFrame = {
     val pilots = coarse.filter(col("cluster") < g)
     // 2a. the centroid index: each trained centroid joins its nearest
     // pilot's group (k×g distances — index build cost, not corpus cost)
     val cindex = routeNearest(coarse.select(col("cluster").as("c"), col("cemb").as("ce")),
-        col("ce"), pilots, 1, sqDist(_, _, ex))
+        col("ce"), pilots, 1, sqDist)
       .select(col("cluster").as("pcell"), col("c").as("cluster"), col("ce").as("cemb"))
     // 2b. route every vector to its p nearest pilots (g distances) …
-    val v2p = routeNearest(emb, col("embedding"), pilots, p, sqDist(_, _, ex))
+    val v2p = routeNearest(emb, col("embedding"), pilots, p, sqDist)
       .select(col("vec_id"), col("embedding"), col("cluster").as("pcell"))
     // … then score only those pilots' centroid groups (~p·k/g per vector;
     // groups are disjoint — cindex maps each centroid to exactly one pilot)
     v2p.join(broadcast(cindex), Seq("pcell"))
-      .withColumn("dist", sqDist(col("embedding"), col("cemb"), ex))
+      .withColumn("dist", sqDist(col("embedding"), col("cemb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cluster"))))
       .filter(col("rn") === 1)
@@ -1305,16 +1252,15 @@ object Similarity {
     * sample at scale exactly like s8; the comparison join is 1 row per
     * vector per side. */
   def c2_assign_audit(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val k = s.conf.get("spark.graft.semdedupK", "10").toInt
     val m = semdedupSample(s)
     val g = s.conf.get("spark.graft.semdedupRouteCells", "4").toInt
-    val p = s.conf.get("spark.graft.semdedupRouteProbes", "1").toInt
+    val p = SemdedupRouteProbes
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), ex, k)
-    val exact = routeNearest(emb, col("embedding"), coarse, 1, sqDist(_, _, ex))
+    val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), k)
+    val exact = routeNearest(emb, col("embedding"), coarse, 1, sqDist)
       .select(col("vec_id"), col("cluster").as("cell_exact"), col("dist").as("dist_e"))
-    val ann = annAssign(emb, coarse, ex, g, p)
+    val ann = annAssign(emb, coarse, g, p)
       .select(col("vec_id"), col("cell").as("cell_ann"), col("dist").as("dist_a"))
     ann.join(exact, Seq("vec_id"))
       .groupBy(col("cell_ann"))
@@ -1445,7 +1391,7 @@ object Similarity {
     * Jaccard. If prune agreement ≫ cell agreement, the routing default
     * is vindicated at the level that matters (a vector that lands in a
     * "wrong" but nearby cell still meets its near-duplicates there); if
-    * not, `semdedupRouteProbes` must rise. Same centroids on both sides
+    * not, [[SemdedupRouteProbes]] must rise. Same centroids on both sides
     * isolates ROUTING loss from the orthogonal sampling loss (which
     * c2 vs c2-ann would conflate).
     *
@@ -1454,28 +1400,27 @@ object Similarity {
     * pair searches, and a 1-row-per-vector comparison join — the same
     * sampled-eval class as s19. */
   def c2_prune_audit(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val k = s.conf.get("spark.graft.semdedupK", "10").toInt
     val m = semdedupSample(s)
     val g = s.conf.get("spark.graft.semdedupRouteCells", "4").toInt
-    val p = s.conf.get("spark.graft.semdedupRouteProbes", "1").toInt
+    val p = SemdedupRouteProbes
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     // identical sampled-trained centroids on BOTH sides
-    val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), ex, k)
-    val asgE = routeNearest(emb, col("embedding"), coarse, 1, sqDist(_, _, ex))
-      .withColumn("n2", dot(col("embedding"), col("embedding"), ex))
+    val coarse = trainCoarseOn(emb.filter(col("vec_id") < m), k)
+    val asgE = routeNearest(emb, col("embedding"), coarse, 1, sqDist)
+      .withColumn("n2", dot(col("embedding"), col("embedding")))
       .select(col("vec_id"), col("cluster").as("cell"), col("embedding"),
               col("dist"), col("n2"))
       .localCheckpoint()
-    val asgA = annAssign(emb, coarse, ex, g, p)
-      .withColumn("n2", dot(col("embedding"), col("embedding"), ex))
+    val asgA = annAssign(emb, coarse, g, p)
+      .withColumn("n2", dot(col("embedding"), col("embedding")))
       .select(col("vec_id"), col("cell"), col("embedding"), col("dist"), col("n2"))
       .localCheckpoint()
     val verdicts = asgE.select(col("vec_id"), col("cell").as("cell_exact"))
       .join(asgA.select(col("vec_id"), col("cell").as("cell_ann")), Seq("vec_id"))
-      .join(semdedupPrune(asgE, ex)
+      .join(semdedupPrune(asgE)
         .select(col("vec_id"), col("kept").as("kept_exact")), Seq("vec_id"))
-      .join(semdedupPrune(asgA, ex)
+      .join(semdedupPrune(asgA)
         .select(col("vec_id"), col("kept").as("kept_ann")), Seq("vec_id"))
     val dropBoth = sum(when(!col("kept_exact") && !col("kept_ann"), 1L)
       .otherwise(0L))
@@ -1593,14 +1538,9 @@ object Similarity {
     * re-ranks only the survivors (≈3-30 per query, duplicate cliques
     * included by the margin). */
   def s11_knn_graph(s: SparkSession, dir: String): DataFrame = {
-    val decDot = (a: Column, b: Column) =>
-      aggregate(
-        zip_with(a, b, (x, y) => (x.cast("double") * y.cast("double")).cast(DEC)),
-        lit(0).cast(DEC),
-        (acc, x) => (acc + x).cast(DEC)).cast("double")
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"),
-              decDot(col("embedding"), col("embedding")).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
       .localCheckpoint() // norms: n exact folds, consumed by both stages
     // Stage 1 stays NARROW end to end: dcos is computed inside the join
     // task and the 64-float payloads are dropped before anything shuffles —
@@ -1631,7 +1571,7 @@ object Similarity {
       .join(emb.select(col("vec_id").as("n_id"),
                        col("embedding").as("ne"), col("n2").as("nn2")), Seq("n_id"))
       .withColumn("cosine",
-        round4(decDot(col("qe"), col("ne")) / sqrt(col("qn2") * col("nn2"))))
+        round4(dot(col("qe"), col("ne")) / sqrt(col("qn2") * col("nn2"))))
       .withColumn("rank", row_number().over(
         byQ.orderBy(col("cosine").desc, col("n_id"))).cast("long"))
       .filter(col("rank") <= 3)
@@ -1664,6 +1604,9 @@ object Similarity {
       |SELECT q_id, label, n_id, cosine, rank FROM ranked
       |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
 
+  /** Bits per LSH band in [[s11_knn_graph_sharded]]'s block key. */
+  private[graft] val S11BandBits = 8
+
   /** S11-SHARDED: the kNN graph under the LSH SUB-SHARD key — the 100 TB
     * form of [[s11_knn_graph]]. s11's block key is `label` alone, so its
     * pair mass is Σ n_label² — at 100× scale one hot label (`lang=en`) is a
@@ -1672,14 +1615,11 @@ object Similarity {
     * fingerprint (s2's hyperplanes, [[fingerprintBits]]), splits it into 2
     * bands of b bits, and the block key becomes (label, band, bucket) —
     * candidates are pairs agreeing on label AND at least one band. Per-label
-    * pair mass drops n_label² → ~n_label²/2^(b−1), and because b is a knob
-    * (`spark.graft.s11BandBits`, default 8 = 256 buckets/band), bucket count
-    * grows with the corpus to hold PER-BLOCK pair mass constant — the same
-    * deployment contract as c2's k ∝ corpus, here as code: growing b by 1
-    * quarters the block pair mass, so 4× data + b+1 ⇒ the same per-block
-    * cost (measured at sf1 in STRESS_sf1.md). Like `semdedupK`, a non-default
-    * b trades oracle hash-equality for the production shape — the oracle
-    * unrolls b = 8 symbolically; the dataflow is b-agnostic.
+    * pair mass drops n_label² → ~n_label²/2^(b−1) with b =
+    * [[S11BandBits]] bits per band (8 = 256 buckets/band). Growing b by 1
+    * quarters the block pair mass, so 4× data at b+1 keeps the per-block
+    * cost constant — the same deployment contract as c2's k ∝ corpus. The
+    * oracle unrolls b = 8 symbolically; the dataflow is b-agnostic.
     *
     * Semantics: top-3 by exact rounded cosine WITHIN the LSH candidate set —
     * the per-bucket recall contract (a neighbor colliding in neither band is
@@ -1695,19 +1635,14 @@ object Similarity {
     * distinct (a pair colliding in BOTH bands appears twice, with an
     * identical double dcos) ahead of the ranking exchange. */
   def s11_knn_graph_sharded(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    val b = s.conf.get("spark.graft.s11BandBits", "8").toInt
-    // The fingerprint honors the production-precision switch exactly like
-    // s2's — the 2b×64 projection folds are the dominant LINEAR cost at
-    // scale (measured at sf1 in STRESS_sf1.md), so the oracle's
-    // exact-decimal signs are the default and production flips to the
-    // native double fold. The stage-2 re-rank below stays exact-decimal on
-    // both paths — it only ever touches the ≈3-30 margin survivors per
-    // query.
+    val b = S11BandBits
+    // The 2b×64 exact-decimal projection folds are the dominant linear cost
+    // at scale; the stage-2 re-rank below touches only the ≈3-30 margin
+    // survivors per query.
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"),
-              dot(col("embedding"), col("embedding"), exact = true).as("n2"),
-              fingerprintBits(col("embedding"), ex, nbits = 2 * b).as("fp"))
+              dot(col("embedding"), col("embedding")).as("n2"),
+              fingerprintBits(col("embedding"), nbits = 2 * b).as("fp"))
       .localCheckpoint() // norms + fingerprints: n folds, consumed twice
     val bnd = emb.select(col("vec_id"), col("label"), col("embedding"), col("n2"),
         explode(array((0 until 2).map(k =>
@@ -1738,7 +1673,7 @@ object Similarity {
       .join(emb.select(col("vec_id").as("n_id"),
                        col("embedding").as("ne"), col("n2").as("nn2")), Seq("n_id"))
       .withColumn("cosine",
-        round4(dot(col("qe"), col("ne"), exact = true)
+        round4(dot(col("qe"), col("ne"))
           / sqrt(col("qn2") * col("nn2"))))
       .withColumn("rank", row_number().over(
         byQ.orderBy(col("cosine").desc, col("n_id"))).cast("long"))
@@ -1841,13 +1776,12 @@ object Similarity {
     * before the sums/max (exact 64-bit); the dominant label breaks count
     * ties to the lower label. */
   def s14_cluster_card(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val cents = trainCoarse(s, dir, ex)
-    val per = assignToNearest(emb, cents, ex)
+    val cents = trainCoarse(s, dir)
+    val per = assignToNearest(emb, cents)
       .withColumn("dm",
-        floor(sqDist(col("embedding"), col("cemb"), exact = true) * 1000000.0 + 0.5)
+        floor(sqDist(col("embedding"), col("cemb")) * 1000000.0 + 0.5)
           .cast("long"))
       .select(col("vec_id"), col("cluster"), col("label"), col("dm"))
     val top = per.groupBy(col("cluster"), col("label")).agg(count(lit(1)).as("cnt"))
@@ -1914,14 +1848,13 @@ object Similarity {
     * eligibility, not geometry) is untouched. One broadcast of the bounded
     * routed-query relation; ranking per query unchanged. */
   def s15_filtered_ann(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val routed = labelRoutes(s, dir, 1, ex).select(col("q_id"), col("qemb"), col("label"))
+    val routed = labelRoutes(s, dir, 1).select(col("q_id"), col("qemb"), col("label"))
     emb.filter(col("vec_id") % 2 === 0) // the metadata predicate: scan-level, pre-join
       .join(broadcast(routed), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"), ex)))
+      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
       .filter(col("rank") <= 3)
@@ -1986,14 +1919,13 @@ object Similarity {
     * and [[s19_retrieval_eval]]'s ground truth. Returns
     * (query_id, doc_id, rk_ann), depth 10. */
   private def exactDenseLeg(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"), col("n2").as("qn2"))
     emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"), ex) /
+      .withColumn("cosine", round4(dot(col("embedding"), col("qemb")) /
                                    sqrt(col("qn2") * col("n2"))))
       .withColumn("rk_ann", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
@@ -2082,7 +2014,7 @@ object Similarity {
     * brute-force cosine over the whole embedding corpus (O(|Q|·N·D) — the
     * correctness baseline, not the serving shape), the dense list is s13's
     * refine pipeline at the hybrid workload's query contract: ADC at the
-    * [[servingNprobe]] probe width (default 2 — the width s19's eval
+    * [[ServingNprobe]] probe width (2 — the width s19's eval
     * decided; cell-pruned against the staged [[ivfpqIndex]], each query
     * touches ~nprobe/cells of the corpus CODES, integer LUT sums), top-10
     * shortlist, exact re-rank of only those 10 raw vectors (sqd ascending,
@@ -2092,31 +2024,26 @@ object Similarity {
     * independently).
     *
     * Scale shape: the dense leg's cost tracks the cell-pruned code scan,
-    * not the corpus (measured against s16's brute-force leg at sf1 in
-    * STRESS_sf1.md); ADC list contents differ from exact cosine ranking
-    * exactly as the index's recall audit (s10) measures. */
+    * not the corpus (s16's brute-force leg is the baseline it replaces);
+    * ADC list contents differ from exact cosine ranking exactly as the
+    * index's recall audit (s10) measures. */
   /** The SERVING probe width for every IVF-served retrieval leg (s16-ivf's
     * dense leg, s17-ivf's candidate stream, s19's `dense_ivf_p*` /
-    * `hybrid_rrf_ivf_p*` systems). Default 2 — DECIDED BY MEASUREMENT:
+    * `hybrid_rrf_ivf_p*` systems): 2, chosen by measurement:
     * [[s19_retrieval_eval]] sweeps p ∈ {1, 2, 4} in one report, and the
     * probed-cell ROUTING CEILINGS measured at sf0.1 are 0.285 / 0.47 /
     * 0.69 recall@5 — each probe buys ceiling at one extra cell scan per
     * query, and p = 2 is the knee (p = 4 pays another 2× scan for
     * proportionally less, and at 10 cells is already 40% of a brute
     * scan). Probes alone did NOT fix the condemned legacy posture — at
-    * the old depth-10 shortlist the sweep measured p2 = p4 = 0.11, a
-    * refutation that moved the recovery to [[servingRerankDepth]] —
-    * but they set the ceiling depth converges to. Full study in
-    * STRESS_sf1.md. Like `semdedupK`/`exactDecimals`, the oracles pin
-    * the DEFAULT: overriding the knob trades oracle hash-equality for a
-    * different recall/cost point; the dataflow is identical at any p. */
-  private[graft] val ServingNprobeDefault = 2
-
-  private[graft] def servingNprobe(s: SparkSession): Int =
-    s.conf.get("spark.graft.servingNprobe", ServingNprobeDefault.toString).toInt
+    * a depth-10 shortlist the sweep measured p2 = p4 = 0.11, so the
+    * recovery comes from [[ServingRerankDepth]] — but probes set the
+    * ceiling depth converges to. The oracles unroll this width, and the
+    * streaming twin (x38) serves it too. */
+  private[graft] val ServingNprobe = 2
 
   /** The ADC shortlist depth the serving legs hand to the exact re-rank
-    * (the R of IVFADC+R). Default 200 — DECIDED BY MEASUREMENT: at sf0.1
+    * (the R of IVFADC+R): 200, chosen by measurement: at sf0.1
     * the p = 2 ROUTING ceiling (exact search restricted to the probed
     * cells) is recall@5 = 0.47, and the depth sweep at p = 2 converges to
     * it as 0.11 (d = 10) → 0.15 (20) → 0.28 (50) → 0.37 (100) → 0.42
@@ -2126,27 +2053,24 @@ object Similarity {
     * width, is where the recall went (probes saturate at d = 10:
     * p2 = p4 = 0.11). Depth is the CHEAP axis: it re-ranks |Q|·d raw
     * rows and never touches the corpus-scale ADC scan, whereas each
-    * probe adds ~N/cells scanned codes per query (the sf1 deltas are in
-    * STRESS_sf1.md). The SERVED list depth stays 10 — this knob is
-    * internal to the shortlist → re-rank stage. */
-  private[graft] def servingRerankDepth(s: SparkSession): Int =
-    s.conf.get("spark.graft.servingRerankDepth", "200").toInt
+    * probe adds ~N/cells scanned codes per query. The SERVED list depth
+    * stays 10 — this depth is internal to the shortlist → re-rank stage. */
+  private[graft] val ServingRerankDepth = 200
 
   /** The IVF-SERVED dense rank list at the hybrid workload contract:
-    * ADC shortlist (depth 10, probe width = [[servingNprobe]]) + exact
+    * ADC shortlist (depth 10, probe width = [[ServingNprobe]]) + exact
     * re-rank — s16-ivf's dense leg and an [[s19_retrieval_eval]] system
     * under test. Returns (query_id, doc_id, rk_ann), depth 10. */
   private def ivfDenseLeg(s: SparkSession, dir: String): DataFrame =
-    ivfRerankLeg(s, dir, ivfpqScored(s, dir, nprobe = servingNprobe(s), qmod = 50),
-                 exactDecimals(s), depth = servingRerankDepth(s))
+    ivfRerankLeg(s, dir, ivfpqScored(s, dir, nprobe = ServingNprobe, qmod = 50))
 
   /** ADC shortlist (depth 10) + exact re-rank (s13's refine discipline)
     * over a given pre-rank scored relation — factored so [[s19_retrieval_eval]]
     * can grade two probe widths from ONE scored relation (`probe = 1`
     * filter vs all probes, s10's audit-contains-its-subjects shape). */
   private def ivfRerankLeg(s: SparkSession, dir: String, scored: DataFrame,
-                           ex: Boolean, qmod: Int = 50,
-                           depth: Int = 200): DataFrame = {
+                           qmod: Int = 50,
+                           depth: Int = ServingRerankDepth): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val short = scored
       .withColumn("adc_rank", row_number().over(
@@ -2159,7 +2083,7 @@ object Similarity {
       .join(emb.withColumnRenamed("vec_id", "n_id"), Seq("n_id"))
       .join(broadcast(q), Seq("q_id"))
       .withColumn("sqd_micro",
-        floor(sqDist(col("embedding"), col("qemb"), ex) * 1000000.0 + 0.5).cast("long"))
+        floor(sqDist(col("embedding"), col("qemb")) * 1000000.0 + 0.5).cast("long"))
       .withColumn("rk_ann", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("sqd_micro"), col("n_id"))).cast("long"))
       .filter(col("rk_ann") <= 10) // the SERVED list depth is unchanged
@@ -2218,14 +2142,12 @@ object Similarity {
     * Lloyd iterations over settled vectors), settled assignment, a
     * settled-trained residual codebook, and the settled candidate/code
     * tables — exactly the persisted artifact a production vector store
-    * keeps warm between crawl increments. Staged per (session, dir,
-    * precision). */
-  private[graft] def ivfpqSettledIndex(s: SparkSession, dir: String,
-                                       ex: Boolean): IvfPqIndex =
-    stage(s, ("ivfpqSettled", dir, ex)) {
+    * keeps warm between crawl increments. Staged per (session, dir). */
+  private[graft] def ivfpqSettledIndex(s: SparkSession, dir: String): IvfPqIndex =
+    stage(s, ("ivfpqSettled", dir)) {
       val embS = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 10 =!= 0)
-      buildIndexOn(embS, trainCoarseOn(embS, ex, 10), ex)
+      buildIndexOn(embS, trainCoarseOn(embS, 10))
     }
 
   /** The delta fold of [[s18_ivfpq_incremental]], factored for the
@@ -2234,11 +2156,11 @@ object Similarity {
     * codebook. Returns (delta assignment, delta candidate table, delta
     * codes) — increment work is O(|delta|·(k + codebook)), and nothing
     * settled is recomputed. */
-  private[graft] def s18DeltaFold(s: SparkSession, dir: String, ex: Boolean,
+  private[graft] def s18DeltaFold(s: SparkSession, dir: String,
                                   idxS: IvfPqIndex): (DataFrame, DataFrame, DataFrame) = {
     val embD = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") % 10 === 0)
-    val asgD = assignToNearest(embD, idxS.coarse, ex)
+    val asgD = assignToNearest(embD, idxS.coarse)
       .select(col("vec_id"), col("cluster").as("cell"), col("embedding"), col("cemb"))
       .localCheckpoint() // residual encode + the code-cell join consume it
     val subD = asgD.select(col("vec_id"),
@@ -2258,8 +2180,7 @@ object Similarity {
     * reads THIS relation, so its numbers come from the identical
     * frozen-index fold the standalone s18/c8 queries run. */
   private[graft] def s18DeltaSummary(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    val (_, _, codesD) = s18DeltaFold(s, dir, ex, ivfpqSettledIndex(s, dir, ex))
+    val (_, _, codesD) = s18DeltaFold(s, dir, ivfpqSettledIndex(s, dir))
     codesD.agg(countDistinct(col("vec_id")).as("n_vecs_encoded"),
                count(lit(1)).as("n_code_rows"),
                countDistinct(col("cell")).as("n_cells_touched"))
@@ -2269,8 +2190,7 @@ object Similarity {
     * settled-universe consistency pin (every staged artifact must
     * describe the SAME settled corpus — the `% 10 ≠ 0` slice). */
   private[graft] def s18SettledCodes(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    ivfpqSettledIndex(s, dir, ex).codes
+    ivfpqSettledIndex(s, dir).codes
   }
 
   /** S18: INCREMENTAL IVF-PQ INDEX MAINTENANCE — t30/d13's
@@ -2297,9 +2217,8 @@ object Similarity {
     * contract — all delta by arithmetic (100 | q ⇒ 10 | q): the
     * new-arrivals-query-the-index serving shape. */
   def s18_ivfpq_incremental(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    val idxS = ivfpqSettledIndex(s, dir, ex)
-    val (asgD, candD, codesD) = s18DeltaFold(s, dir, ex, idxS)
+    val idxS = ivfpqSettledIndex(s, dir)
+    val (asgD, candD, codesD) = s18DeltaFold(s, dir, idxS)
     val codes = idxS.codes.unionByName(codesD)
     val cand = idxS.cand1.unionByName(candD)
     val asgAll = idxS.asg.select(col("vec_id"), col("cell"))
@@ -2406,6 +2325,9 @@ object Similarity {
       .select(col("n_settled"), col("n_delta"), col("k_cells"), col("kl"))
   }
 
+  /** [[c8_gated_increment]]'s KL threshold for retraining (t29's). */
+  private[graft] val C8RetrainKl = 0.05
+
   /** C8: the DRIFT-GATED INCREMENT — the composition s18's scaladoc
     * delegated to prose, now code: a production vector store does not
     * append blindly; each crawl increment is admitted through a drift
@@ -2418,8 +2340,8 @@ object Similarity {
     * shifted embedding distribution piles delta vectors into cells the
     * settled corpus rarely used, which is precisely when frozen centroids
     * stop representing the data and PQ residuals grow (the
-    * retrain-trigger production monitors; threshold
-    * `spark.graft.c8RetrainKl`, default t29's 0.05).
+    * retrain-trigger production monitors; threshold [[C8RetrainKl]],
+    * t29's 0.05).
     *
     * The decision is a 1-row control-plane read (sanctioned
     * `boundedCollect` — a retrain trigger IS a driver-side decision in
@@ -2442,10 +2364,9 @@ object Similarity {
     * assignment IS the append fold's first stage — measuring drift adds
     * no corpus pass), and the append branch stays O(delta). */
   def c8_gated_increment(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    val thr = s.conf.get("spark.graft.c8RetrainKl", "0.05").toDouble
-    val idxS = ivfpqSettledIndex(s, dir, ex)
-    val (asgD, _, codesD) = s18DeltaFold(s, dir, ex, idxS)
+    val thr = C8RetrainKl
+    val idxS = ivfpqSettledIndex(s, dir)
+    val (asgD, _, codesD) = s18DeltaFold(s, dir, idxS)
     val hist = idxS.asg.select(col("cell"), lit(false).as("is_delta"))
       .unionByName(asgD.select(col("cell"), lit(true).as("is_delta")))
       .groupBy(col("cell"))
@@ -2463,7 +2384,7 @@ object Similarity {
       (row.getLong(0), row.getLong(1), row.getLong(2), row.getDouble(3))
     val drifted = kl > thr
     val branchCodes =
-      if (drifted) ivfpqIndex(s, dir, ex).codes // retrain on settled ∪ delta
+      if (drifted) ivfpqIndex(s, dir).codes // retrain on settled ∪ delta
       else codesD                               // s18's O(delta) append fold
     branchCodes
       .agg(countDistinct(col("vec_id")).as("n_vecs_encoded"),
@@ -2591,15 +2512,14 @@ object Similarity {
     * query side (s1's mod-100 contract); top-3 per anchor via
     * WindowGroupLimit. */
   def s17_hard_negatives(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
               col("embedding").as("qemb"), col("n2").as("qn2"))
     emb.join(broadcast(q), col("label") =!= col("q_label"))
-      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"), ex) /
+      .withColumn("cosine", round4(dot(col("embedding"), col("qemb")) /
                                    sqrt(col("qn2") * col("n2"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
@@ -2639,7 +2559,7 @@ object Similarity {
   /** S17-IVF: hard-negative mining SERVED FROM THE IVF-PQ INDEX — the
     * drop-in [[s17_hard_negatives]] declares (its brute-force scan is the
     * correctness baseline, O(|Q|·N·D)): the candidate stream is the staged
-    * index's ADC scan at the [[servingNprobe]] probe width (cell-pruned
+    * index's ADC scan at the [[ServingNprobe]] probe width (cell-pruned
     * integer LUT sums), the per-query DYNAMIC label ≠ predicate filters that
     * stream BEFORE any ranking (s15's pre-filter semantics — ineligible
     * same-label rows never occupy a shortlist slot, so the depth-10
@@ -2658,21 +2578,20 @@ object Similarity {
     * audit measures — the standard serving trade, here on the mining path
     * that feeds contrastive training. */
   def s17_hard_negatives_ivf(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val lab = emb.select(col("vec_id"), col("label"))
     // eligible ADC candidates: the dynamic label ≠ predicate rides the
     // bounded query-label broadcast, BEFORE the shortlist window
-    val short = ivfpqScored(s, dir, nprobe = servingNprobe(s))
+    val short = ivfpqScored(s, dir, nprobe = ServingNprobe)
       .join(lab.withColumnRenamed("label", "n_label"), Seq("vec_id"))
       .join(broadcast(lab.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("label").as("q_label"))), Seq("q_id"))
       .filter(col("n_label") =!= col("q_label"))
       .withColumn("adc_rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("score_micro"), col("vec_id"))).cast("long"))
-      .filter(col("adc_rank") <= servingRerankDepth(s))
+      .filter(col("adc_rank") <= ServingRerankDepth)
       .select(col("q_id"), col("q_label"), col("vec_id").as("n_id"), col("n_label"))
     // exact cosine re-rank of the ≤ 10 eligible survivors (s13's refine)
     val q = emb.filter(col("vec_id") % 100 === 0)
@@ -2681,7 +2600,7 @@ object Similarity {
     short
       .join(emb.select(col("vec_id").as("n_id"), col("embedding"), col("n2")), Seq("n_id"))
       .join(broadcast(q), Seq("q_id"))
-      .withColumn("cosine", round4(dot(col("embedding"), col("qemb"), ex) /
+      .withColumn("cosine", round4(dot(col("embedding"), col("qemb")) /
                                    sqrt(col("qn2") * col("n2"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))).cast("long"))
@@ -2739,7 +2658,7 @@ object Similarity {
     * (t27's BM25 at depth 5), the IVF-served dense leg (ADC shortlist +
     * re-rank at depth 5) SWEPT across probe widths p ∈ {1, 2, 4} (the
     * narrower widths are probe filters of ONE scored relation, so the
-    * report prices the `servingNprobe` knob itself, not separate
+    * report prices the serving probe width itself, not separate
     * indexes), and FOUR fused hybrids — brute ([[s16_hybrid_rrf]]'s
     * form, riding the already-built ground-truth relation) and
     * IVF-served at each probe width ([[s16_hybrid_rrf_ivf]]'s top-5 is
@@ -2769,7 +2688,7 @@ object Similarity {
     * assuming one. The report grades the probe lever
     * directly (p ∈ {1, 2, 4} at the serving depth): at sf0.1 the dense
     * rows read 0.285 / 0.42 / 0.525 — the deploy-gate measurement behind
-    * [[servingNprobe]] = 2 and [[servingRerankDepth]] = 200, under which
+    * [[ServingNprobe]] = 2 and [[ServingRerankDepth]] = 200, under which
     * the fused product recovered 0.085 → 0.35 against the 0.505
     * brute-fused bar (fused trails dense because RRF dilutes with the
     * zero-signal lexical leg — this corpus's honest ceiling). The
@@ -2796,17 +2715,15 @@ object Similarity {
     // ONE multi-probe scored relation serves BOTH probe widths (s10's
     // audit-contains-its-subjects shape): the p = 1 systems are a probe
     // filter of the same checkpointed relation, so the report prices the
-    // `servingNprobe` knob itself — same index, same queries, only the
+    // serving probe width itself — same index, same queries, only the
     // probe width moves — not two independently-built indexes.
-    val ex2 = exactDecimals(s)
     val scored = ivfpqScored(s, dir, nprobe = 4, qmod = 50).localCheckpoint()
     val ivfLegs = Seq(1, 2, 4).map(p =>
-      s"p$p" -> ivfRerankLeg(s, dir, scored.filter(col("probe") <= p), ex2,
-                             depth = servingRerankDepth(s))) :+
+      s"p$p" -> ivfRerankLeg(s, dir, scored.filter(col("probe") <= p))) :+
       // the legacy depth-10 shortlist at the default probe width: keeps the
       // depth axis IN the gated artifact — this row is the rounds-5-8
       // serving posture the depth study condemned
-      ("p2_d10" -> ivfRerankLeg(s, dir, scored.filter(col("probe") <= 2), ex2,
+      ("p2_d10" -> ivfRerankLeg(s, dir, scored.filter(col("probe") <= 2),
                                 depth = 10))
     val lists = (
       Seq(("bm25", bm10.filter(col("rk_bm") <= 5)
@@ -3079,11 +2996,11 @@ object Similarity {
 
   // ───────────────────────── SQ8 scalar quantization ─────────────────────────
 
-  /** The shipped serving defaults, SINGLE-SOURCED: the conf readers below
-    * and the registered oracle strings both derive from these constants,
-    * so the pinned-default contract (`servingNprobe`'s scaladoc: oracles
-    * pin the DEFAULT; overriding a knob trades oracle hash-equality for a
-    * different recall/cost point) cannot drift between the two sides. */
+  /** The shipped SQ8 rerank depth, SINGLE-SOURCED: the conf reader below
+    * and the registered oracle strings both derive from this constant, so
+    * the oracles pin the DEFAULT (overriding the knob trades oracle
+    * hash-equality for a different recall/cost point) and the two sides
+    * cannot drift. */
   private[graft] val Sq8RerankDepthDefault = 50
 
   /** The depth-∞ sentinel for the SQ8 serving family — the ONE constant
@@ -3100,9 +3017,9 @@ object Similarity {
   /** Exact-cosine re-rank depth for the SQ8 serving legs (s20/s22).
     * Default [[Sq8RerankDepthDefault]], decided by [[s21_sq8_recall]]'s
     * depth audit (the same measured-knee discipline as
-    * `servingRerankDepth`): the audit's d10/d50/d200 rows grade the axis,
+    * [[ServingRerankDepth]]): the audit's d10/d50/d200 rows grade the axis,
     * and d = 50 is where SQ8 reaches its measured convergence on this
-    * corpus — see STRESS_sf1.md §Round 10. The audit's own legs are pinned
+    * corpus. The audit's own legs are pinned
     * LITERAL (s21 never reads this knob), so its system labels always
     * state the depth actually measured. */
   private[graft] def sq8RerankDepth(s: SparkSession): Int =
@@ -3129,11 +3046,10 @@ object Similarity {
     * integer arithmetic, order-independent by construction (unlike the
     * float paths, no decimal fold is ever needed: the native codegen'd
     * `dot_i8` IS the oracle-exact path). */
-  /** NOT a staged table, by measurement: the d3/s18 staging discipline
-    * was tried here and showed NO win at sf1 (same-window pairs: s20
-    * 4.4 s staged-warm vs 3.8 s unstaged-cold; s22 3.5 vs 3.9 — inside
-    * the ambient band both ways, STRESS_sf1.md §Round 10). The reason is
-    * structural: SQ8's encode is ONE stateless codebook-free pass — a
+  /** NOT a staged table, by measurement: staging the codes showed no win
+    * at sf1 (same-window pairs: s20 4.4 s staged-warm vs 3.8 s
+    * unstaged-cold; s22 3.5 vs 3.9 — inside the ambient noise both
+    * ways). The reason is structural: SQ8's encode is ONE stateless codebook-free pass — a
     * trivial fraction of the |Q|·N scoring join — while a
     * `localCheckpoint`'d code table makes that join scan deserialized
     * row blocks instead of whole-stage codegen over columnar parquet.
@@ -3154,7 +3070,7 @@ object Similarity {
   /** The trained coarse centroids behind the serving router, exposed for
     * the online twin's frozen-artifact fold (k rows by construction). */
   private[graft] def sq8TrainedCentroids(s: SparkSession, dir: String): DataFrame =
-    trainCoarse(s, dir, exactDecimals(s))
+    trainCoarse(s, dir)
 
   private[graft] def sq8Quantized(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
@@ -3201,18 +3117,17 @@ object Similarity {
     * broadcasts s13 already declared. At 100 TB the raw-vector fetch
     * touches depth·|Q| rows instead of the corpus. */
   def s20_sq8_topk(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
     val depth = sq8RerankDepth(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"), col("n2").as("qn2"))
     sq8Scored(s, dir).filter(col("q_rank") <= depth)
       .join(emb, Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .withColumn("cosine",
-        round4(dot(col("embedding"), col("qemb"), ex) / sqrt(col("qn2") * col("n2"))))
+        round4(dot(col("embedding"), col("qemb")) / sqrt(col("qn2") * col("n2"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
       .filter(col("rank") <= 5)
@@ -3301,15 +3216,14 @@ object Similarity {
     * against the IDENTICAL ground-truth pass. */
   private def sq8EvalGround(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val qn = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"), col("n2").as("qn2"))
     val cosines = emb.join(broadcast(qn), col("vec_id") =!= col("q_id"))
       .withColumn("cosine",
-        round4(dot(col("embedding"), col("qemb"), ex) / sqrt(col("qn2") * col("n2"))))
+        round4(dot(col("embedding"), col("qemb")) / sqrt(col("qn2") * col("n2"))))
       .select(col("q_id"), col("vec_id"), col("cosine"))
       .localCheckpoint()
     val exact = cosines.withColumn("rank", row_number().over(
@@ -3371,7 +3285,7 @@ object Similarity {
     // the IVF-routed legs at LITERAL probe widths 1/2/4 and depth 50, all
     // from ONE multi-probe scored relation (probe <= p filters, the s10
     // audit shape): p1 is the single-cell posture, p2 is the shipped
-    // `servingNprobe` default, p4 the next rung — the rows print the
+    // [[ServingNprobe]] width, p4 the next rung — the rows print the
     // routing recovery curve. Literal parameters keep the system labels
     // honest under any conf (a leg that read the depth knob could serve
     // another depth than its d50 label says).
@@ -3402,7 +3316,7 @@ object Similarity {
 
   /** S23: the JOINT probe × depth GRID for the IVF×SQ8 leg — the two
     * serving axes have each been priced alone (probe width by the
-    * `servingNprobe` study and s21's p-rows; rerank depth by s21's d-rows)
+    * [[ServingNprobe]] study and s21's p-rows; rerank depth by s21's d-rows)
     * but never TOGETHER for this backend, and the shipped default
     * (p = 2, d = 50) is only justified if no cheaper grid cell matches it.
     * Nine cells (p ∈ {1,2,4} × d ∈ {10,50,200}) graded from ONE multi-probe
@@ -3643,9 +3557,9 @@ object Similarity {
     * byte frontier is the capacity-planning curve an index deploy sizes
     * k from.
     *
-    * MEASURED sampled-vs-full training delta (sf0.1, where the 1024
-    * sample truncates the 2000-vector corpus; see NOTES_r12.md): the
-    * sampled rows price the same frontier the full-corpus training did
+    * Sampled vs full training (at sf0.1 the 1024-vector sample truncates
+    * the 2000-vector corpus): the sampled rows price the same frontier
+    * the full-corpus training did
     * — the delta is the production trade stated with numbers, either
     * direction an acceptable answer.
     *
@@ -3659,8 +3573,8 @@ object Similarity {
     * skips it in BOTH engines, else the report would double-count one
     * cells key). */
   def s25_cell_sweep(s: SparkSession, dir: String): DataFrame =
-    s25SweepReport(s, dir) { (emb, cent, ex, _) =>
-      assignToNearest(emb, cent, ex).select(col("vec_id"), col("cluster"))
+    s25SweepReport(s, dir) { (emb, cent, _) =>
+      assignToNearest(emb, cent).select(col("vec_id"), col("cluster"))
     }
 
   /** The ONE s25 sweep body, shared by [[s25_cell_sweep]] and
@@ -3669,10 +3583,9 @@ object Similarity {
     * a future change to the scan/re-rank chain lands in both or neither
     * (two verbatim copies of one body drift apart; the twins stay separate
     * QUERIES so each oracle stays byte-stable).
-    * `assign(emb, centroids, ex, k)` must return (vec_id, cluster). */
+    * `assign(emb, centroids, k)` must return (vec_id, cluster). */
   private def s25SweepReport(s: SparkSession, dir: String)(
-      assign: (DataFrame, DataFrame, Boolean, Int) => DataFrame): DataFrame = {
-    val ex = exactDecimals(s)
+      assign: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
     val (cosines, truth5, top1) = sq8EvalGround(s, dir)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val m = semdedupSample(s)
@@ -3687,11 +3600,11 @@ object Similarity {
     val qq = qv.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("qvec").as("qq"))
     def sweepPoint(k: Int): (DataFrame, DataFrame) = {
-      val cent = trainCoarseOn(trainEmb, ex, k) // sampled training: O(m·k)
-      val asg = assign(emb, cent, ex, k)
+      val cent = trainCoarseOn(trainEmb, k) // sampled training: O(m·k)
+      val asg = assign(emb, cent, k)
       val route = routeNearest(emb.filter(col("vec_id") % 100 === 0)
           .select(col("vec_id").as("q_id"), col("embedding").as("qemb")),
-        col("qemb"), cent, 2, sqDist(_, _, ex)) // the serving width, literal
+        col("qemb"), cent, 2, sqDist) // the serving width, literal
         .select(col("q_id"), col("cluster"))
       val scored = qv.join(asg, Seq("vec_id"))
         .join(broadcast(route), Seq("cluster"))
@@ -3752,10 +3665,10 @@ object Similarity {
     * two-level route per point (c2-ann's chain, parameterized), so the
     * routed assignment is hash-checked, not trusted. */
   def s25_routed_sweep(s: SparkSession, dir: String): DataFrame =
-    s25SweepReport(s, dir) { (emb, cent, ex, k) =>
+    s25SweepReport(s, dir) { (emb, cent, k) =>
       // the one difference vs s25: ~N·2√k routed assignment, not N·k
       val g = math.max(2, math.floor(math.sqrt(k.toDouble)).toInt)
-      annAssign(emb, cent, ex, g, 1)
+      annAssign(emb, cent, g, 1)
         .select(col("vec_id"), col("cell").as("cluster"))
     }
 
@@ -4113,11 +4026,10 @@ object Similarity {
     * Scale shape: routing is a k-row broadcast; the cell scan is the cell
     * equi-join (the corpus never shuffles) scored by the codegen'd
     * `dot_i8`; the exact re-rank touches ≤ depth·|Q| raw rows (s13/s20's
-    * refine contract). Like s20, the int8 leg is oracle-exact on every
-    * precision path.
+    * refine contract). Like s20, the int8 leg is oracle-exact.
     *
     * Serving posture — BOTH axes decided by measurement:
-    * routing width = [[servingNprobe]] (default 2, the knob the PQ legs
+    * routing width = [[ServingNprobe]] (2, the width the PQ legs
     * priced; hardcoded single-cell routing read recall@5 0.12 vs 1.00 at
     * this leg's own gate), and the ROUTER is the
     * TRAINED coarse quantizer, not the label centroids it launched with:
@@ -4129,7 +4041,7 @@ object Similarity {
     * history that motivated the swap. Probe width multiplies the
     * per-query scanned codes (p·N/cells), never the corpus shuffle. */
   def s22_ivf_sq8(s: SparkSession, dir: String): DataFrame =
-    ivfSq8Served(s, dir, servingNprobe(s), sq8RerankDepth(s))
+    ivfSq8Served(s, dir, ServingNprobe, sq8RerankDepth(s))
 
   /** Query→cell routing at an explicit probe width: every query's
     * top-`probes` label-centroid cells by exact-decimal dot, with the
@@ -4138,7 +4050,7 @@ object Similarity {
     * pin s22's cell contract at any width. */
   private[graft] def ivfSq8Routes(s: SparkSession, dir: String,
                                   probes: Int): DataFrame = {
-    labelRoutes(s, dir, probes, exactDecimals(s)).select(col("q_id"), col("probe"), col("label"))
+    labelRoutes(s, dir, probes).select(col("q_id"), col("probe"), col("label"))
   }
 
   /** The multi-probe IVF×SQ8 scored relation over LABEL cells: every
@@ -4173,11 +4085,10 @@ object Similarity {
     * (in production the index IS this assignment, computed at ingest).
     * The int8 encode stays unstaged: it is cheap to recompute. */
   private[graft] def sq8TrainedAssign(s: SparkSession, dir: String): DataFrame = {
-    val ex = exactDecimals(s)
-    stage(s, ("sq8Asg", dir, ex))(
+    stage(s, ("sq8Asg", dir))(
       assignToNearest(
         Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
-        trainCoarse(s, dir, ex), ex)
+        trainCoarse(s, dir))
         .select(col("vec_id"), col("cluster"))
         .localCheckpoint())
   }
@@ -4188,10 +4099,9 @@ object Similarity {
     * construction. */
   private[graft] def ivfSq8TrainedRoutes(s: SparkSession, dir: String,
                                          probes: Int): DataFrame = {
-    val ex = exactDecimals(s)
     routeNearest(Tables.embeddings(s, dir).filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("q_id"), col("embedding").as("qemb")),
-      col("qemb"), trainCoarse(s, dir, ex), probes, sqDist(_, _, ex))
+      col("qemb"), trainCoarse(s, dir), probes, sqDist)
       .select(col("q_id"), col("probe"), col("cluster"))
   }
 
@@ -4221,10 +4131,9 @@ object Similarity {
     * gate for this posture. */
   private[graft] def ivfSq8Served(s: SparkSession, dir: String,
                                   probes: Int, depth: Int): DataFrame = {
-    val ex = exactDecimals(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
-              dot(col("embedding"), col("embedding"), ex).as("n2"))
+              dot(col("embedding"), col("embedding")).as("n2"))
     val q = emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"), col("n2").as("qn2"))
     val short = ivfSq8ScoredMpTrained(s, dir, probes)
@@ -4236,7 +4145,7 @@ object Similarity {
       .join(emb.select(col("vec_id"), col("embedding"), col("n2")), Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .withColumn("cosine",
-        round4(dot(col("embedding"), col("qemb"), ex) / sqrt(col("qn2") * col("n2"))))
+        round4(dot(col("embedding"), col("qemb")) / sqrt(col("qn2") * col("n2"))))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))).cast("long"))
       .filter(col("rank") <= 5)
@@ -4301,7 +4210,7 @@ object Similarity {
       |SELECT q_id, cell, n_id, iscore, cosine, rank FROM ranked
       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
 
-  def s22Sql: String = s22SqlAt(Sq8RerankDepthDefault, ServingNprobeDefault)
+  def s22Sql: String = s22SqlAt(Sq8RerankDepthDefault, ServingNprobe)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s25_cell_sweep" -> (s25_cell_sweep _),

@@ -1755,8 +1755,9 @@ object Streams {
     * router that s22 serves on, because its contract is bit-for-bit
     * equality with s3 (it shares `s3Sql`). The serving-posture online ANN
     * path is [[x38_stream_sq8_serve]], which routes on the trained cells at
-    * `servingNprobe` width. `StreamingSpec` ("one serving generation") pins
-    * both: x38 routes on s22's trained cells while x26 ≡ s3.
+    * the `Similarity.ServingNprobe` width. `StreamingSpec` ("one serving
+    * generation") pins both: x38 routes on s22's trained cells while
+    * x26 ≡ s3.
     *
     * The three scale decisions:
     *  1. ROUTING is a pure per-row expression: the per-label centroid
@@ -1775,7 +1776,7 @@ object Streams {
     *     million-row cell leaves exactly 3 rows of store state per query.
     *
     * Exactness: routing and scoring reuse the oracle's decimal folds
-    * (`Similarity.exactDot` against the byte-identical `labelCentroids`),
+    * (`Similarity.dot` against the byte-identical `labelCentroids`),
     * argmax ties break to the smaller label and top-k boundary ties to the
     * smaller vec_id — bit-for-bit s3's ranking; shares `s3Sql`. */
   def x26_stream_ann_topk(s: SparkSession, dir: String): DataFrame = {
@@ -1784,7 +1785,7 @@ object Streams {
         Similarity.labelCentroids(s, dir), "IVF routing table: one row per label")
       .map(r => (r.getInt(0).toLong, r.getSeq[Double](1))).toSeq
     val best = element_at(Similarity.nearest(col("qemb"), Similarity.centroidLit(cents), 1,
-      Similarity.negDot(ex = true)), 1)
+      Similarity.negDot), 1)
     val routed = embStream(s, dir)
       .filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
@@ -1796,7 +1797,7 @@ object Streams {
     val answers = routed.join(corpus, Seq("cell")) // stream-static, cell-pruned
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("cell"),
-              graft.queries.QUtil.round4(Similarity.exactDot(col("ne"), col("qemb"))).as("cosine"),
+              graft.queries.QUtil.round4(Similarity.dot(col("ne"), col("qemb"))).as("cosine"),
               col("n_id"))
       .groupBy(col("q_id"), col("cell"))
       .agg(topk(col("cosine"), col("n_id")).as("top"))
@@ -1843,7 +1844,7 @@ object Streams {
     * .s22SqlAt]] with the shortlist depth at corpus scale. */
   def x38_stream_sq8_serve(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.Similarity
-    val probes = Similarity.servingNprobe(s)
+    val probes = Similarity.ServingNprobe
     val cents = graft.plans.BroadcastContract.boundedCollect(
         Similarity.sq8TrainedCentroids(s, dir),
         "trained coarse router: k rows by construction")
@@ -1854,7 +1855,7 @@ object Streams {
       .head.getSeq[Double](0)
     val routeCells = transform(
       Similarity.nearest(col("qemb"), Similarity.centroidLit(cents), probes,
-        Similarity.sqDist(_, _, exact = true)), c => c.getField("cluster"))
+        Similarity.sqDist), c => c.getField("cluster"))
     // per-row int8 quantize against the frozen scales (the corpus
     // encoder's exact op sequence)
     val qq8 = zip_with(col("qemb"), typedlit(scales), (x, sc) =>
@@ -1869,17 +1870,17 @@ object Streams {
             Seq("vec_id"))
       .select(col("vec_id").as("n_id"), col("cluster"), col("qvec").as("nq"),
               col("embedding").as("ne"),
-              Similarity.exactDot(col("embedding"), col("embedding")).as("n2"))
+              Similarity.dot(col("embedding"), col("embedding")).as("n2"))
     val q = embStream(s, dir).filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qemb"))
       .withColumn("qq8", qq8)
-      .withColumn("qn2", Similarity.exactDot(col("qemb"), col("qemb")))
+      .withColumn("qn2", Similarity.dot(col("qemb"), col("qemb")))
       .withColumn("cluster", explode(routeCells))
     val scored = q.join(statics, Seq("cluster")) // stream-static, cell-pruned
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"),
         graft.queries.QUtil.round4(
-          Similarity.exactDot(col("ne"), col("qemb"))
+          Similarity.dot(col("ne"), col("qemb"))
             / sqrt(col("qn2") * col("n2"))).as("cosine"),
         col("n_id"), col("cluster"),
         graft.functions.dot_i8(col("nq"), col("qq8")).as("iscore"))
@@ -2517,7 +2518,7 @@ object Streams {
     * prove the ingest is exactly-once under kill/restart. */
   private[graft] def x34Encode(s: SparkSession, dir: String)(in: DataFrame): DataFrame = {
     import graft.queries.Similarity
-    val idxS = Similarity.ivfpqSettledIndex(s, dir, ex = true)
+    val idxS = Similarity.ivfpqSettledIndex(s, dir)
     val cents = graft.plans.BroadcastContract.boundedCollect(idxS.coarse,
         "frozen settled coarse quantizer: k rows by seeding")
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
@@ -2532,7 +2533,7 @@ object Streams {
       }
     def nearest1(v: Column, cs: Seq[(Long, Seq[Double])]): Column =
       element_at(Similarity.nearest(v, Similarity.centroidLit(cs), 1,
-        Similarity.sqDist(_, _, exact = true)), 1)
+        Similarity.sqDist), 1)
     val codesOf = (0 until 8).map { j =>
       val bestCode = nearest1(slice(col("res"), j * 8 + 1, 8), cbByJ(j))
       struct(lit(j.toLong).as("j"), bestCode.getField("cluster").as("c"))
@@ -3159,10 +3160,10 @@ object Streams {
     "x26_stream_ann_topk"      -> graft.queries.Similarity.s3Sql,
     // the online serve is the depth-∞ posture of s22's trained-router
     // form (see x38's scaladoc): the same CTE chain with the shortlist
-    // depth at corpus scale, probes pinned to the serving default
+    // depth at corpus scale, probes at the serving width
     "x38_stream_sq8_serve"     -> graft.queries.Similarity.s22SqlAt(
       graft.queries.Similarity.Sq8DepthUnbounded,
-      graft.queries.Similarity.ServingNprobeDefault),
+      graft.queries.Similarity.ServingNprobe),
     "x39_stream_release_admission" -> x39Sql,
     // c14's exact relation online — shared oracle (final-value fidelity)
     "x40_stream_quality_gate"  -> graft.queries.Pipeline.c14Sql,

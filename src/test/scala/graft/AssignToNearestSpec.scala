@@ -10,10 +10,9 @@ class AssignToNearestSpec extends SparkSpec {
     val emb = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
     val cents = Seq.empty[(Long, Seq[Double])].toDF("cluster", "cemb")
     // the p = 1 assignment and a p = 2 route both fail
-    for (ex <- Seq(true, false);
-         routed <- Seq(Similarity.assignToNearest(emb, cents, ex),
+    for (routed <- Seq(Similarity.assignToNearest(emb, cents),
                        Similarity.routeNearest(emb, emb("embedding"), cents, 2,
-                         Similarity.sqDist(_, _, ex)))) {
+                         Similarity.sqDist))) {
       val e = intercept[Exception](routed.collect())
       val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage)).toSeq

@@ -409,8 +409,8 @@ class CheckpointRestartSpec extends SparkSpec {
     }
     val base = Files.createTempDirectory("graft_x34_ckpt_").toString
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
-    val idxS = graft.queries.Similarity.ivfpqSettledIndex(spark, dir, ex = true)
-    val (_, _, codesD) = graft.queries.Similarity.s18DeltaFold(spark, dir, ex = true, idxS)
+    val idxS = graft.queries.Similarity.ivfpqSettledIndex(spark, dir)
+    val (_, _, codesD) = graft.queries.Similarity.s18DeltaFold(spark, dir, idxS)
     val expectedCodes: Set[Seq[Any]] = codesD
       .select(col("vec_id"), col("cell"), col("j"), col("c"))
       .collect().map(_.toSeq).toSet

@@ -12,11 +12,6 @@ class GraftExtensionsSpec extends SparkSpec {
       "SELECT dot_f32(array(CAST(1.5 AS FLOAT), CAST(2 AS FLOAT)), " +
         "array(CAST(2 AS FLOAT), CAST(0.5 AS FLOAT)))").head().getDouble(0)
     assert(d == 4.0)
-    // mixed float/double operands — the k-means iteration-2 shape
-    val sq = spark.sql(
-      "SELECT sq_dist(array(CAST(3 AS FLOAT), CAST(1 AS FLOAT)), " +
-        "array(CAST(1 AS DOUBLE), CAST(0 AS DOUBLE)))").head().getDouble(0)
-    assert(sq == 5.0)
     // morton interleave: x=3 (bits 0,1 -> even 0,2), y=3 (-> odd 1,3) = 15
     val z = spark.sql("SELECT interleave_bits(3L, 3L)").head().getLong(0)
     assert(z == 15L)

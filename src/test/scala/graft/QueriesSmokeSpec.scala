@@ -438,8 +438,8 @@ class QueriesSmokeSpec extends SparkSpec {
     // the write path's fidelity contract: per-row expression routing +
     // encoding against the frozen index must reproduce the batch delta
     // fold's argmin windows bit-for-bit (same folds, same tie-breaks)
-    val idxS = graft.queries.Similarity.ivfpqSettledIndex(spark, dir, ex = true)
-    val (_, _, codesD) = graft.queries.Similarity.s18DeltaFold(spark, dir, ex = true, idxS)
+    val idxS = graft.queries.Similarity.ivfpqSettledIndex(spark, dir)
+    val (_, _, codesD) = graft.queries.Similarity.s18DeltaFold(spark, dir, idxS)
     val batch = codesD.select(col("vec_id"), col("cell"), col("j"), col("c"))
       .collect().map(_.toSeq).toSet
     val online = graft.streaming.Streams.x34_stream_index_ingest(spark, dir)
@@ -501,7 +501,7 @@ class QueriesSmokeSpec extends SparkSpec {
       (l.toLong, Seq.tabulate(64)(i => math.sin((l % 150) * 64 + i))))
     def route(cents: Seq[(Long, Seq[Double])]) =
       element_at(Similarity.nearest(col("qemb"), Similarity.centroidLit(cents), 1,
-        Similarity.negDot(ex = true)), 1).getField("cluster")
+        Similarity.negDot), 1).getField("cluster")
     val small = mk(8); val big = mk(300)
     assert(treeSize(route(big)) == treeSize(route(small)),
       "routing tree must not grow with the label inventory")

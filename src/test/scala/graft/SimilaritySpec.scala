@@ -2,17 +2,16 @@ package graft
 
 import graft.queries.Similarity
 
-/** The `spark.graft.exactDecimals=false` production path (plain-double dot
-  * products, several-fold cheaper than the exact-decimal folds) must find
-  * the same near-duplicate pairs as the oracle-hashed exact path — the
-  * flag trades cross-engine bit-equality for speed, never results. */
+/** Similarity-search invariants beyond the oracle hashes: the native
+  * vector expressions against driver-side folds, the two-stage prefilter
+  * margins, centroid routing and its tie-break, the serving postures
+  * (s20/s22/s23/s25) and the IVF-PQ / SQ8 audit contracts. */
 class SimilaritySpec extends SparkSpec {
 
   test("native dot_f32 equals the ascending-index double fold bit-for-bit") {
-    // the fold baseline is computed in the DRIVER: the FuseDotProduct
-    // optimizer rule (installed on this session) rewrites the composed
-    // aggregate(zip_with(..)) spelling to dot_f32, so an in-engine fold
-    // would compare the expression against itself
+    // the fold baseline is computed in the DRIVER, outside any Spark
+    // expression, so the native loop is checked against an independent
+    // ascending-index double fold
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(org.apache.spark.sql.functions.col("vec_id"),
               org.apache.spark.sql.functions.col("embedding").as("a"))
@@ -34,127 +33,15 @@ class SimilaritySpec extends SparkSpec {
     assert(native.sorted.toSeq == expected.sorted.toSeq)
   }
 
-  test("FuseDotProduct rewrites the composed fold to the native expression") {
-    val df = Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(org.apache.spark.sql.functions.col("embedding").as("a"),
-              org.apache.spark.sql.functions.col("embedding").as("b"))
-      .selectExpr(
-        "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-          "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) AS dp")
-    val opt = df.queryExecution.optimizedPlan.toString
-    assert(opt.contains("dot_f32"), s"rewrite did not fire:\n$opt")
-    // the exact-decimal oracle spelling must NOT be rewritten
-    val dec = Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(org.apache.spark.sql.functions.col("embedding").as("a"),
-              org.apache.spark.sql.functions.col("embedding").as("b"))
-      .selectExpr(
-        "aggregate(zip_with(a, b, (x, y) -> CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) AS DECIMAL(30,20))), " +
-          "CAST(0 AS DECIMAL(30,20)), (acc, x) -> CAST(acc + x AS DECIMAL(30,20))) AS dp")
-    val decPlan = dec.queryExecution.optimizedPlan.toString
-    assert(!decPlan.contains("dot_f32"), s"decimal fold wrongly rewritten:\n$decPlan")
-    // rewritten result = driver-computed ascending fold (sample row)
-    val row = Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(org.apache.spark.sql.functions.col("embedding")).head()
-      .getAs[scala.collection.Seq[Float]](0)
-    var acc = 0.0
-    row.foreach(f => acc += f.toDouble * f.toDouble)
-    val got = df.head().getDouble(0)
-    assert(got == acc)
-  }
-
-  test("native sq_dist production path trains identical k-means centroids") {
-    val dir = "/root/testdata/sf0.001"
-    val key = "spark.graft.exactDecimals"
-    def train(): Seq[(Long, Long, Double)] =
-      Similarity.s4_kmeans_train(spark, dir).collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val exact = train()
-    spark.conf.set(key, "false")
-    try {
-      // per-dim means stay exact-decimal on both paths, so identical
-      // assignments must reproduce the exact path's centroids bit-for-bit
-      val fast = train()
-      assert(fast == exact)
-      assert(exact.nonEmpty)
-    } finally spark.conf.unset(key)
-  }
-
-  test("plain-double production path finds the same LSH near-dup pairs") {
-    val dir = "/root/testdata/sf0.001"
-    val key = "spark.graft.exactDecimals"
-    def pairs(): Map[(Long, Long), Double] = {
-      graft.queries.QUtil.clearStaged()
-      Similarity.s2_lsh_neardup(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    }
-    val exact = pairs()
-    spark.conf.set(key, "false")
-    try {
-      val fast = pairs()
-      assert(fast.keySet == exact.keySet,
-        s"pair sets diverge: only-exact=${exact.keySet -- fast.keySet}, " +
-          s"only-fast=${fast.keySet -- exact.keySet}")
-      val maxDiff = exact.map { case (k, v) => math.abs(fast(k) - v) }.max
-      assert(maxDiff <= 1e-4, s"cosine drift $maxDiff exceeds rounding width")
-      assert(exact.nonEmpty)
-    } finally {
-      spark.conf.unset(key)
-      graft.queries.QUtil.clearStaged()
-    }
-  }
-
-  test("production precision serves the same mined negatives and eval verdicts (s17_ivf, s19)") {
-    // the round-7 serving queries honor the exactDecimals switch through
-    // the shared dot/sqDist folds; at production precision the mined
-    // negative SET and the eval's per-system verdicts must agree with the
-    // exact path (rank tie-breaks sit on the same 1e-4 rounding grid the
-    // s2 agreement test pins)
-    val dir = "/root/testdata/sf0.001"
-    val key = "spark.graft.exactDecimals"
-    def mine(): Set[(Long, Long)] = {
-      graft.queries.QUtil.clearStaged()
-      Similarity.s17_hard_negatives_ivf(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(2))).toSet
-    }
-    def eval(): Seq[Seq[Any]] = {
-      graft.queries.QUtil.clearStaged()
-      Similarity.s19_retrieval_eval(spark, dir).collect().map(_.toSeq).toSeq
-    }
-    val (exactMine, exactEval) = (mine(), eval())
-    spark.conf.set(key, "false")
-    try {
-      assert(mine() == exactMine, "production-precision mining diverged")
-      assert(eval() == exactEval, "production-precision eval diverged")
-      assert(exactMine.nonEmpty && exactEval.nonEmpty)
-    } finally {
-      spark.conf.unset(key)
-      graft.queries.QUtil.clearStaged()
-    }
-  }
-
-  test("s20 serves identical rows on both precision paths (the int8 leg is path-free)") {
-    // the SQ8 shortlist is integer-exact on every path; only the re-rank
-    // cosine honors the switch, and its 1e-4 grid keeps ranks identical
-    val dir = "/root/testdata/sf0.001"
-    val key = "spark.graft.exactDecimals"
-    val exact = Similarity.s20_sq8_topk(spark, dir).collect().map(_.toSeq).toSeq
-    spark.conf.set(key, "false")
-    try {
-      val prod = Similarity.s20_sq8_topk(spark, dir).collect().map(_.toSeq).toSeq
-      assert(prod == exact, "production-precision SQ8 serving diverged")
-      assert(exact.nonEmpty)
-    } finally spark.conf.unset(key)
-  }
-
   test("s22 answers only from the probed cells and never beats the global SQ8 serve") {
     val dir = "/root/testdata/sf0.01"
     val s22 = Similarity.s22_ivf_sq8(spark, dir).collect()
     assert(s22.nonEmpty)
-    // cell contract at the shipped posture (round 11: TRAINED router at
-    // servingNprobe width — s24's measured decision): every neighbor's
-    // cell is among the query's top-servingNprobe trained cells, and the
+    // cell contract at the shipped posture (the TRAINED router at the
+    // ServingNprobe width — s24's measured decision): every neighbor's
+    // cell is among the query's top-ServingNprobe trained cells, and the
     // emitted `cell` column is the neighbor's own trained assignment
-    val probes = Similarity.servingNprobe(spark)
+    val probes = Similarity.ServingNprobe
     val routed = Similarity.ivfSq8TrainedRoutes(spark, dir, probes).collect()
       .groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
@@ -408,8 +295,8 @@ class SimilaritySpec extends SparkSpec {
     // cover exactly the settled ids (8 subspace codes each), the delta
     // fold emits exactly the delta ids, and the two are disjoint.
     val dir = "/root/testdata/sf0.001"
-    val idxS = Similarity.ivfpqSettledIndex(spark, dir, ex = true)
-    val (_, _, codesD) = Similarity.s18DeltaFold(spark, dir, ex = true, idxS)
+    val idxS = Similarity.ivfpqSettledIndex(spark, dir)
+    val (_, _, codesD) = Similarity.s18DeltaFold(spark, dir, idxS)
     val n = Tables.embeddings(spark, dir).count()
     val nDelta = Tables.embeddings(spark, dir)
       .filter(org.apache.spark.sql.functions.col("vec_id") % 10 === 0).count()
@@ -420,24 +307,6 @@ class SimilaritySpec extends SparkSpec {
     assert((settledIds ++ deltaIds).size.toLong == n, "merged codes do not cover the corpus")
     assert(idxS.codes.count() == (n - nDelta) * 8 && codesD.count() == nDelta * 8,
       "expected exactly 8 subspace codes per vector on each side")
-  }
-
-  test("native hyperplane_fp equals the composed per-bit double folds bit-for-bit") {
-    // the fused one-pass fingerprint must reproduce the composed
-    // aggregate(zip_with) double folds exactly — same plane arithmetic,
-    // same ascending accumulation — for every corpus vector and at both a
-    // narrow and a wide bit count (the s11BandBits knob range)
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    for (nbits <- Seq(16, 24)) {
-      val rows = emb.select(
-          call_function("hyperplane_fp", col("embedding"), lit(nbits)).as("native"),
-          Similarity.fingerprintBitsComposedDouble(col("embedding"), nbits).as("composed"))
-        .collect()
-      assert(rows.nonEmpty)
-      val bad = rows.filter(r => r.getLong(0) != r.getLong(1))
-      assert(bad.isEmpty, s"nbits=$nbits: ${bad.length} fingerprint mismatches")
-    }
   }
 
   test("kNN ranking shuffles stay narrow: no array payload feeds a window (s11 + sharded)") {
@@ -529,10 +398,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("assignToNearest zero-shuffle fold equals the brute-force argmin, ties to lower cluster") {
     // assignment and top-p routing are one per-row sort over the broadcast
-    // centroid array (Similarity.nearest); this pins both precision paths
-    // against an in-memory argmin and a driver-side sort by
-    // (dist, cluster), with duplicated centroid vectors forcing exact
-    // distance ties.
+    // centroid array (Similarity.nearest); this pins it against an
+    // in-memory argmin and a driver-side sort by (dist, cluster), with
+    // duplicated centroid vectors forcing exact distance ties.
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val emb = (0L until 60L).map(i => (i, Seq.fill(4)(rnd.nextInt(3).toDouble)))
@@ -543,32 +411,29 @@ class SimilaritySpec extends SparkSpec {
     def byDist(e: Seq[Double]): Seq[(Double, Long)] =
       cents.map { case (c, ce) => (e.zip(ce).map { case (x, y) => (x - y) * (x - y) }.sum, c) }
     val expected = emb.map { case (id, e) => id -> byDist(e).min._2 }.toMap
-    for (ex <- Seq(true, false)) {
-      val out = graft.queries.Similarity.assignToNearest(embDf, centDf, ex)
-      val rows = out.collect()
-      val got = rows.map(r => r.getLong(0) -> r.getLong(2)).toMap
-      assert(got == expected, s"ex=$ex")
-      // cemb must be the assigned cluster's centroid, input columns intact
-      assert(out.columns.toSeq == Seq("vec_id", "embedding", "cluster", "cemb"))
-      val cmap = cents.toMap
-      rows.foreach { r =>
-        assert(r.getAs[scala.collection.Seq[Double]]("cemb") == cmap(r.getLong(2)), s"ex=$ex cemb")
-        assert(r.getAs[scala.collection.Seq[Double]]("embedding") ==
-          emb(r.getLong(0).toInt)._2, s"ex=$ex embedding")
-      }
-      // top-p: probe i is the i-th entry of the (dist, cluster) sort
-      for (p <- Seq(1, 2, 5)) {
-        val got = Similarity.routeNearest(embDf, embDf("embedding"), centDf, p,
-            Similarity.sqDist(_, _, ex))
-          .collect().groupBy(_.getAs[Long]("vec_id")).map { case (id, rs) =>
-            id -> rs.map(r => r.getAs[Int]("probe") -> r.getAs[Long]("cluster")).sorted.toSeq
-          }
-        val want = emb.map { case (id, e) =>
-          id -> byDist(e).sorted.take(p).map(_._2).zipWithIndex
-            .map { case (c, i) => (i + 1) -> c }
-        }.toMap
-        assert(got == want, s"ex=$ex p=$p")
-      }
+    val out = graft.queries.Similarity.assignToNearest(embDf, centDf)
+    val rows = out.collect()
+    val got = rows.map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(got == expected)
+    // cemb must be the assigned cluster's centroid, input columns intact
+    assert(out.columns.toSeq == Seq("vec_id", "embedding", "cluster", "cemb"))
+    val cmap = cents.toMap
+    rows.foreach { r =>
+      assert(r.getAs[scala.collection.Seq[Double]]("cemb") == cmap(r.getLong(2)), "cemb")
+      assert(r.getAs[scala.collection.Seq[Double]]("embedding") ==
+        emb(r.getLong(0).toInt)._2, "embedding")
+    }
+    // top-p: probe i is the i-th entry of the (dist, cluster) sort
+    for (p <- Seq(1, 2, 5)) {
+      val got = Similarity.routeNearest(embDf, embDf("embedding"), centDf, p, Similarity.sqDist)
+        .collect().groupBy(_.getAs[Long]("vec_id")).map { case (id, rs) =>
+          id -> rs.map(r => r.getAs[Int]("probe") -> r.getAs[Long]("cluster")).sorted.toSeq
+        }
+      val want = emb.map { case (id, e) =>
+        id -> byDist(e).sorted.take(p).map(_._2).zipWithIndex
+          .map { case (c, i) => (i + 1) -> c }
+      }.toMap
+      assert(got == want, s"p=$p")
     }
   }
 

@@ -669,7 +669,7 @@ class StreamingSpec extends SparkSpec {
     // the online scan reads raw f32 + norms alongside the int8 codes
     // (~5/4 of float32 bytes per candidate vs the batch serve's 1/4);
     // candidate COUNT stays cell-pruned at p·N/k.
-    val batch = S.ivfSq8Served(spark, dir, S.servingNprobe(spark), S.Sq8DepthUnbounded)
+    val batch = S.ivfSq8Served(spark, dir, S.ServingNprobe, S.Sq8DepthUnbounded)
       .collect().map(_.toSeq).toSeq
     assert(online.nonEmpty)
     assert(online == batch,
